@@ -10,6 +10,12 @@ import org.apache.spark.sql.types.StructType
   * [[graft.llm.Retrieval.appendToLexIndex]], and serving stays
   * [[graft.llm.Retrieval.searchLexIndex]] — readers never coordinate
   * with the ingest (append-only store, latest-wins resolution).
+  * Searches serve from a resolved snapshot keyed by the store's
+  * data-file listing: every appended batch adds new files, so the
+  * next search after it sees a changed listing and resolves afresh,
+  * and a snapshot reads exactly the files it was keyed by — a batch
+  * landing mid-resolve is picked up by the following search, never
+  * missed and never half-read.
   *
   * Delivery semantics: the latest-wins layout makes DUPLICATE batch
   * delivery harmless by construction — a re-delivered batch appends

@@ -344,4 +344,52 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"),
       s"all-pairs join:\n${p.take(2000)}")
   }
+
+  test("a repeated lexical-index search scans the cached snapshot, not " +
+       "the parquet store; after an append it reads the new files") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import spark.implicits._
+    object H extends AdaptiveSparkPlanHelper
+    val path = s"/tmp/graft_test_lexplan_${ProcessHandle.current().pid()}"
+    val q = Seq((100L, "alpha"), (101L, "gamma beta")).toDF("doc_id", "text")
+    def search(): SparkPlan = {
+      val df: DataFrame = graft.llm.Retrieval.searchLexIndex(spark, path, q,
+        "doc_id", "text", dfCeilingShare = 1)
+      df.collect()
+      df.queryExecution.executedPlan
+    }
+    // every data file a plan reads, through the cached relations too
+    def filesRead(p: SparkPlan): Set[String] = H.collect(p) {
+      case f: FileSourceScanExec =>
+        f.relation.location.inputFiles.map(new org.apache.hadoop.fs.Path(_).getName).toSet
+      case m: InMemoryTableScanExec => filesRead(m.relation.cachedPlan)
+    }.flatten.toSet
+    def stored(): Set[String] = Seq("postings", "doclen").flatMap { t =>
+      new java.io.File(s"$path/$t").listFiles().map(_.getName)
+        .filter(n => n.endsWith(".parquet"))
+    }.toSet
+    graft.llm.Retrieval.buildLexIndex(Seq((1L, "alpha beta"),
+      (2L, "gamma delta"), (3L, "alpha gamma")).toDF("doc_id", "text"),
+      "doc_id", "text", path)
+    search()
+    val p = search()
+    val storeScans = H.collect(p) {
+      case f: FileSourceScanExec if f.relation.location.rootPaths
+          .exists(r => r.toString.contains("/postings") || r.toString.contains("/doclen")) => f
+    }
+    assert(storeScans.isEmpty, s"repeated search scans the store:\n$p")
+    assert(H.collect(p) { case m: InMemoryTableScanExec => m }.nonEmpty,
+      s"repeated search does not scan the cached snapshot:\n$p")
+    assert(filesRead(p) == stored())
+    graft.llm.Retrieval.appendToLexIndex(spark, path,
+      Seq((1L, "delta zeta"), (4L, "beta zeta")).toDF("doc_id", "text"),
+      "doc_id", "text")
+    val before = filesRead(p)
+    val after = filesRead(search())
+    assert(after == stored() && after != before,
+      s"after the append the snapshot reads $after, the store holds ${stored()}")
+  }
 }

@@ -183,6 +183,99 @@ class RetrievalSpec extends SparkSpec {
       direct.sortBy(r => (r._1, r._2)).toSeq)
   }
 
+  private type Ranked = Seq[(Long, Int, Long, Long)]
+  private def sorted(df: org.apache.spark.sql.DataFrame): Ranked =
+    df.as[(Long, Int, Long, Long)].collect()
+      .sortBy(r => (r._1, r._2)).toSeq
+  private def served(path: String,
+                     q: org.apache.spark.sql.DataFrame): Ranked =
+    sorted(Retrieval.searchLexIndex(spark, path, q, "doc_id", "text",
+      k = 10, dfCeilingShare = 2))
+  private def direct(docs: Map[Long, String],
+                     q: org.apache.spark.sql.DataFrame): Ranked =
+    sorted(Retrieval.bm25TopK(docs.toSeq.toDF("doc_id", "text"),
+      "doc_id", "text", q, "doc_id", "text", k = 10, dfCeilingShare = 2))
+
+  test("lexical index snapshot: an append, a cache sweep and a build " +
+       "overwrite at the same path are each seen by the next search") {
+    val path =
+      s"/tmp/graft_test_lexsnap_${ProcessHandle.current().pid()}"
+    val q = Seq((100L, "alpha"), (101L, "epsilon beta"))
+      .toDF("doc_id", "text")
+    val base = Map(1L -> "alpha beta pad1", 2L -> "gamma delta pad2",
+      3L -> "alpha gamma pad3", 4L -> "delta beta pad4")
+    Retrieval.buildLexIndex(base.toSeq.toDF("doc_id", "text"), "doc_id",
+      "text", path)
+    val first = served(path, q)
+    assert(first == direct(base, q))
+    // search → append → search returns the new state
+    val batch = Map(1L -> "epsilon beta pad1", 9L -> "alpha zeta pad9")
+    Retrieval.appendToLexIndex(spark, path,
+      batch.toSeq.toDF("doc_id", "text"), "doc_id", "text")
+    val appended = served(path, q)
+    assert(appended != first, "the append was not seen")
+    assert(appended == direct(base ++ batch, q))
+    // search → sweep → search: identical rows (the snapshot
+    // recomputes from its listed files instead of losing data)
+    graft.Sessions.sweep(spark)
+    assert(served(path, q) == appended)
+    assert(served(path, q) == appended)
+    // a build overwrite at the same path replaces every file
+    val rebuilt = Map(5L -> "epsilon alpha pad5", 6L -> "beta pad6",
+      7L -> "gamma pad7", 8L -> "delta pad8")
+    Retrieval.buildLexIndex(rebuilt.toSeq.toDF("doc_id", "text"),
+      "doc_id", "text", path)
+    assert(served(path, q) == direct(rebuilt, q))
+  }
+
+  test("lexical index snapshot: five requests between each of three " +
+       "appends each equal bm25TopK over the logical corpus") {
+    val path =
+      s"/tmp/graft_test_lexreq_${ProcessHandle.current().pid()}"
+    var logical = (1L to 8L).map(i => i -> s"w${i % 3} w${i % 5} pad$i").toMap
+    Retrieval.buildLexIndex(logical.toSeq.toDF("doc_id", "text"),
+      "doc_id", "text", path)
+    val requests = Seq("w0", "w1 w2", "w3 w4 nosuch", "w2 w0", "w4")
+      .zipWithIndex.map { case (t, i) =>
+        Seq((100L + i, t), (200L + i, s"w${i % 5}")).toDF("doc_id", "text")
+      }
+    (1 to 3).foreach { round =>
+      val got = requests.map(served(path, _))
+      assert(got.exists(_.nonEmpty), s"round $round matched nothing")
+      requests.zip(got).foreach { case (q, g) =>
+        assert(g == direct(logical, q),
+          s"round $round, request ${q.collect().toSeq}")
+      }
+      // re-ingest two docs with new text and add two new ones
+      val batch = Seq(round.toLong -> s"w4 w4 fresh$round",
+        (round + 4).toLong -> s"w1 fresh$round",
+        (10L * round + 10) -> s"w0 w3 new$round",
+        (10L * round + 11) -> s"w2 new$round").toMap
+      Retrieval.appendToLexIndex(spark, path,
+        batch.toSeq.toDF("doc_id", "text"), "doc_id", "text")
+      logical = logical ++ batch
+    }
+    requests.foreach(q => assert(served(path, q) == direct(logical, q)))
+  }
+
+  test("an index built from an empty frame is version 0, serves " +
+       "nothing, and takes a no-version append") {
+    val path =
+      s"/tmp/graft_test_lexempty_${ProcessHandle.current().pid()}"
+    Retrieval.buildLexIndex(Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      "doc_id", "text", path)
+    assert(Retrieval.currentLexVersion(spark, path) == 0L)
+    val q = Seq((100L, "alpha"), (101L, "zeta")).toDF("doc_id", "text")
+    assert(served(path, q).isEmpty)
+    val batch = Map(1L -> "alpha beta pad1", 2L -> "gamma pad2",
+      3L -> "zeta gamma pad3")
+    Retrieval.appendToLexIndex(spark, path,
+      batch.toSeq.toDF("doc_id", "text"), "doc_id", "text")
+    assert(Retrieval.currentLexVersion(spark, path) == 1L)
+    val got = served(path, q)
+    assert(got.nonEmpty && got == direct(batch, q), s"got $got")
+  }
+
   test("hybrid fusion surfaces docs that neither retriever alone " +
        "ranks first (the reason RRF exists)") {
     // lexical likes d1 then d3; dense likes d2 then d3 — d3, second

@@ -68,4 +68,27 @@ class LexIndexStreamSpec extends SparkSpec {
     assert(vers == Seq(0L, 1L, 2L), s"stored versions $vers")
     assert(graft.llm.Retrieval.currentLexVersion(spark, s"$root/idx") == 2L)
   }
+
+  test("streamed ingest into an index built from an empty frame " +
+       "starts at version 1 and serves the wave") {
+    val root =
+      s"/tmp/graft_test_lexstream_empty_${ProcessHandle.current().pid()}"
+    val wave = Seq((1L, "alpha beta"), (2L, "gamma alpha"),
+      (3L, "delta pad")).toDF("doc_id", "text")
+    graft.llm.Retrieval.buildLexIndex(wave.limit(0), "doc_id", "text",
+      s"$root/idx")
+    wave.coalesce(1).write.mode("append").parquet(s"$root/waves")
+    val n = LexIndexStream.ingest(spark, s"$root/waves", wave.schema,
+      "doc_id", "text", s"$root/idx", s"$root/ckpt")
+    assert(n == 1, s"expected 1 micro-batch, got $n")
+    assert(graft.llm.Retrieval.currentLexVersion(spark, s"$root/idx") == 1L)
+    val q = Seq((100L, "alpha delta")).toDF("doc_id", "text")
+    val served = graft.llm.Retrieval.searchLexIndex(spark, s"$root/idx",
+        q, "doc_id", "text", dfCeilingShare = 1)
+      .as[(Long, Int, Long, Long)].collect().toSeq
+    val direct = graft.llm.Retrieval.bm25TopK(wave, "doc_id", "text", q,
+        "doc_id", "text", dfCeilingShare = 1)
+      .as[(Long, Int, Long, Long)].collect().toSeq
+    assert(served.nonEmpty && served.sortBy(_._2) == direct.sortBy(_._2))
+  }
 }
