@@ -1,6 +1,9 @@
 package graft
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main. Prints ONE JSON line (the last stdout line) with
   * per-query wall-clock at `SPARK_GRAFT_SF_DIR`.
@@ -18,29 +21,79 @@ import java.nio.file.{Files, Paths}
   *    so log interleaving can never corrupt the parse.
   */
 object Bench {
-  private def force(df: DataFrame): Unit =
-    df.write.mode("overwrite").format("noop").save()
+  /** The smallest testdata snapshot: warm-up passes run every code
+    * path (scan→plan→codegen→action) at negligible data cost.
+    */
+  private[graft] val WarmDir = "/root/testdata/sf0.001"
+
+  /** One measurement, the loop every harness in the repo shares:
+    * sweep cached blocks and persistent RDDs except `keep` (by default
+    * the memoized shared inputs, [[SparkEntry.protectedRddIds]]) so
+    * one query's leftovers never evict the next one's working set,
+    * GC so warm-run garbage is not billed to this run, then time a
+    * `noop` write. `df` is by-name: queries with eager stages
+    * (iterative fixpoints, writes) do real work while the DataFrame is
+    * constructed, and the timer covers construction + action. Returns
+    * the wall seconds and the failure message, if any.
+    */
+  private[graft] def timed(spark: SparkSession,
+                           keep: Int => Boolean = SparkEntry.protectedRddIds)
+                          (df: => DataFrame): (Double, Option[String]) = {
+    Sessions.sweep(spark, keep)
+    System.gc()
+    val t0 = System.nanoTime()
+    val err =
+      try { df.write.mode("overwrite").format("noop").save(); None }
+      catch { case e: Throwable =>
+        Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
+    ((System.nanoTime() - t0) / 1e9, err)
+  }
+
+  /** Records every completed stage of `sc` (registered on
+    * construction). `clear()` before a measurement, `snapshot()` after
+    * it: listener events are posted asynchronously, so the snapshot
+    * first waits for the bus to drain.
+    */
+  private[graft] final class StageLog(sc: SparkContext) extends SparkListener {
+    private val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    sc.addSparkListener(this)
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      stages.add(e.stageInfo)
+    def clear(): Unit = stages.clear()
+    def snapshot(): Seq[StageInfo] = {
+      Thread.sleep(500)
+      stages.asScala.toSeq
+    }
+
+    /** The faster of two [[timed]] runs with its stage shape: (seconds,
+      * stages, tasks, heavy single-task stages). One task doing > 2 s of
+      * executor work is the scale red flag — work parallelism should
+      * have spread. Min-of-2 because single-shot local timings vary
+      * several-fold with GC/JIT phase. Throws if a run fails.
+      */
+    def minOf2(spark: SparkSession)(df: => DataFrame): (Double, Int, Int, Int) =
+      (1 to 2).map { _ =>
+        clear()
+        val (sec, err) = timed(spark)(df)
+        err.foreach(e => throw new RuntimeException(e))
+        val ss = snapshot()
+        (sec, ss.length, ss.map(_.numTasks).sum,
+          ss.count(i => i.numTasks == 1 && i.taskMetrics.executorRunTime > 2000))
+      }.minBy(_._1)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = Sessions.tune(Sessions.builder(cpus, "graft-bench").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.tool("graft-bench")
 
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
 
-    // Warm-up at the smallest SF: exercises the full code path of every
-    // query (scan→plan→codegen→action) at negligible data cost.
-    val warmDir = "/root/testdata/sf0.001"
     queries.foreach { case (name, fn) =>
       // warm-up failures stay excluded from timing but must be VISIBLE:
       // a query that only breaks at warm-up SF would otherwise go
       // unnoticed until the measured pass
-      try force(fn(spark, warmDir)) catch {
-        case e: Throwable => System.err.println(
-          s"[bench] warm-up failed for $name: " +
-            Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-      }
+      timed(spark)(fn(spark, WarmDir))._2.foreach(e =>
+        System.err.println(s"[bench] warm-up failed for $name: $e"))
     }
 
     // Shared memoized inputs are materialized COLD, once, before the
@@ -49,20 +102,13 @@ object Bench {
     // (rep 1 of the first consumer pays it, rep 2 hits the memo and
     // wins the min) and flagged the consumers as "noisy". Single-shot
     // by construction — a second rep would time the memo lookup.
-    // full unprotected sweep first: when sfDir == the warm-up dir
+    // full unprotected sweep first: when sfDir == WarmDir
     // (the sf0.001 snapshot) the warm-up pass already built the memos,
     // and a warm `_shared` line would time a lookup, not the build
     Sessions.sweep(spark)
     val sharedResults = SparkEntry.sharedInputs.toSeq.sortBy(_._1)
       .map { case (name, fn) =>
-        Sessions.sweep(spark, SparkEntry.protectedRddIds)
-        System.gc()
-        val t0 = System.nanoTime()
-        val err: Option[String] =
-          try { force(fn(spark, sfDir)); None }
-          catch { case e: Throwable =>
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
-        val sec = (System.nanoTime() - t0) / 1e9
+        val (sec, err) = timed(spark)(fn(spark, sfDir))
         (name, sec, sec, err)
       }
 
@@ -73,23 +119,12 @@ object Bench {
     // is reported as such ("reps"/"stat" fields).
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     val queryResults = queries.map { case (name, fn) =>
-      def rep(): (Double, Option[String]) = {
-        // fresh-session semantics per measurement: operators that cache
-        // intermediates (similarity signatures, CV folds) must not leave
-        // blocks behind to evict later queries' working set. The RDD
-        // sweep matters for spark.ml (ALS persists internal RDDs that
-        // catalog.clearCache does not see).
-        // shared sweep: drops everything EXCEPT the memoized shared ANN
-        // corpus (see SparkEntry.protectedRddIds / Sessions.sweep)
-        Sessions.sweep(spark, SparkEntry.protectedRddIds)
-        System.gc()
-        val t0 = System.nanoTime()
-        val err: Option[String] =
-          try { force(fn(spark, sfDir)); None }
-          catch { case e: Throwable =>
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
-        ((System.nanoTime() - t0) / 1e9, err)
-      }
+      // fresh-session semantics per measurement: operators that cache
+      // intermediates (similarity signatures, CV folds) must not leave
+      // blocks behind to evict later queries' working set. The RDD
+      // sweep matters for spark.ml (ALS persists internal RDDs that
+      // catalog.clearCache does not see).
+      def rep(): (Double, Option[String]) = timed(spark)(fn(spark, sfDir))
       val runs0 = (1 to reps).map(_ => rep())
       val ok0 = runs0.collect { case (s, None) => s }
       // isolate-before-concluding (the q192 lesson): a >3× spread over

@@ -71,6 +71,15 @@ object Sessions {
   def defaultCpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
 
+  /** Session for Bench and the `graft.tools` mains: [[defaultCpus]]
+    * cores, tuned, ERROR logging (their own output is the report).
+    */
+  def tool(appName: String): SparkSession = {
+    val spark = tune(builder(defaultCpus, appName).getOrCreate())
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
   /** Apply the engine's standard SQL conf to an externally-built
     * session (e.g. the driver-owned ones in Verify/Bench).
     * `nanosAsLong` is a static conf in some Spark versions, so Verify/

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.functions.Det
 import graft.llm.{Bpe, CorpusPipeline, Dedup, LangModel, Multimodal, Packing, Sampling, Similarity, TextAnalysis, WordPiece}
@@ -78,19 +81,22 @@ object SparkEntry {
       })
     }
 
-  // --- memoized shared ANN input -----------------------------------
+  // --- memoized shared inputs --------------------------------------
   // q47/q57/q124/q125/q167/q168 all start from the same normalized
   // embeddings corpus (and q124/q125/q167/q168 from the same perturbed
   // copy); re-reading + re-normalizing it per query cost ~4 redundant
-  // input preps per bench/Verify run. The memo holds the
-  // Similarity.prepareUnit checkpoint per (SparkContext, dir, tag) and
-  // SELF-HEALS: entries record the RDD ids their localCheckpoint
-  // created, and an entry whose blocks were swept (Sessions.sweep by a
-  // harness that doesn't pass `keep`) is rebuilt instead of reused —
-  // a truncated-lineage checkpoint cannot recompute itself.
+  // input preps per bench/Verify run. The memo holds one value (a
+  // checkpointed frame, or a frame pair built together) per
+  // (SparkContext, dir, tag) and SELF-HEALS: entries record the ids
+  // of the RDDs their build persisted and the value reads (see
+  // [[planRdds]]), and an entry whose blocks were swept
+  // (Sessions.sweep by a harness that doesn't pass `keep`) is rebuilt
+  // instead of reused — a truncated-lineage checkpoint cannot
+  // recompute itself. Entries of stopped contexts are dropped on every
+  // call, with their ids: a later context's RDD with the same id must
+  // not be exempt from its sweeps.
   private val unitMemo =
-    scala.collection.concurrent.TrieMap
-      .empty[(Int, String, String), (DataFrame, Set[Int])]
+    scala.collection.mutable.Map.empty[(SparkContext, String, String), (Any, Set[Int])]
   private val memoIds =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
@@ -100,21 +106,41 @@ object SparkEntry {
     */
   private[graft] def protectedRddIds(id: Int): Boolean = memoIds.contains(id)
 
-  private def memoUnit(s: SparkSession, dir: String, tag: String)
-                      (build: => DataFrame): DataFrame = synchronized {
-    val key = (System.identityHashCode(s.sparkContext), dir, tag)
+  /** Ids of the RDDs a memoized value's frames read, with their
+    * lineage (a checkpoint ends it). A build's transient checkpoints
+    * are persisted too, but only until the GC collects them; recording
+    * one would make the entry go stale (and retrain) at the next
+    * collection.
+    */
+  private def planRdds(v: Any): Set[Int] = {
+    def lineage(r: RDD[_]): Seq[Int] = r.id +: r.dependencies.flatMap(d => lineage(d.rdd))
+    v match {
+      case df: Dataset[_] =>
+        df.queryExecution.logical.collect { case r: LogicalRDD => lineage(r.rdd) }.flatten.toSet
+      case p: Product => p.productIterator.flatMap(planRdds).toSet
+      case _ => Set.empty
+    }
+  }
+
+  private def memoUnit[A](s: SparkSession, dir: String, tag: String)
+                         (build: => A): A = synchronized {
+    unitMemo.filterInPlace { case ((sc, _, _), (_, ids)) =>
+      if (sc.isStopped) ids.foreach(memoIds.remove(_))
+      !sc.isStopped
+    }
+    val sc = s.sparkContext
+    val key = (sc, dir, tag)
     unitMemo.get(key) match {
-      case Some((df, ids))
-        if ids.subsetOf(s.sparkContext.getPersistentRDDs.keySet) => df
+      case Some((v, ids)) if ids.subsetOf(sc.getPersistentRDDs.keySet) =>
+        v.asInstanceOf[A]
       case stale =>
         stale.foreach { case (_, ids) => ids.foreach(memoIds.remove(_)) }
-        val before = s.sparkContext.getPersistentRDDs.keySet
-        val df = build
-        val ids: Set[Int] =
-          (s.sparkContext.getPersistentRDDs.keySet -- before).toSet
+        val before = sc.getPersistentRDDs.keySet
+        val v = build
+        val ids = (sc.getPersistentRDDs.keySet -- before).toSet intersect planRdds(v)
         ids.foreach(memoIds.add(_))
-        unitMemo.put(key, (df, ids))
-        df
+        unitMemo.put(key, (v, ids))
+        v
     }
   }
 
@@ -188,35 +214,28 @@ object SparkEntry {
 
   /** 8-merge BPE training over `documents`, memoized per (JVM, dir)
     * like [[nearDupPairs]]: q177 emits the rule table, q179 consumes
-    * the trained vocabulary — training runs once, not twice. Both
-    * frames' checkpoints self-heal through [[memoUnit]]'s id check
-    * (the rules frame rides the words entry: built together, swept
-    * together).
+    * the trained vocabulary — training runs once, not twice. The
+    * (rules, words) pair is ONE memo entry: built together, swept
+    * together, self-healing through [[memoUnit]]'s id check.
     */
-  private val bpeRules =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-  private def bpeWords(s: SparkSession, dir: String): DataFrame =
-    memoUnit(s, dir, "bpe8") {
-      val (rules, words) = Bpe.trainShared(t(s, dir, "documents"), "text", 8)
-      bpeRules.put((System.identityHashCode(s.sparkContext), dir), rules)
-      words
-    }
+  private def bpe8(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    memoUnit(s, dir, "bpe8")(Bpe.trainShared(t(s, dir, "documents"), "text", 8))
+  private def bpeMerges(s: SparkSession, dir: String): DataFrame = bpe8(s, dir)._1
+  private def bpeWords(s: SparkSession, dir: String): DataFrame = bpe8(s, dir)._2
+
   /** 8-merge BPE training restricted to the `doc_id % 4 = 0` SLICE of
     * `documents` — the training half of the q191 cross-corpus encode
     * gate (the encoder scores the DISJOINT complement, glued into
-    * words the training never saw). Memoized like [[bpeWords]]; the
-    * rules frame rides the words entry.
+    * words the training never saw). Memoized like [[bpe8]].
     */
-  private val bpeSliceRules =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
+  private def bpe8slice(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    memoUnit(s, dir, "bpe8slice")(Bpe.trainShared(
+      t(s, dir, "documents").filter(pmod(col("doc_id"), lit(4)) === 0),
+      "text", 8))
+  private def bpeSliceMerges(s: SparkSession, dir: String): DataFrame =
+    bpe8slice(s, dir)._1
   private def bpeSliceWords(s: SparkSession, dir: String): DataFrame =
-    memoUnit(s, dir, "bpe8slice") {
-      val (rules, words) = Bpe.trainShared(
-        t(s, dir, "documents").filter(pmod(col("doc_id"), lit(4)) === 0),
-        "text", 8)
-      bpeSliceRules.put((System.identityHashCode(s.sparkContext), dir), rules)
-      words
-    }
+    bpe8slice(s, dir)._2
 
   /** The byte-level BPE fixture: `documents` with a per-doc UNICODE
     * tail word (cycled by doc_id mod 8 — accents, CJK, emoji, Cyrillic,
@@ -431,43 +450,27 @@ object SparkEntry {
       |           ON o.query_id = e.query_id AND o.doc_id = e.doc_id)""".stripMargin
 
   /** 8-merge BYTE-level BPE training over the unicode fixture's
-    * doc_id % 4 = 0 slice — memoized like [[bpeSliceWords]] (the rules
-    * frame rides the words entry).
+    * doc_id % 4 = 0 slice — memoized like [[bpe8slice]]; consumers
+    * read only the rules, the words frame is the `_shared` line.
     */
-  private val bpeBytesRules =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-  private def bpeBytesWords(s: SparkSession, dir: String): DataFrame =
-    memoUnit(s, dir, "bpebytes8") {
-      val (rules, words) = Bpe.trainSharedBytes(
-        unicodeDocs(s, dir).filter(pmod(col("doc_id"), lit(4)) === 0),
-        "text", 8)
-      bpeBytesRules.put((System.identityHashCode(s.sparkContext), dir), rules)
-      words
-    }
-  private def bpeBytesMerges(s: SparkSession, dir: String): DataFrame = {
-    bpeBytesWords(s, dir) // ensure trained (and rebuilt if swept)
-    bpeBytesRules((System.identityHashCode(s.sparkContext), dir))
-  }
+  private def bpeBytes8(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    memoUnit(s, dir, "bpebytes8")(Bpe.trainSharedBytes(
+      unicodeDocs(s, dir).filter(pmod(col("doc_id"), lit(4)) === 0),
+      "text", 8))
+  private def bpeBytesMerges(s: SparkSession, dir: String): DataFrame =
+    bpeBytes8(s, dir)._1
 
   /** 8-merge WORDPIECE training over the unicode fixture's
-    * doc_id % 4 = 0 slice — the BERT-family twin of [[bpeBytesWords]],
+    * doc_id % 4 = 0 slice — the BERT-family twin of [[bpeBytes8]],
     * trained on the same slice so q224/q225's UNK face contrasts
     * byte-BPE's structural-zero OOV on the identical eval complement.
     */
-  private val wpRules =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-  private def wpWords(s: SparkSession, dir: String): DataFrame =
-    memoUnit(s, dir, "wp8") {
-      val (rules, words) = WordPiece.trainShared(
-        unicodeDocs(s, dir).filter(pmod(col("doc_id"), lit(4)) === 0),
-        "text", 8)
-      wpRules.put((System.identityHashCode(s.sparkContext), dir), rules)
-      words
-    }
-  private def wpMerges(s: SparkSession, dir: String): DataFrame = {
-    wpWords(s, dir) // ensure trained (and rebuilt if swept)
-    wpRules((System.identityHashCode(s.sparkContext), dir))
-  }
+  private def wp8(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    memoUnit(s, dir, "wp8")(WordPiece.trainShared(
+      unicodeDocs(s, dir).filter(pmod(col("doc_id"), lit(4)) === 0),
+      "text", 8))
+  private def wpMerges(s: SparkSession, dir: String): DataFrame = wp8(s, dir)._1
+  private def wpWords(s: SparkSession, dir: String): DataFrame = wp8(s, dir)._2
 
   /** The UNIGRAM-LM (SentencePiece) model over the unicode fixture's
     * doc_id % 4 = 0 slice — the THIRD tokenizer family, trained on the
@@ -515,11 +518,6 @@ object SparkEntry {
       "i -> struct_pack(i := i, w := t[i]))) AS u " +
       "FROM (SELECT doc_id, string_split(text, ' ') AS t " +
       "FROM documents WHERE doc_id % 4 <> 0))"
-  private def bpeSliceMerges(s: SparkSession, dir: String): DataFrame = {
-    bpeSliceWords(s, dir) // ensure trained (and rebuilt if swept)
-    bpeSliceRules((System.identityHashCode(s.sparkContext), dir))
-  }
-
   /** The q191/q194 EVAL corpus: the doc_id%4≠0 complement of the
     * training slice with adjacent token pairs GLUED into single words
     * the training never saw (seen sub-words, unseen words — the case
@@ -569,11 +567,6 @@ object SparkEntry {
       "FROM (SELECT doc_id, [x FOR x IN string_split(text, ' ') IF x <> ''] AS t " +
       "FROM documents WHERE doc_id % 4 <> 0)))"
 
-  private def bpeMerges(s: SparkSession, dir: String): DataFrame = {
-    bpeWords(s, dir) // ensure trained (and rebuilt if swept)
-    bpeRules((System.identityHashCode(s.sparkContext), dir))
-  }
-
   /** Shared memoized inputs, exposed so Bench bills each one's FIRST
     * cost as its own `_shared:*` line: with stat=min over reps a
     * memoized input's training/prep cost is otherwise attributed to NO
@@ -592,7 +585,7 @@ object SparkEntry {
       "_shared:neardup-pairs" -> ((s, dir) => nearDupPairs(s, dir)),
       "_shared:bpe8" -> ((s, dir) => bpeWords(s, dir)),
       "_shared:bpe8slice" -> ((s, dir) => bpeSliceWords(s, dir)),
-      "_shared:bpebytes8" -> ((s, dir) => bpeBytesWords(s, dir)),
+      "_shared:bpebytes8" -> ((s, dir) => bpeBytes8(s, dir)._2),
       "_shared:wp8" -> ((s, dir) => wpWords(s, dir)),
       "_shared:copurchase-edges" -> ((s, dir) => copurchaseEdges(s, dir)),
       "_shared:curation-store" -> ((s, dir) =>

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *  - pure-column ops ([[binaryMeta]], [[frameSlices]]) — codegen'd
   *    binary functions, fused into the scan;
   *  - batched per-partition decode ([[decodeFramesStub]],
-  *    [[resampleStub]]) — `mapPartitions` over the typed Dataset, the
+  *    [[resampleAudio]]) — `mapPartitions` over the typed Dataset, the
   *    Scala analog of PySpark's `mapInPandas`: one iterator per
   *    partition, schema declared by the case class Encoder, no
   *    per-row JVM↔UDF boundary.
@@ -19,11 +19,11 @@ import org.apache.spark.sql.functions._
   * codecs (`javax.imageio`: PNG/BMP/GIF/JPEG; `javax.sound.sampled`:
   * WAV/AIFF/AU), used by [[decodeImages]] / [[audioFeatures]] /
   * [[decodeVideoFrames]] (a hand-walked RIFF tree over MJPEG-in-AVI)
-  * with poison-payload tolerance. [[decodeFramesStub]] /
-  * [[resampleStub]] remain deliberate stubs only for the exotic-
-  * container case: codecs the JDK lacks (H.264, modern audio), where
-  * a real impl means javacv/ffmpeg at the marked site — the plumbing
-  * (schema, partitioning, batch shape, byte access) is real either way.
+  * with poison-payload tolerance. [[decodeFramesStub]] remains a
+  * deliberate stub only for the exotic-container case: codecs the
+  * JDK lacks (H.264, modern audio), where a real impl means
+  * javacv/ffmpeg at the marked site — the plumbing (schema,
+  * partitioning, batch shape, byte access) is real either way.
   */
 object Multimodal {
 
@@ -102,27 +102,6 @@ object Multimodal {
           }
         }
       }
-  }
-
-  /** Byte-stride subsample — RETIRED seam. Audio resampling is now
-    * REAL ([[resampleAudio]]: decoded 16-bit PCM, linear
-    * interpolation, WAV write-back); this stub remains only as the
-    * extension point for payloads whose codec the JVM lacks entirely
-    * (same status as [[decodeFramesStub]] for H.264-class video).
-    */
-  @deprecated("use resampleAudio — real PCM resampling over the same batch seam", "round 7")
-  def resampleStub(df: DataFrame, idCol: String, binCol: String,
-                   factor: Int)
-                  (implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(binCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          (id, bytes.zipWithIndex.collect { case (b, i) if i % factor == 0 => b })
-        }
-      }
-      .toDF(idCol, "resampled")
   }
 
   /** Typed resample record: per-clip stats plus the re-encoded WAV

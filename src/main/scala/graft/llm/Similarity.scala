@@ -237,9 +237,10 @@ object Similarity {
 
   /** Occupancy term of the LSH auto-sizing: bits ≈ log2(n/16) keeps
     * ~16 vectors per bucket at any corpus size. Exposed package-private
-    * so the probes ([[graft.tools.LshProbe]]) attribute with the SAME
-    * formula the production path runs (a hand-copied formula
-    * desynchronizes silently — round-11 ADVICE).
+    * so SimilaritySpec pins the SAME formula the production path runs
+    * (a hand-copied formula desynchronizes silently — round-11 ADVICE;
+    * the LshProbe tool that attributed with it has been removed; its
+    * source is last at commit `aa5b464`).
     */
   private[graft] def lshOccBits(n: Double): Int =
     math.max(8, math.min(20,
@@ -492,8 +493,9 @@ object Similarity {
     // (the same trap the IVF verify's fused scan removed; the
     // round-11 sf10 profile put the two SMJs at 61 + 446 CPU-s).
     // Hash-building the n-row corpus side streams the candidates
-    // unsorted (tools/LshVerifyProbe: both joins ≈ 2.5 s wall for
-    // 17.7M candidates at sf10; the remaining stage cost is the
+    // unsorted (measured with the since-removed LshVerifyProbe tool,
+    // source last at commit `aa5b464`: both joins ≈ 2.5 s wall for 17.7M
+    // candidates at sf10; the remaining stage cost is the
     // candidate-volume dot + round + top-k window itself).
     val cos = cands
       .join(vecs.toDF("id_a", "_va", "_na").hint("shuffle_hash"), Seq("id_a"))
@@ -721,14 +723,11 @@ object Similarity {
     * ≥ [[vecTaskRows]] rows per task, clamped to the session's
     * parallelism — so small frames get few fat tasks and at scale the
     * clamp restores full width. Scale-adaptive by construction, not a
-    * local-core tuning: the knob is rows, the default a measured
+    * local-core tuning: the unit is rows, the value a measured
     * amortization floor (~1k 64-dim rows ≈ 0.1–1 s of vector CPU vs
     * the ~10–400 ms per-task overhead band).
     */
-  private def vecTaskRows: Long =
-    sys.props.get("graft.vec.rowsPerTask")
-      .orElse(sys.env.get("SPARK_GRAFT_VEC_ROWS_PER_TASK"))
-      .map(_.toLong).getOrElse(1024L)
+  private val vecTaskRows = 1024L
   private def vecPar(spark: SparkSession, n: Long): Int =
     math.min(spark.sparkContext.defaultParallelism.toLong,
       math.max(1L, (n + vecTaskRows - 1) / vecTaskRows)).toInt

@@ -161,8 +161,10 @@ object Graph {
     // MORE per-round CPU + GC here than re-exchanging row blocks
     // (interpreted decimal pipeline over cache batches vs codegen over
     // shuffle rows) — measured q142 23.5 s → 38 s. Row checkpoint +
-    // one 73 MiB/round exchange wins at every SF tested.
-    val annotated = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+    // one 73 MiB/round exchange wins at every SF tested; a round-15
+    // re-probe of the persisted list lost again, 1.05–1.20× in every
+    // arm (plans/r15/graphbench_edgecache_probe.txt).
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(wCol).cast("long").as("w"))
       .repartition(col("src"))
       // wout via a src-partitioned window ON the frame being
@@ -173,20 +175,7 @@ object Graph {
       // the bench charged back)
       .withColumn("wout", sum(col("w")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-    // `graft.graph.edgeCache` (round-15 probe toggle, default OFF):
-    // persist() instead of localCheckpoint() — the InMemoryRelation
-    // carries HashPartitioning(src) into the rounds, so the per-round
-    // |E| exchange disappears from the plan above the broadcast bound.
-    // GraphBench's `shufcache` arm measures it against the checkpoint
-    // + exchange shape; see the round-14/15 notes for why the cache's
-    // scan CPU has so far lost to the exchange at every SF tested.
-    val e =
-      if (sys.props.get("graft.graph.edgeCache").contains("true")) {
-        val c = annotated.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        c.count()
-        c
-      } else annotated.localCheckpoint()
+      .localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .localCheckpoint()

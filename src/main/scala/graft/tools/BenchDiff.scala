@@ -1,6 +1,7 @@
 package graft.tools
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.{Bench, Sessions, SparkEntry}
 
 /** Noise-disciplined comparison of two Bench snapshot JSONs — the
   * round-over-round diff codified (round-11 task 4), so regressions
@@ -136,39 +137,11 @@ object BenchDiff {
             |""".stripMargin)
       case Some(dir) =>
         println(s"\nISOLATED RE-RUN (min-of-2 after warm-up, $dir):")
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-        val spark =
-          graft.Sessions.tune(graft.Sessions.builder(cpus, "graft-benchdiff")
-            .getOrCreate())
-        spark.sparkContext.setLogLevel("ERROR")
-        val stages =
-          new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onStageCompleted(
-                sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-                : Unit =
-              stages.add((sc.stageInfo.numTasks,
-                sc.stageInfo.taskMetrics.executorRunTime))
-          })
+        val spark = Sessions.tool("graft-benchdiff")
+        val stages = new Bench.StageLog(spark.sparkContext)
         flagged.foreach { d =>
-          graft.SparkEntry.queries(d.q)(spark, dir)
-            .write.mode("overwrite").format("noop").save() // warm-up
-          val runs = (1 to 2).map { _ =>
-            graft.Sessions.sweep(spark, graft.SparkEntry.protectedRddIds)
-            System.gc()
-            stages.clear()
-            val t0 = System.nanoTime()
-            graft.SparkEntry.queries(d.q)(spark, dir)
-              .write.mode("overwrite").format("noop").save()
-            val sec = (System.nanoTime() - t0) / 1e9
-            Thread.sleep(300)
-            val ss = java.util.List.copyOf(stages)
-              .toArray(Array.empty[(Int, Long)])
-            (sec, ss.length, ss.map(_._1).sum,
-              ss.count(s => s._1 == 1 && s._2 > 2000))
-          }
-          val best = runs.minBy(_._1)
+          Bench.timed(spark)(SparkEntry.queries(d.q)(spark, dir)) // warm-up
+          val best = stages.minOf2(spark)(SparkEntry.queries(d.q)(spark, dir))
           // does the isolated wall land within band of the FASTER of
           // the two snapshot numbers? For a regression that means the
           // old (fast) number is reproducible -> the slowdown was

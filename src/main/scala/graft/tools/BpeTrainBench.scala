@@ -25,9 +25,8 @@ object BpeTrainBench {
   def main(args: Array[String]): Unit = {
     val nWords = args.headOption.map(_.toInt).getOrElse(200000)
     val nMerges = args.drop(1).headOption.map(_.toInt).getOrElse(32768)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val spark = Sessions.tune(Sessions.builder(cpus, "graft-bpe-bench").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.tool("graft-bpe-bench")
+    val cpus = Sessions.defaultCpus
     import spark.implicits._
 
     val rng = new scala.util.Random(42)

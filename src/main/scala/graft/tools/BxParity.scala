@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.{Sessions}
+import graft.Sessions
 import graft.ml.{Als, BxFixture, Eval}
 import graft.operators.{Cleaning, IdMapping, Splits}
 
@@ -13,9 +13,7 @@ import graft.operators.{Cleaning, IdMapping, Splits}
   */
 object BxParity {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = Sessions.tune(Sessions.builder(cpus, "bx-parity").getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.tool("bx-parity")
 
     // optional overrides: mu sdUser sdItem sdNoise
     val mu = args.lift(0).map(_.toDouble).getOrElse(BxFixture.Mu)

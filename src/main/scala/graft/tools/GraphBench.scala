@@ -1,9 +1,9 @@
 package graft.tools
 
-import graft.Sessions
+import graft.{Bench, Sessions}
 import graft.operators.Graph
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Same-JVM A/B of the graph family's per-round join strategy
@@ -17,18 +17,10 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.tools.GraphBench <sfDir> [reps-per-arm]
   */
 object GraphBench {
-  private def force(df: => DataFrame): Double = {
-    val t0 = System.nanoTime()
-    df.write.mode("overwrite").format("noop").save()
-    (System.nanoTime() - t0) / 1e9
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = if (args.length > 1 && args(1) != "explain") args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Sessions.tune(Sessions.builder(cpus, "graft-graphbench").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.tool("graft-graphbench")
 
     // q142/q217's shared co-purchase edge frame (the SparkEntry build)
     val li = Tables.load(spark, sfDir, "lineitem")
@@ -77,31 +69,28 @@ object GraphBench {
       return
     }
 
-    // third arm (round-15, VERDICT item 2 probe): SHUFFLE_HASH rounds
-    // over a PERSISTED edge frame — HashPartitioning(src) survives the
-    // cache, so the per-round |E| exchange vanishes; the question is
-    // whether the columnar-cache scan beats the exchange it replaces
-    val arms = Seq("shuffle" -> ("0", "false"),
-      "bcast" -> ("100000000", "false"),
-      "shufcache" -> ("0", "true"))
+    // the checkpointed inputs above are protected from the sweeps:
+    // truncated lineage means unpersisting them is data loss, not a
+    // recompute. Everything a run leaves behind (per-round rank
+    // checkpoints) is swept before the next one.
+    val inputs = spark.sparkContext.getPersistentRDDs.keySet
+    def force(q: () => DataFrame): Double = {
+      val (s, err) = Bench.timed(spark, inputs)(q())
+      err.foreach(e => throw new RuntimeException(e))
+      s
+    }
+    val arms = Seq("shuffle" -> "0", "bcast" -> "100000000")
     val queries = Seq("pagerank" -> (() => pr()), "ppr" -> (() => ppr()),
       "hits" -> (() => hits()))
-    def setArm(v: (String, String)): Unit = {
-      System.setProperty("graft.graph.bcastNodes", v._1)
-      System.setProperty("graft.graph.edgeCache", v._2)
-    }
     // warm all arms once
-    for ((_, v) <- arms; (_, q) <- queries) { setArm(v); force(q()) }
+    for ((_, v) <- arms; (_, q) <- queries) {
+      System.setProperty("graft.graph.bcastNodes", v); force(q)
+    }
     val acc = scala.collection.mutable.Map
       .empty[(String, String), List[Double]].withDefaultValue(Nil)
     for (r <- 1 to reps; (arm, v) <- arms; (name, q) <- queries) {
-      setArm(v)
-      // NO Sessions.sweep here: it would unpersist the checkpointed
-      // edge inputs (truncated lineage = data loss, not recompute);
-      // the per-round rank checkpoints each run leaves behind are
-      // bounded (node-sized) and shared by both arms
-      System.gc()
-      val s = force(q())
+      System.setProperty("graft.graph.bcastNodes", v)
+      val s = force(q)
       acc((name, arm)) = s :: acc((name, arm))
       println(f"GRAPHBENCH rep=$r arm=$arm $name%-8s $s%6.2f s")
     }
@@ -111,8 +100,7 @@ object GraphBench {
         (xs.head, xs(xs.size / 2))
       }
       val (minS, medS) = stat("shuffle"); val (minB, medB) = stat("bcast")
-      val (minC, medC) = stat("shufcache")
-      println(f"GRAPHBENCH SUMMARY $name%-8s shuffle min=$minS%5.2f med=$medS%5.2f | bcast min=$minB%5.2f med=$medB%5.2f | shufcache min=$minC%5.2f med=$medC%5.2f | bcast/shuffle ${minB / minS}%4.2f | cache/shuffle ${minC / minS}%4.2f")
+      println(f"GRAPHBENCH SUMMARY $name%-8s shuffle min=$minS%5.2f med=$medS%5.2f | bcast min=$minB%5.2f med=$medB%5.2f | bcast/shuffle ${minB / minS}%4.2f")
     }
     spark.stop()
   }

@@ -23,9 +23,7 @@ import org.apache.spark.sql.functions._
 object OpPlan {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = Sessions.tune(Sessions.builder(cpus, "graft-opplan").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.tool("graft-opplan")
 
     val docs = Tables.load(spark, sfDir, "documents")
     val train = docs.filter(pmod(col("doc_id"), lit(4)) === 0)

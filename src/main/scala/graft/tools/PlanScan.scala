@@ -17,9 +17,7 @@ object PlanScan {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val prefix = if (args.length > 1) args(1) else ""
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = Sessions.tune(Sessions.builder(cpus, "graft-planscan").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.tool("graft-planscan")
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(_._1.startsWith(prefix))
     qs.foreach { case (name, fn) =>

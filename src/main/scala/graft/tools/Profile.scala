@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.{Sessions, SparkEntry}
+import graft.{Bench, Sessions, SparkEntry}
 
 /** Dev profiler: time named queries / print plans at a given SF.
   * Usage: runMain graft.tools.Profile <sfDir> <queryName> [explain]
@@ -11,48 +10,9 @@ object Profile {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val explain = args.length > 2 && args(2) == "explain"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val spark = Sessions.tune(Sessions.builder(cpus, "graft-profile").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-    // by-name: queries with eager stages (iterative fixpoints, writes)
-    // do real work while the DataFrame is CONSTRUCTED — the timer must
-    // cover construction + action, same as Bench
-    def force(df: => DataFrame): Long = {
-      val t0 = System.nanoTime()
-      df.write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1000000
-    }
+    val spark = Sessions.tool("graft-profile")
     // stage-level metrics: duration + GC per stage of the measured run
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val d = for {s <- i.submissionTime; e <- i.completionTime} yield e - s
-          stages.add(f"  stage ${i.stageId}%4d ${d.getOrElse(-1L)}%7dms " +
-            f"tasks=${i.numTasks}%3d gc=${i.taskMetrics.jvmGCTime}%6dms " +
-            f"cpu=${i.taskMetrics.executorCpuTime / 1000000}%7dms " +
-            f"run=${i.taskMetrics.executorRunTime}%7dms " +
-            f"in=${i.taskMetrics.inputMetrics.recordsRead}%10d " +
-            f"sh=${i.taskMetrics.shuffleReadMetrics.recordsRead}%10d " +
-            f"${i.name.takeWhile(_ != '\n').take(60)}")
-          // heavy stages get their graft-frame callsites — the generic
-          // lambda in `name` never identifies the operator
-          if ((i.numTasks == 1 && i.taskMetrics.executorRunTime > 1500) ||
-              i.taskMetrics.executorRunTime > 30000)
-            stages.add(i.details.split("\n").filter(_.contains("graft"))
-              .take(4).mkString("        ", "\n        ", ""))
-        }
-      })
-    // same pre-measurement hygiene as Bench: stray cached blocks and
-    // warm-run garbage otherwise bill their GC to the measured run
-    def sweep(): Unit = {
-      // shared sweep: drops everything EXCEPT the memoized shared ANN
-      // corpus (see SparkEntry.protectedRddIds / Sessions.sweep)
-      graft.Sessions.sweep(spark, graft.SparkEntry.protectedRddIds)
-      System.gc()
-    }
+    val stages = new Bench.StageLog(spark.sparkContext)
     // per-operator output-row SQL metrics of the FINAL frame's executed
     // plan (SPARK_GRAFT_ROWMETRICS=1): the row volumes that never cross
     // a stage boundary — e.g. the ANN candidate join feeding its
@@ -93,24 +53,30 @@ object Profile {
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       if (explain) fn(spark, sfDir).explain("formatted")
-      val warm = force(fn(spark, "/root/testdata/sf0.001"))
-      sweep()
+      def ms(run: (Double, Option[String])): String =
+        s"${(run._1 * 1000).toLong}ms" + run._2.fold("")(e => s" FAILED: $e")
+      val warm = ms(Bench.timed(spark)(fn(spark, Bench.WarmDir)))
       stages.clear()
-      if (sys.env.contains("SPARK_GRAFT_ROWMETRICS")) {
-        val df = fn(spark, sfDir)
-        val t0 = System.nanoTime()
-        df.write.mode("overwrite").format("noop").save()
-        val t = (System.nanoTime() - t0) / 1000000
-        println(s"PROFILE $n warm=${warm}ms sf=${t}ms")
-        rowMetrics()
-      } else {
-        val t = force(fn(spark, sfDir))
-        println(s"PROFILE $n warm=${warm}ms sf=${t}ms")
-      }
-      if (sys.env.contains("SPARK_GRAFT_STAGES")) {
-        Thread.sleep(500)
-        stages.forEach(s => println(s))
-      }
+      val t = ms(Bench.timed(spark)(fn(spark, sfDir)))
+      println(s"PROFILE $n warm=$warm sf=$t")
+      if (sys.env.contains("SPARK_GRAFT_ROWMETRICS")) rowMetrics()
+      if (sys.env.contains("SPARK_GRAFT_STAGES"))
+        stages.snapshot().foreach { i =>
+          val d = for {s <- i.submissionTime; e <- i.completionTime} yield e - s
+          println(f"  stage ${i.stageId}%4d ${d.getOrElse(-1L)}%7dms " +
+            f"tasks=${i.numTasks}%3d gc=${i.taskMetrics.jvmGCTime}%6dms " +
+            f"cpu=${i.taskMetrics.executorCpuTime / 1000000}%7dms " +
+            f"run=${i.taskMetrics.executorRunTime}%7dms " +
+            f"in=${i.taskMetrics.inputMetrics.recordsRead}%10d " +
+            f"sh=${i.taskMetrics.shuffleReadMetrics.recordsRead}%10d " +
+            f"${i.name.takeWhile(_ != '\n').take(60)}")
+          // heavy stages get their graft-frame callsites — the generic
+          // lambda in `name` never identifies the operator
+          if ((i.numTasks == 1 && i.taskMetrics.executorRunTime > 1500) ||
+              i.taskMetrics.executorRunTime > 30000)
+            println(i.details.split("\n").filter(_.contains("graft"))
+              .take(4).mkString("        ", "\n        ", ""))
+        }
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Sessions, SparkEntry}
+import graft.{Bench, Sessions, SparkEntry}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -223,8 +223,6 @@ object ScaleSmoke {
     make("documents") { (d, i) => saltDocs(d, i) }
   }
 
-  final case class StageStat(tasks: Int, runMs: Long, name: String)
-
   def main(args: Array[String]): Unit = {
     // default mode measures sf0.1 → sf1 (10×); "sf10" as the first arg
     // measures the ANN decade sf1 → sf10 (100× sf0.1, embeddings only);
@@ -242,9 +240,7 @@ object ScaleSmoke {
       case "graph" => (Sf1g, Sf10g, "sf1g", "sf10g")
       case _       => (Sf01, Sf1, "sf0.1", "sf1")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val spark = Sessions.tune(Sessions.builder(cpus, "graft-scale").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.tool("graft-scale")
     if (mode == "graph") {
       // the sf10g edge shuffle is ~335M rows; at partitions = cpus
       // (the suite default, sized for sf0.1) that is ~21M rows per
@@ -260,42 +256,9 @@ object ScaleSmoke {
       if (mode == "sf10") genSf10(spark)
     }
 
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageStat]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          stages.add(StageStat(i.numTasks, i.taskMetrics.executorRunTime,
-            i.name.takeWhile(_ != '\n')))
-        }
-      })
-
-    def sweep(): Unit = {
-      // shared sweep: drops everything EXCEPT the memoized shared ANN
-      // corpus (see SparkEntry.protectedRddIds / Sessions.sweep)
-      graft.Sessions.sweep(spark, graft.SparkEntry.protectedRddIds)
-      System.gc()
-    }
-    // min over 2 reps, the bench lesson: single-shot local timings vary
-    // several-fold with GC/JIT phase (a 10× growth factor can otherwise
-    // be pure noise). Stage stats come from the faster rep.
-    def measure(q: String, dir: String): (Double, Int, Int, Int) = {
-      val runs = (1 to 2).map { _ =>
-        sweep(); stages.clear()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(q)(spark, dir)
-          .write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // listener drain
-        val ss = java.util.List.copyOf(stages).toArray(Array.empty[StageStat])
-        // a "heavy single-task stage" is the 100 TB red flag: one thread
-        // doing >2 s of executor work that parallelism should have spread
-        val heavy1 = ss.count(s => s.tasks == 1 && s.runMs > 2000)
-        (sec, ss.length, ss.map(_.tasks).sum, heavy1)
-      }
-      runs.minBy(_._1)
-    }
+    val stages = new Bench.StageLog(spark.sparkContext)
+    def measure(q: String, dir: String): (Double, Int, Int, Int) =
+      stages.minOf2(spark)(SparkEntry.queries(q)(spark, dir))
 
     // Cold-JVM absorber: the FIRST measured query otherwise pays class
     // loading, codegen-compiler and shuffle-path warm-up that later
@@ -305,16 +268,12 @@ object ScaleSmoke {
     // heat the heavy paths; one throwaway run of the first query at
     // the measured FROM scale is, and nothing from it is timed.
     queries.headOption.foreach { q =>
-      SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
-        .write.mode("overwrite").format("noop").save()
-      sweep()
-      SparkEntry.queries(q)(spark, fromDir)
-        .write.mode("overwrite").format("noop").save()
+      Bench.timed(spark)(SparkEntry.queries(q)(spark, Bench.WarmDir))
+      Bench.timed(spark)(SparkEntry.queries(q)(spark, fromDir))
     }
 
     val rows = queries.map { q =>
-      SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
-        .write.mode("overwrite").format("noop").save() // JIT warm-up
+      Bench.timed(spark)(SparkEntry.queries(q)(spark, Bench.WarmDir)) // JIT warm-up
       val (s01, st01, tk01, h01) = measure(q, fromDir)
       val (s1, st1, tk1, h1) = measure(q, toDir)
       val row = f"| $q | ${s01}%.1f | ${s1}%.1f | ${s1 / s01}%.1f× | $st01/$st1 | $tk01/$tk1 | $h01/$h1 |"
@@ -325,7 +284,7 @@ object ScaleSmoke {
     // no stripMargin: the table rows begin with '|', which stripMargin
     // would eat as its margin marker
     val md =
-      s"# SCALE — 10× smoke ($fromLabel → synthetic $toLabel, local[$cpus])\n\n" +
+      s"# SCALE — 10× smoke ($fromLabel → synthetic $toLabel, local[${Sessions.defaultCpus}])\n\n" +
         s"$toLabel = 10× $fromLabel via replicate+salt (see `tools/ScaleSmoke.scala`\n" +
         "for the salting contract that keeps pair density linear).\n" +
         "min-of-2 measured runs per scale after a warm-up pass; same\n" +

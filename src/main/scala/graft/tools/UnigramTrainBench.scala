@@ -43,10 +43,8 @@ object UnigramTrainBench {
     val seedMulti = args.lift(1).map(_.toInt).getOrElse(65536)
     val keepMulti = args.lift(2).map(_.toInt).getOrElse(32768)
     val maxPieceLen = args.lift(3).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val spark = Sessions.tune(
-      Sessions.builder(cpus, "graft-unigram-bench").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.tool("graft-unigram-bench")
+    val cpus = Sessions.defaultCpus
     import spark.implicits._
 
     val rng = new scala.util.Random(42)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.LogicalRDD
+
 /** Guards the driver's smoke contract: `SparkEntry.entry` must return
   * rows on the sf0.001 testdata, and every `queries` key must have
   * either an `oracleSql` entry or a documented rows-only gate — a
@@ -35,6 +37,43 @@ class EntrySpec extends SparkSpec {
       assert(os.contains(companion),
         s"rows-only $q names companion $companion which has no oracle")
     }
+  }
+
+  test("a memoized rules pair survives protected sweeps and is rebuilt together") {
+    def rows(q: String): Seq[String] =
+      SparkEntry.queries(q)(spark, Bench.WarmDir).collect().map(_.toString).sorted.toSeq
+    def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // the harness step between measurements
+    def protectedSweep(): Unit = {
+      Sessions.sweep(spark, SparkEntry.protectedRddIds)
+      System.gc()
+    }
+    // the RDDs the bpe8 entry reads: its words checkpoint (the rules
+    // are driver-built)
+    def entryRdds(): Set[Int] =
+      SparkEntry.sharedInputs("_shared:bpe8")(spark, Bench.WarmDir)
+        .queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    Sessions.sweep(spark)
+    // q177 reads the entry's rules, q179 its words
+    val merges = rows("q177_bpe_merges")
+    val tokens = rows("q179_bpe_tokenize")
+    protectedSweep()
+    val kept = persisted()
+    // exactly what the entry reads is protected; the training's
+    // transient checkpoints are swept
+    assert(kept.nonEmpty && kept == entryRdds())
+    assert(rows("q177_bpe_merges") == merges && rows("q179_bpe_tokenize") == tokens)
+    protectedSweep()
+    assert(persisted() == kept, "a memo hit must not retrain")
+
+    Sessions.sweep(spark)
+    assert(rows("q177_bpe_merges") == merges)
+    protectedSweep()
+    val rebuilt = persisted()
+    assert(rebuilt.nonEmpty && rebuilt == entryRdds() && (rebuilt intersect kept).isEmpty)
+    assert(rows("q179_bpe_tokenize") == tokens)
+    protectedSweep()
+    assert(persisted() == rebuilt, "the words frame is rebuilt with the rules, not after")
   }
 
   test("README query counts match SparkEntry (no hand-count drift)") {

@@ -269,14 +269,6 @@ class TextMultimodalSpec extends SparkSpec {
       java.util.Arrays.equals(res(1L).wav, res(2L).wav))
   }
 
-  test("resampleStub strides the payload deterministically") {
-    implicit val s = spark
-    val bin = Seq((1L, Array.tabulate(10)(_.toByte))).toDF("doc_id", "b")
-    val out = Multimodal.resampleStub(bin, "doc_id", "b", factor = 3)
-      .as[(Long, Array[Byte])].head()
-    assert(out._2.toSeq == Seq[Byte](0, 3, 6, 9))
-  }
-
   test("topBigrams counts overlapping pairs and skips sub-2-token docs") {
     val d = Seq(
       (1L, "a b a b"),   // "a b" ×2, "b a" ×1
