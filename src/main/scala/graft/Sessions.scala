@@ -15,6 +15,15 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** AQE coalescing targets, pinned at Spark's own defaults so the
+    * local bench stays comparable. CPU-dense small-byte stages
+    * (tokenizer assemblies, the sampled-unigram pick) coalesce to one
+    * task under them because their bytes undercount their CPU; a
+    * cluster run sizes both to its data.
+    */
+  private val AdvisoryPartitionBytes = "64MB"
+  private val MinPartitionSize = "1MB"
+
   /** Shared builder: every engine session (tests, Verify, Bench,
     * Profile) goes through here so the static confs that CANNOT be
     * applied after construction — `nanosAsLong` (nanosecond parquet),
@@ -36,19 +45,8 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // scale-adaptive AQE coalescing (round-15, carried item): CPU-
-      // dense small-byte stages (tokenizer assemblies, the sampled-
-      // unigram pick) coalesce to ONE task under the byte-driven
-      // defaults because their bytes undercount their CPU. A cluster
-      // run sizes these to its data (e.g. advisory = input-bytes /
-      // desired-tasks; minPartitionSize down to let such stages fan
-      // out); the LOCAL defaults are Spark's own, so the driver's
-      // bench stays comparable — these are parameterization seams,
-      // not local-mode tuning.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY_BYTES", "64MB"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1MB"))
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", AdvisoryPartitionBytes)
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", MinPartitionSize)
       .config("spark.sql.session.timeZone", "UTC")
       // NOTE: the objectHashAggregate sort-fallback threshold is NOT
       // raised here anymore. Round 9 set it session-globally to 4 Mi
@@ -72,29 +70,11 @@ object Sessions {
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4)
 
   /** Session for Bench and the `graft.tools` mains: [[defaultCpus]]
-    * cores, tuned, ERROR logging (their own output is the report).
+    * cores, ERROR logging (their own output is the report).
     */
   def tool(appName: String): SparkSession = {
-    val spark = tune(builder(defaultCpus, appName).getOrCreate())
+    val spark = builder(defaultCpus, appName).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
-
-  /** Apply the engine's standard SQL conf to an externally-built
-    * session (e.g. the driver-owned ones in Verify/Bench).
-    * `nanosAsLong` is a static conf in some Spark versions, so Verify/
-    * Bench must ALSO set it at builder time; setting it here is for
-    * sessions we don't construct (it is runtime-settable in 4.1).
-    */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY_BYTES", "64MB"))
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "1MB"))
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark
   }
 

@@ -9,8 +9,7 @@ object Verify {
     // optional 3rd arg: comma-separated query subset (local iteration
     // aid; the driver always passes exactly 2 args → full run)
     val only = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = Sessions.tune(Sessions.builder(cpus, "graft-verify").getOrCreate())
+    val spark = Sessions.builder(Sessions.defaultCpus, "graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -449,8 +449,6 @@ object Dedup {
       labels = jumped.select(col("_id"), col("_lbl"))
       converged = changed == 0
       i += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $i changed=$changed t=${System.nanoTime() / 1000000}")
     }
     // isolated docs: never touched by an edge → cluster = self. The
     // anti-join scans the checkpointed pair blocks; the union stays

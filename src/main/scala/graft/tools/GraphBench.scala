@@ -22,7 +22,7 @@ object GraphBench {
     val reps = if (args.length > 1 && args(1) != "explain") args(1).toInt else 3
     val spark = Sessions.tool("graft-graphbench")
 
-    // q142/q217's shared co-purchase edge frame (the SparkEntry build)
+    // q142/q217's shared co-purchase edge frame (the GraphQueries build)
     val li = Tables.load(spark, sfDir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     val half = li.toDF("ok", "src").join(li.toDF("ok", "dst"), "ok")

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * shows only the post-checkpoint scan — the per-doc assembly
   * projection round 14 optimized is invisible there. This tool
   * explains the encode OPERATOR frames directly (same fixtures as
-  * SparkEntry: the doc_id%4=0 training slice, 8 merges), which is how
+  * TokenizerQueries: the doc_id%4=0 training slice, 8 merges), which is how
   * the committed plans/r14 "_op_before"/"_op_after" pairs were
   * produced (before = this tool run against the pre-change operator
   * code via `git stash`).

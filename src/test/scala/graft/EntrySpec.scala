@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.LogicalRDD
+import graft.queries.{Query, Registry}
 
 /** Guards the driver's smoke contract: `SparkEntry.entry` must return
   * rows on the sf0.001 testdata, and every `queries` key must have
@@ -37,6 +38,15 @@ class EntrySpec extends SparkSpec {
       assert(os.contains(companion),
         s"rows-only $q names companion $companion which has no oracle")
     }
+  }
+
+  test("the registry rejects a repeated query name and holds each record once") {
+    val e = intercept[IllegalArgumentException](new Registry(Seq(
+      Query("q00_twice", (s, _) => s.range(1).toDF()),
+      Query("q00_twice", (s, _) => s.range(2).toDF()))))
+    assert(e.getMessage.contains("q00_twice"))
+    assert(SparkEntry.registry.records.size == 247)
+    assert(SparkEntry.queries.size == SparkEntry.registry.records.size)
   }
 
   test("a memoized rules pair survives protected sweeps and is rebuilt together") {
