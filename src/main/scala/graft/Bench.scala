@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
@@ -9,8 +10,14 @@ import scala.jdk.CollectionConverters._
   * per-query wall-clock at `SPARK_GRAFT_SF_DIR`.
   *
   * Methodology (fixes the round-1 harness defects):
-  *  - warm-up pass over every query at sf0.001 first, so JIT/codegen/
-  *    classloading cost is not billed to whichever query runs first;
+  *  - warm-up pass over every query at sf0.001 first, so JIT and
+  *    classloading cost is not billed to whichever query runs first.
+  *    It does not keep codegen off the timed reps: one pass over the
+  *    suite compiles more classes than Spark's codegen cache holds
+  *    (`Sessions.CodegenCacheEntries`), so a query's warm-up classes are
+  *    evicted long before its timed reps, and its first rep compiles
+  *    them again. Min-of-2 hides that cost, because the second rep
+  *    runs straight after the first and hits the cache;
   *  - the action is a `noop`-format write, which consumes every output
   *    column — `.count()` let Catalyst prune all projections and timed
   *    a bare scan for narrow queries;
@@ -50,18 +57,29 @@ object Bench {
   }
 
   /** Records every completed stage of `sc` (registered on
-    * construction). `clear()` before a measurement, `snapshot()` after
-    * it: listener events are posted asynchronously, so the snapshot
-    * first waits for the bus to drain.
+    * construction) and counts the generated classes Spark compiles.
+    * `clear()` before a measurement, `snapshot()` after it: listener
+    * events are posted asynchronously, so the snapshot first waits for
+    * the bus to drain.
     */
   private[graft] final class StageLog(sc: SparkContext) extends SparkListener {
     private val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
     sc.addSparkListener(this)
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       stages.add(e.stageInfo)
-    def clear(): Unit = stages.clear()
+    // Janino compiles, JVM-wide: each miss in Spark's codegen cache
+    private def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    private var compileMark = compileCount
+    private var compiled = 0L
+    /** Classes compiled between the last `clear()` and `snapshot()`. */
+    def compiles: Long = compiled
+    def clear(): Unit = {
+      stages.clear()
+      compileMark = compileCount
+    }
     def snapshot(): Seq[StageInfo] = {
       Thread.sleep(500)
+      compiled = compileCount - compileMark
       stages.asScala.toSeq
     }
 

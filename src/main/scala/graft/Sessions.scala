@@ -24,11 +24,25 @@ object Sessions {
   private val AdvisoryPartitionBytes = "64MB"
   private val MinPartitionSize = "1MB"
 
+  /** Entries of Spark's JVM-wide cache of compiled generated classes
+    * (whole-stage, projection, predicate). Spark's default of 100 is
+    * smaller than one pass of graft's own work: a perfbench pass
+    * compiles about 230 distinct classes on `interactive` and about 200
+    * on `ingest`, so at 100 every class was evicted before its plan ran
+    * again and each pass recompiled it (225 and 195 Janino compiles,
+    * about 4.2 s and 4.8 s of summed compile time). Each held class
+    * costs about 16–24 KB of heap (Janino's class loader keeps the
+    * bytecode), so 1024 entries hold four such passes for about 25 MB.
+    * A static conf: read once, when `CodeGenerator` first loads in the
+    * JVM, so it can only be set here.
+    */
+  private val CodegenCacheEntries = 1024
+
   /** Shared builder: every engine session (tests, Verify, Bench,
     * Profile) goes through here so the static confs that CANNOT be
     * applied after construction — `nanosAsLong` (nanosecond parquet),
-    * `spark.sql.extensions` (native SQL functions) — are never missed
-    * at one call site.
+    * `spark.sql.extensions` (native SQL functions), the codegen cache
+    * size — are never missed at one call site.
     */
   def builder(cpus: Int = defaultCpus, appName: String = "graft"): SparkSession.Builder =
     SparkSession
@@ -57,6 +71,7 @@ object Sessions {
       // contain the bounded top-k — see graft.operators.TopKAgg.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config("spark.ui.enabled", "false")
 
   /** Local session for tests and CLI mains. */

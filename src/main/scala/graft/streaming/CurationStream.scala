@@ -3,6 +3,8 @@ package graft.streaming
 import graft.llm.{Dedup, Sampling, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.BinaryType
@@ -158,15 +160,23 @@ object CurationStream {
     * Round-14 job-count reduction: the probe is ONE action (a
     * bloom-filtered `isEmpty`), not a checkpoint + `isEmpty` pair —
     * the residue filter re-evaluates in the non-empty branch instead
-    * of being materialized. Callers pass an already-materialized
-    * `batch` (localCheckpoint), so the re-evaluation is a cheap
-    * deterministic re-read, and the steady-state reference-equal
-    * return lets the CALLER skip its own second checkpoint too.
+    * of being materialized. `batch` must already be materialized
+    * (a localCheckpoint, or local rows), so the re-evaluation is a
+    * cheap deterministic re-read, and the steady-state reference-equal
+    * return lets the CALLER skip its own second checkpoint too; a lazy
+    * frame is rejected with `IllegalArgumentException`. The check reads
+    * the optimized plan, where a rename over local rows folds into the
+    * rows themselves.
     */
   private[streaming] def boundedAntiJoin(batch: DataFrame, key: Column,
                                          storeKeys: Option[DataFrame],
                                          storeKey: Column,
-                                         bloom: Option[StoreBloom]): DataFrame =
+                                         bloom: Option[StoreBloom]): DataFrame = {
+    require(batch.queryExecution.optimizedPlan match {
+      case _: LogicalRDD | _: LocalRelation => true
+      case _ => false
+    }, "boundedAntiJoin re-reads its batch: pass a materialized frame " +
+      "(localCheckpoint or local rows)")
     (storeKeys, bloom) match {
       case (None, _) => batch
       case (Some(st), None) =>
@@ -178,6 +188,7 @@ object CurationStream {
           .unionByName(batch.filter(hit)
             .join(st, key === storeKey, "left_anti"))
     }
+  }
 
   /** One `bloom_filter_agg` column with EXACTLY the parameters
     * `DataFrameStatFunctions.bloomFilter(key, cap, fpp)` uses

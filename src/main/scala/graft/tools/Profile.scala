@@ -11,7 +11,8 @@ object Profile {
     val names = args(1).split(",").toSeq
     val explain = args.length > 2 && args(2) == "explain"
     val spark = Sessions.tool("graft-profile")
-    // stage-level metrics: duration + GC per stage of the measured run
+    // stage-level metrics of the measured run: stage, task and
+    // codegen compile counts, and duration + GC per stage
     val stages = new Bench.StageLog(spark.sparkContext)
     // per-operator output-row SQL metrics of the FINAL frame's executed
     // plan (SPARK_GRAFT_ROWMETRICS=1): the row volumes that never cross
@@ -58,10 +59,12 @@ object Profile {
       val warm = ms(Bench.timed(spark)(fn(spark, Bench.WarmDir)))
       stages.clear()
       val t = ms(Bench.timed(spark)(fn(spark, sfDir)))
-      println(s"PROFILE $n warm=$warm sf=$t")
+      val measured = stages.snapshot()
+      println(s"PROFILE $n warm=$warm sf=$t stages=${measured.length} " +
+        s"tasks=${measured.map(_.numTasks).sum} compiles=${stages.compiles}")
       if (sys.env.contains("SPARK_GRAFT_ROWMETRICS")) rowMetrics()
       if (sys.env.contains("SPARK_GRAFT_STAGES"))
-        stages.snapshot().foreach { i =>
+        measured.foreach { i =>
           val d = for {s <- i.submissionTime; e <- i.completionTime} yield e - s
           println(f"  stage ${i.stageId}%4d ${d.getOrElse(-1L)}%7dms " +
             f"tasks=${i.numTasks}%3d gc=${i.taskMetrics.jvmGCTime}%6dms " +

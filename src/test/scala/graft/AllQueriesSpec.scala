@@ -10,9 +10,10 @@ package graft
   * spec makes any input-schema drift a local test failure instead of
   * a silent per-round correctness regression.
   *
-  * One generated test per query so a failure names the query; count()
-  * both forces full execution (runtime cast/ANSI errors included) and
-  * matches the driver's cheapest smoke contract (rows >= 0).
+  * One generated test per query so a failure names the query. The
+  * action is the bench's `noop` write, which consumes every output
+  * column: `count()` let Catalyst prune the projections, so a column
+  * that fails only when computed (a runtime cast or ANSI error) passed.
   */
 class AllQueriesSpec extends SparkSpec {
 
@@ -20,7 +21,7 @@ class AllQueriesSpec extends SparkSpec {
 
   for ((name, q) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name runs on sf0.001") {
-      assert(q(spark, dir).count() >= 0L)
+      q(spark, dir).write.mode("overwrite").format("noop").save()
     }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Every engine session comes from [[Sessions.builder]]: the SQL confs
@@ -15,7 +16,8 @@ class SessionsSpec extends SparkSpec {
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1MB",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.extensions" -> "graft.functions.GraftExtensions")
+    "spark.sql.extensions" -> "graft.functions.GraftExtensions",
+    "spark.sql.codegen.cache.maxEntries" -> "1024")
 
   /** A fresh session on the shared context, leaving the suite's own
     * session (and its conf) as it was.
@@ -44,5 +46,20 @@ class SessionsSpec extends SparkSpec {
     assert(tool.conf.get("spark.sql.shuffle.partitions") ==
       partitionsEnv.getOrElse(Sessions.defaultCpus.toString))
     assert(built.conf.get("spark.sql.shuffle.partitions") == partitionsEnv.getOrElse("2"))
+  }
+
+  test("a plan compiled before 150 other plans is not compiled again") {
+    // each Int literal is inlined into the generated source, so every
+    // query compiles its own classes: more than Spark's default cache
+    // of 100 entries holds
+    def run(i: Int): Unit = spark.range(4).selectExpr(s"id * $i").collect()
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run(2)
+    val afterFirst = compiles
+    (3 until 153).foreach(run)
+    assert(compiles - afterFirst >= 150)
+    val beforeRerun = compiles
+    run(2)
+    assert(compiles == beforeRerun)
   }
 }

@@ -166,6 +166,21 @@ class CurationStreamSpec extends SparkSpec {
     assert(out.select("doc_id").as[Long].collect().toSet == Set(7L, 9L))
   }
 
+  test("bounded store probe rejects a lazy batch: it re-reads its input") {
+    val store = freshStore("lazyprobe")
+    CurationStream.processBatch(b1.toDF(), "doc_id", "text", profiles, store)
+    val storeKeys = spark.read.parquet(s"$store/corpus").select(col("doc_id").as("_sid"))
+    val lazyBatch = spark.read.parquet(s"$store/corpus").filter(col("doc_id") > 0L)
+    intercept[IllegalArgumentException] {
+      CurationStream.boundedAntiJoin(lazyBatch, col("doc_id"), Some(storeKeys),
+        col("_sid"), CurationStream.readBlooms(spark, store).get("ids"))
+    }
+    // its checkpoint is accepted
+    val out = CurationStream.boundedAntiJoin(lazyBatch.localCheckpoint(), col("doc_id"),
+      Some(storeKeys), col("_sid"), None)
+    assert(out.isEmpty)
+  }
+
   test("bloom saturation triggers a rebuild; probes stay exact after it") {
     val store = freshStore("bloomgrow")
     // threshold ~1.0 so one-word variants are NOT near-dups of each
