@@ -13,7 +13,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType}
   * fully-mergeable quantile sketch with relative-error guarantees",
   * VLDB 2019).
   *
-  * The quantile analogue of [[HllSketch]]: exact rolling/rollup
+  * The quantile analogue of the HLL distinct sketches that q98/q121
+  * take from Spark (`hll_sketch_agg`): exact rolling/rollup
   * percentiles cannot pre-aggregate (p95 of a union is not a function
   * of per-part p95s), so at 100 TB the sketch IS the product — tiny
   * per-day / per-partition histograms are written once and any later
@@ -42,6 +43,11 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, LongType}
   * holds EXACTLY (DdSketchSpec asserts bit-equality). A collapsing
   * store compacts at order-dependent moments and loses that
   * determinism, which the driver's hash-level oracle would punish.
+  *
+  * Why not Spark's built-in `kll_sketch_agg_*`: KLL bounds RANK error,
+  * while q133/q134 gate a 2 % relative-VALUE error; and its compactor
+  * draws from `KllSketch.random`, a static unseeded `java.util.Random`,
+  * so its estimate is not a constant of the data.
   */
 object DdSketch {
 
@@ -157,9 +163,9 @@ object DdSketch {
   def mergeAgg(c: Column): Column =
     udaf(mergeAggregator, Encoders.BINARY).apply(c)
 
-  /** Sketch column → quantile estimate. Native codegen'd expression
-    * (same pattern as [[HllSketch.estimate]]): static call on the raw
-    * byte[], no UDF boxing, whole-stage span intact.
+  /** Sketch column → quantile estimate. Native codegen'd expression:
+    * static call on the raw byte[], no UDF boxing, whole-stage span
+    * intact.
     */
   def quantile(c: Column, q: Double): Column =
     Bridge.column(DdQuantile(Bridge.expression(c), q))

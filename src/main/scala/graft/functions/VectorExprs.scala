@@ -1383,10 +1383,6 @@ object VectorExprs {
       Bridge.expression(a.cast("array<bigint>")),
       Bridge.expression(b.cast("array<bigint>"))))
 
-  /** L2 norm via [[dot]]. */
-  def l2Norm(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(dot(a, a))
-
   /** Exact `Σ a[i]·b[i]` over decimal(18,9) arrays → decimal(38,18)
     * ([[ArrayDecimalDotProduct]]). Pass columns already cast to
     * `array<decimal(18,9))>` so the cast semantics stay visible at the

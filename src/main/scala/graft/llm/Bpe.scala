@@ -1447,14 +1447,6 @@ object Bpe {
        |GROUP BY 1)""".stripMargin
   }
 
-  /** The DuckDB replay of [[byteVocab]] over a `trainWhere`-sliced
-    * training corpus.
-    */
-  def byteVocabOracleSql(nMerges: Int, trainWhere: String,
-                         textSql: String = "text"): String =
-    s"WITH ${byteRoundsCte(nMerges, trainWhere, textSql)},\n" +
-      s"${byteVocabCte(nMerges)}\nSELECT piece, token_id FROM bvoc"
-
   /** The DuckDB replay of the byte artifact roundtrip: the trained
     * rules (rank order = merges.txt line order) joined with their
     * vocab ids — a drop, reorder, or id drift anywhere in the

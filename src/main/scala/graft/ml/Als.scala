@@ -64,14 +64,11 @@ object Als {
   def predict(model: ALSModel, df: DataFrame): DataFrame =
     model.transform(prepare(df))
 
-  /** M3/M4: top-k recommendations, full or for a user subset. Subset
-    * first at scale (`recommendForAllUsers(5).limit(5)` in the
-    * reference computes top-5 for every user then throws them away —
+  /** M3/M4: top-k recommendations for a user subset. Subset first at
+    * scale (`recommendForAllUsers(5).limit(5)` in the reference
+    * computes top-5 for every user then throws them away —
     * `ALS_model3.py:260`, SURVEY §4 item 6).
     */
-  def recommendAll(model: ALSModel, k: Int): DataFrame =
-    model.recommendForAllUsers(k)
-
   def recommendSubset(model: ALSModel, users: DataFrame, k: Int): DataFrame =
     model.recommendForUserSubset(users.select(col("userId").cast("int").as("userId")), k)
 

@@ -1,29 +1,63 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.Det
+import graft.functions.{CountMinEstimate, Det}
 import graft.queries.Fixtures.t
 
-/** Mergeable sketches and their accuracy gates: HLL, DDSketch
-  * quantiles, Count-Min, KMV, and the bloom-prefiltered semi join.
+/** Mergeable sketches and their accuracy gates: Spark's built-in HLL,
+  * theta and Count-Min sketches, graft's DDSketch quantiles, and the
+  * bloom-prefiltered semi join.
   */
 object SketchQueries {
+  /** Distinct-count estimate of a Spark HLL sketch, read through a
+    * union. `hll_sketch_estimate` reads a sketch built in row order
+    * with the HIP estimator, which depends on that order: the same
+    * 50,000 values read 50,024 on 1 partition and 49,561 on 17, and a
+    * union of one partial sketch keeps it. A union with itself makes
+    * Spark use the composite estimator, which reads only the registers,
+    * so the estimate — and every gate flag built on it — is a constant
+    * of the data.
+    */
+  private[graft] def hllEstimate(sk: Column): Column =
+    hll_sketch_estimate(hll_union(sk, sk))
+
+  /** Count-Min ε of q139, graft's width W = 1024 (ε = e/W); the sketch
+    * and the ⌈ε·N⌉ over-count gate both read it.
+    */
+  private[graft] val CmsEps: Double = math.E / 1024
+
+  /** Spark Count-Min sketch at q139's parameters: ε = [[CmsEps]],
+    * confidence 1 − e⁻⁴ (graft's depth D = 4) and a fixed seed.
+    */
+  private[graft] def cmsSketch(c: Column): Column =
+    count_min_sketch(c, lit(CmsEps), lit(1 - math.exp(-4)), lit(7))
+
   /** Per-flag HLL estimates merged from per-(flag, status)
     * sub-sketches, beside the exact distinct count (q98, q128).
     */
   private def hllRollup(s: SparkSession, dir: String): DataFrame = {
     val sub = t(s, dir, "lineitem")
       .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(graft.functions.HllSketch.sketchAgg(col("l_partkey")).as("sk"))
+      .agg(hll_sketch_agg(col("l_partkey")).as("sk"))
     val rolled = sub.groupBy(col("l_returnflag"))
-      .agg(graft.functions.HllSketch.estimate(
-        graft.functions.HllSketch.mergeAgg(col("sk"))).as("n_approx"))
+      .agg(hllEstimate(hll_union_agg(col("sk"))).as("n_approx"))
     val exact = t(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(countDistinct(col("l_partkey")).as("n_exact"))
     rolled.join(exact, "l_returnflag")
+  }
+
+  /** 7-row rolling distinct users from daily HLL sketches (q121, q130). */
+  private def rollingUsers(s: SparkSession, dir: String): DataFrame = {
+    val daily = t(s, dir, "events")
+      .groupBy(date_trunc("day", col("ts")).as("day"))
+      .agg(hll_sketch_agg(col("user_id")).as("sk"))
+    val w = org.apache.spark.sql.expressions.Window
+      .orderBy(col("day")).rowsBetween(-6, 0)
+    daily.select(col("day"),
+      hllEstimate(hll_union_agg(col("sk")).over(w)).as("users_7d"))
   }
 
   val all: Seq[Query] = Seq(
@@ -32,26 +66,17 @@ object SketchQueries {
     //     distinct FEASIBLE at scale — exact rolling distinct cannot
     //     pre-aggregate; sketches merge associatively, so the raw data
     //     is touched once). Window is over the ~|days| aggregated
-    //     frame, not the events. Rows-only; accuracy gated in
-    //     HllSketchSpec ---
-    Query("q121_rolling_distinct", (s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg(graft.functions.HllSketch.sketchAgg(col("user_id")).as("sk"))
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("day")).rowsBetween(-6, 0)
-      daily.select(col("day"),
-        graft.functions.HllSketch.estimate(
-          graft.functions.HllSketch.mergeAgg(col("sk")).over(w))
-          .as("users_7d"))
-    }),
+    //     frame, not the events. Rows-only; accuracy gated by q130
+    //     and HllSketchSpec ---
+    Query("q121_rolling_distinct", (s, dir) => rollingUsers(s, dir)),
 
     // --- mergeable HLL distinct sketches: per-(flag,status) sub-
     //     sketches roll up to per-flag estimates WITHOUT re-scanning
     //     raw rows — the persistable-sketch surface approx_count_
     //     distinct never exposes. Rows-only for the driver (the
-    //     estimator is not SQL-replayable); HllSketchSpec pins the
-    //     ≤5% error band and the exact merge≡direct bit-equality ---
+    //     estimator is not SQL-replayable); q128 gates it, and
+    //     HllSketchSpec pins the ≤5% error band and the partition-
+    //     invariant union-path estimate ---
     Query("q98_hll_sketch", (s, dir) => {
       hllRollup(s, dir)
         .select(col("l_returnflag"), col("n_approx"), col("n_exact"),
@@ -63,8 +88,8 @@ object SketchQueries {
     //     (whose n_approx column is not SQL-expressible). n_exact is
     //     independently recomputed by the DuckDB oracle; within_bound
     //     pins |approx−exact|/exact ≤ 5% (3× the σ ≈ 1.04/√4096
-    //     standard error — deterministic on fixed data since the
-    //     sketch hash is seeded) ---
+    //     standard error at Spark's default lgConfigK = 12 —
+    //     deterministic on fixed data through `hllEstimate`) ---
     Query("q128_hll_rollup_accuracy", (s, dir) => {
       hllRollup(s, dir)
         .select(col("l_returnflag"), col("n_exact"),
@@ -96,15 +121,7 @@ object SketchQueries {
         .join(du.toDF("d2", "user_id"), Seq("d2"))
         .groupBy(col("day"))
         .agg(countDistinct(col("user_id")).as("n_exact"))
-      val daily = t(s, dir, "events")
-        .groupBy(date_trunc("day", col("ts")).as("day"))
-        .agg(graft.functions.HllSketch.sketchAgg(col("user_id")).as("sk"))
-      val approx = daily.select(col("day"),
-        graft.functions.HllSketch.estimate(
-          graft.functions.HllSketch.mergeAgg(col("sk")).over(
-            org.apache.spark.sql.expressions.Window
-              .orderBy(col("day")).rowsBetween(-6, 0))).as("users_7d"))
-      approx.join(exact, "day")
+      rollingUsers(s, dir).join(exact, "day")
         .select(col("day"), col("n_exact"),
           (abs(col("users_7d") - col("n_exact")).cast("double") /
             col("n_exact") <= 0.05).cast("int").as("within_bound"))
@@ -251,26 +268,25 @@ object SketchQueries {
         |  (SELECT o_orderkey FROM orders WHERE o_totalprice > 450000)
         |GROUP BY l_returnflag""".stripMargin)),
 
-    // --- Count-Min frequency gate: one global CM sketch over the
-    //     token stream, probed at the exact top-20 terms. The sketch
-    //     never underestimates, and the deterministic fixed-seed hash
-    //     makes both flags constants of the data — the oracle pins
-    //     them with the exact counts it recomputes itself ---
+    // --- Count-Min frequency gate: one global Spark
+    //     `count_min_sketch` over the token stream (`cmsSketch`),
+    //     probed at the exact top-20 terms. The sketch never
+    //     underestimates, and its fixed-seed hash makes both flags
+    //     constants of the data — the oracle pins them with the exact
+    //     counts it recomputes itself ---
     Query("q139_cms_accuracy", (s, dir) => {
-      import graft.functions.CountMin
       val toks = t(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("term"))
-      val sk = toks.agg(CountMin.sketchAgg(col("term")).as("sk"))
+      val sk = toks.agg(cmsSketch(col("term")).as("sk"), count(lit(1)).as("n_tok"))
       val top = toks.groupBy(col("term"))
         .agg(count(lit(1)).as("n_exact"))
         .orderBy(col("n_exact").desc, col("term")).limit(20)
       top.crossJoin(broadcast(sk))
         .select(col("term"), col("n_exact"),
-          (CountMin.estimate(col("sk"), col("term")) >= col("n_exact"))
+          (CountMinEstimate(col("sk"), col("term")) >= col("n_exact"))
             .cast("int").as("ge_ok"),
-          (CountMin.estimate(col("sk"), col("term")) <=
-            col("n_exact") + ceil(lit(CountMin.Eps) *
-              CountMin.total(col("sk"))).cast("long"))
+          (CountMinEstimate(col("sk"), col("term")) <=
+            col("n_exact") + ceil(lit(CmsEps) * col("n_tok")).cast("long"))
             .cast("int").as("bound_ok"))
     },
       // count-min gate: exact top-20 recomputed; flags pinned
@@ -279,22 +295,24 @@ object SketchQueries {
         |FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
         |GROUP BY term ORDER BY n_exact DESC, term LIMIT 20""".stripMargin)),
 
-    // --- KMV (theta) sketch overlap gate: per-event-type user
-    //     sketches, pairwise distinct-intersection estimates — the
-    //     set algebra HLL cannot do (register-max merge destroys the
-    //     sample; KMV IS a uniform hash sample). Exact overlaps
-    //     recomputed both sides; flags pinned (deterministic hash ⇒
-    //     the estimate is a constant of the data) ---
+    // --- theta (KMV) sketch overlap gate: per-event-type user
+    //     sketches from Spark's `theta_sketch_agg` (K = 4096),
+    //     pairwise distinct-intersection estimates — the set algebra
+    //     HLL cannot do (register-max merge destroys the sample; a
+    //     theta sketch IS a uniform hash sample). Exact overlaps
+    //     recomputed both sides; flags pinned (the sketch bytes are
+    //     partitioning-invariant ⇒ the estimate is a constant of the
+    //     data) ---
     Query("q140_kmv_overlap", (s, dir) => {
-      import graft.functions.KmvSketch
       val ut = t(s, dir, "events")
         .select(col("user_id"), col("event_type")).distinct()
       val sk = ut.groupBy(col("event_type"))
-        .agg(KmvSketch.sketchAgg(col("user_id")).as("sk"))
+        .agg(theta_sketch_agg(col("user_id")).as("sk"))
       val est = sk.toDF("type_a", "ska")
         .join(sk.toDF("type_b", "skb"), col("type_a") < col("type_b"))
         .select(col("type_a"), col("type_b"),
-          KmvSketch.intersect(col("ska"), col("skb")).as("est"))
+          theta_sketch_estimate(theta_intersection(col("ska"), col("skb")))
+            .as("est"))
       val exact = ut.toDF("user_id", "type_a")
         .join(ut.toDF("user_id", "type_b"), Seq("user_id"))
         .filter(col("type_a") < col("type_b"))
@@ -305,7 +323,7 @@ object SketchQueries {
           (abs(col("est") - col("n_both")).cast("double") /
             col("n_both") <= 0.10).cast("int").as("within_bound"))
     },
-      // kmv overlap gate: exact pairwise user overlaps recomputed
+      // theta overlap gate: exact pairwise user overlaps recomputed
       oracle = Some("""WITH ut AS (SELECT DISTINCT user_id, event_type FROM events)
         |SELECT a.event_type AS type_a, b.event_type AS type_b,
         |       CAST(COUNT(*) AS BIGINT) AS n_both,

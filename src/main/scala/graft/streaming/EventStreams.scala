@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 import graft.functions.Det
 
 /** Structured Streaming over the `events` stream (SURVEY §2.12 notes
@@ -18,24 +17,6 @@ import graft.functions.Det
   * window end.
   */
 object EventStreams {
-
-  /** The events schema as the stream source contract (ts arrives as
-    * proper TimestampType here; the nanos quirk is a property of the
-    * static parquet testdata, handled in [[graft.sources.Tables]]).
-    */
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** File-based stream source over an events directory (each dropped
-    * parquet file becomes a micro-batch).
-    */
-  def readEventsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(eventSchema).parquet(dir)
 
   /** Hourly (window, event_type) counts/sums with a watermark for
     * state eviction. Works on both streaming and batch frames (the

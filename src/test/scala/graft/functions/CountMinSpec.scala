@@ -1,8 +1,14 @@
 package graft.functions
 
 import graft.SparkSpec
+import graft.queries.SketchQueries.{CmsEps => Eps, cmsSketch}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.CountMinSketch
 
+/** Spark's built-in `count_min_sketch` at q139's parameters
+  * ([[graft.queries.SketchQueries.cmsSketch]]), probed
+  * through [[CountMinEstimate]].
+  */
 class CountMinSpec extends SparkSpec {
   import spark.implicits._
 
@@ -10,33 +16,28 @@ class CountMinSpec extends SparkSpec {
   private lazy val zipf: Seq[String] =
     (1 to 200).flatMap(k => Seq.fill(5000 / k)(s"key_$k"))
 
+  private def sketchOf(vals: Seq[String], parts: Int = 4): Array[Byte] =
+    vals.toDF("v").repartition(parts).agg(cmsSketch(col("v"))).head.getAs[Array[Byte]](0)
+
   test("merge-equivalence is exact: sketch(A ∪ B) == merge(sketch(A), sketch(B))") {
     val (a, b) = zipf.splitAt(zipf.size / 3)
-    val skA = a.toDF("v").agg(CountMin.sketchAgg(col("v"))).head.getAs[Array[Byte]](0)
-    val skB = b.toDF("v").agg(CountMin.sketchAgg(col("v"))).head.getAs[Array[Byte]](0)
-    val skU = zipf.toDF("v").agg(CountMin.sketchAgg(col("v"))).head.getAs[Array[Byte]](0)
-    val merged = Seq(skA, skB).toDF("sk")
-      .agg(CountMin.mergeAgg(col("sk"))).head.getAs[Array[Byte]](0)
-    assert(java.util.Arrays.equals(skU, merged))
+    val merged = CountMinSketch.readFrom(sketchOf(a))
+      .mergeInPlace(CountMinSketch.readFrom(sketchOf(b)))
+    assert(java.util.Arrays.equals(sketchOf(zipf), merged.toByteArray))
   }
 
   test("sketch bytes are partitioning-invariant; total equals N") {
-    val one = zipf.toDF("v").repartition(1)
-      .agg(CountMin.sketchAgg(col("v"))).head.getAs[Array[Byte]](0)
-    val many = zipf.toDF("v").repartition(17)
-      .agg(CountMin.sketchAgg(col("v"))).head.getAs[Array[Byte]](0)
-    assert(java.util.Arrays.equals(one, many))
-    assert(CountMin.countAll(one) == zipf.size.toLong)
+    val one = sketchOf(zipf, 1)
+    assert(java.util.Arrays.equals(one, sketchOf(zipf, 17)))
+    assert(CountMinSketch.readFrom(one).totalCount() == zipf.size.toLong)
   }
 
   test("never underestimates; overestimate bounded by ε·N") {
-    val sk = zipf.toDF("v").agg(CountMin.sketchAgg(col("v")))
-      .head.getAs[Array[Byte]](0)
+    val sk = sketchOf(zipf)
     val exact = zipf.groupBy(identity).map { case (k, v) => (k, v.size.toLong) }
-    val n = zipf.size.toLong
-    val budget = math.ceil(CountMin.Eps * n).toLong
+    val budget = math.ceil(Eps * zipf.size).toLong
     val probe = zipf.distinct.toDF("v")
-      .select(col("v"), CountMin.estimate(lit(sk), col("v")).as("est"))
+      .select(col("v"), CountMinEstimate(lit(sk), col("v")).as("est"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     for ((k, ex) <- exact) {
       assert(probe(k) >= ex, s"$k underestimated: ${probe(k)} < $ex")
@@ -45,25 +46,11 @@ class CountMinSpec extends SparkSpec {
   }
 
   test("absent keys estimate within the collision budget") {
-    val sk = zipf.toDF("v").agg(CountMin.sketchAgg(col("v")))
-      .head.getAs[Array[Byte]](0)
-    val n = zipf.size.toLong
-    val budget = math.ceil(CountMin.Eps * n).toLong
+    val cms = CountMinSketch.readFrom(sketchOf(zipf))
+    val budget = math.ceil(Eps * zipf.size).toLong
     (1 to 50).foreach { i =>
-      val est = CountMin.query(sk,
-        org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(i, 42).toLong)
+      val est = cms.estimateCount(s"absent_$i")
       assert(est <= budget, s"phantom key $i: $est > $budget")
     }
-  }
-
-  test("native probe expressions stay codegen'd") {
-    val df = zipf.take(1000).toDF("v")
-      .agg(CountMin.sketchAgg(col("v")).as("sk"))
-      .select(CountMin.estimate(col("sk"), lit("key_1")).as("e"),
-        CountMin.total(col("sk")).as("n"))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("CodegenFallback"))
-    val row = df.head
-    assert(row.getLong(1) == 1000L && row.getLong(0) >= 1L)
   }
 }
