@@ -1,15 +1,24 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: compare Verify output
 parquet against DuckDB running SparkEntry.oracleSql on the same testdata.
-Usage: python3 scripts/oracle_check.py <verify_out_dir> [sf_dir]
+Usage: python3 scripts/oracle_check.py <verify_out_dir> [sf_dir] [q1,q2,...]
+The optional third argument (the same comma-separated subset graft.Verify
+takes) checks only those queries; without it every oracle is checked.
+DuckDB spills to <verify_out_dir>/duckdb_tmp, so a join larger than its
+memory limit runs out of core instead of failing.
 (Driver-side tooling only — not part of the Spark library.)"""
 import duckdb, json, os, sys
 out = sys.argv[1] if len(sys.argv) > 1 else '/tmp/verify_r2'
 sf = sys.argv[2] if len(sys.argv) > 2 else '/root/testdata/sf0.01'
-con = duckdb.connect()
+only = set(sys.argv[3].split(',')) if len(sys.argv) > 3 else None
+con = duckdb.connect(config={'temp_directory': f'{out}/duckdb_tmp'})
 for t in ['region','nation','customer','supplier','part','orders','lineitem','events','documents','embeddings']:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 oracle = json.load(open(f'{out}/oracle_sql.json'))
+if only is not None:
+    unknown = only - oracle.keys()
+    if unknown: sys.exit(f'no oracle SQL for: {",".join(sorted(unknown))}')
+    oracle = {k: v for k, v in oracle.items() if k in only}
 fails = []
 for name, sql in sorted(oracle.items()):
     d = f'{out}/{name}'

@@ -262,21 +262,14 @@ object SortedStructIds {
 /** Column helpers for the token-assembly expressions. */
 object TokenExprs {
 
-  /** Sorted flatten of per-word id arrays with a boundary id between
-    * words ([[FlattenWordIds]]) — replaces
-    * `flatten(transform(sort_array(...), (w,i) -> IF(i=0, w.ids,
-    * concat(array(boundary), w.ids))))`.
+  /** Sorted flatten of per-word id arrays ([[FlattenWordIds]]) with
+    * `boundary` between words, or plain concatenation when `None` —
+    * replaces `flatten(transform(sort_array(...), (w,i) -> IF(i=0,
+    * w.ids, concat(array(boundary), w.ids))))`.
     */
-  def flattenWordIds(words: Column, boundary: Int): Column =
-    Bridge.column(FlattenWordIds(Bridge.expression(words), boundary,
-      insertBoundary = true))
-
-  /** Sorted flatten WITHOUT boundary insertion (WordPiece) —
-    * replaces `flatten(transform(sort_array(...), w -> w.ids))`.
-    */
-  def flattenWordIdsPlain(words: Column): Column =
-    Bridge.column(FlattenWordIds(Bridge.expression(words), 0,
-      insertBoundary = false))
+  def flattenWordIds(words: Column, boundary: Option[Int]): Column =
+    Bridge.column(FlattenWordIds(Bridge.expression(words),
+      boundary.getOrElse(0), insertBoundary = boundary.isDefined))
 
   /** Sorted per-position id extraction ([[SortedStructIds]]) —
     * replaces `transform(sort_array(collect_list(struct(pos, id))),
@@ -286,18 +279,11 @@ object TokenExprs {
     Bridge.column(SortedStructIds(Bridge.expression(rows)))
 
   /** Sorted piece concatenation ([[ConcatSortedPieces]]) — replaces
-    * `array_join(transform(sort_array(...), x -> x.p), '')`.
-    */
-  def concatSortedPieces(pieces: Column): Column =
-    Bridge.column(ConcatSortedPieces(Bridge.expression(pieces),
-      wordpiece = false))
-
-  /** WordPiece-rule sorted concatenation ([[ConcatSortedPieces]]) —
-    * replaces `concat_ws('', transform(sort_array(...), x ->
+    * `array_join(transform(sort_array(...), x -> x.p), '')`, or with
+    * `wordpiece` the `concat_ws('', transform(sort_array(...), x ->
     * IF(startswith(x.p, '##'), substring(x.p, 3), concat(' ', x.p))))`
-    * (caller keeps its outer `ltrim`).
+    * WordPiece rule (the caller keeps its outer `ltrim`).
     */
-  def concatSortedPiecesWp(pieces: Column): Column =
-    Bridge.column(ConcatSortedPieces(Bridge.expression(pieces),
-      wordpiece = true))
+  def concatSortedPieces(pieces: Column, wordpiece: Boolean): Column =
+    Bridge.column(ConcatSortedPieces(Bridge.expression(pieces), wordpiece))
 }

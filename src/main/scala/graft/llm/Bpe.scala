@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -66,12 +66,61 @@ import org.apache.spark.sql.types._
   */
 object Bpe {
 
-  /** The guard both sides apply to the raw word stream. Exposed to
-    * the query layer so roundtrip gates recompose EXACTLY the clean
-    * word stream the encoder saw.
+  /** What separates char-level from byte-level BPE. Training,
+    * encoding, decoding and export are one surface; each takes the
+    * alphabet as a value.
+    *
+    * @param face       the serve conventions ([[TokenServe.Face]]):
+    *                   word guard, boundary id, unknown flag, decode
+    *                   fallback piece and finish
+    * @param segment    SQL over `word`: its base symbols, in order
+    * @param length     a word's length in the unit compression divides
+    *                   by, named `lengthName` in the counts output
+    * @param symbols    the base symbols a trained vocabulary can name
+    *                   (a word with any other is counted in `n_oov`)
+    * @param vocab      the `(piece, token_id)` table of `(rules, words)`
     */
-  private[graft] def wordOk = col("word") =!= "" &&
-    !col("word").contains("<") && !col("word").contains(">")
+  final case class Alphabet(face: TokenServe.Face, segment: String,
+                            length: Column => Column, lengthName: String,
+                            symbols: DataFrame => Set[String],
+                            vocab: (DataFrame, DataFrame) => DataFrame)
+
+  /** Non-empty characters of `word` (Spark's own segmentation, so
+    * driver, executor and oracle agree on what a character is).
+    */
+  private val CharSeg = "filter(split(word, ''), x -> x <> '')"
+
+  /** Char-level BPE: symbols are characters, words containing the
+    * `<`/`>` sentinels drop, id 0 is the space between words, and a
+    * word with a character training never saw is unknown (its piece
+    * gets id −1 and decodes to U+FFFD).
+    */
+  val Chars: Alphabet = Alphabet(
+    TokenServe.Face(TokenServe.wordOk, Some(0), col("_oov"),
+      nTok = "n_bpe", nUnk = "n_oov"),
+    CharSeg, length, "n_chars",
+    words => words.select(explode(expr(CharSeg)).as("ch"))
+      .distinct().collect().map(_.getString(0)).toSet,
+    pieceVocab)
+
+  /** Byte-level BPE (the GPT-2/Llama shape — see the byte-level
+    * section below): symbols are the UTF-8 bytes of each word as
+    * 2-char uppercase hex, only empty words drop, the space byte
+    * (id 32) sits between words, and every word is encodable. The
+    * unknown flag is a piece missing from [[byteVocab]], so the
+    * structural-zero OOV claim is checked against the vocabulary on
+    * every run rather than asserted. Decode joins the hex pieces and
+    * converts bytes to UTF-8 once per document; an unknown id decodes
+    * to U+FFFD's bytes.
+    */
+  val Bytes: Alphabet = Alphabet(
+    TokenServe.Face(col("word") =!= "", Some(32),
+      col("token_id").isNull.cast("long"), nTok = "n_bpe", nUnk = "n_oov",
+      unknownPiece = "EFBFBD", finish = t => decode(unhex(t), "UTF-8")),
+    "regexp_extract_all(hex(encode(word, 'UTF-8')), '..', 0)",
+    octet_length, "n_bytes",
+    _ => (0 until 256).map(b => f"$b%02X").toSet,
+    (rules, _) => byteVocab(rules))
 
   private val rulesSchema = StructType(Seq(
     StructField("rank", IntegerType, nullable = false),
@@ -94,16 +143,15 @@ object Bpe {
     * merge applied.
     */
   private def train(docs: DataFrame, textCol: String, nMerges: Int,
-                    maxDriverWords: Int): (Seq[Row], DataFrame) = {
+                    maxDriverWords: Int,
+                    alphabet: Alphabet): (Seq[Row], DataFrame) = {
     require(nMerges >= 1, "nMerges must be positive")
     // one corpus pass → vocabulary-sized (word, freq), as "<w><o><r><d>"
-    val words0 = docs
-      .select(explode(split(col(textCol), " ")).as("word"))
-      .filter(wordOk)
+    val words0 = TokenServe.words(docs, textCol, alphabet.face.guard)
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
       .select(col("word"), concat(lit("<"),
-        concat_ws("><", expr("filter(split(word, ''), x -> x <> '')")),
-        lit(">")).as("s"), col("n"))
+        concat_ws("><", expr(alphabet.segment)), lit(">")).as("s"),
+        col("n"))
       .localCheckpoint()
 
     if (words0.count() <= maxDriverWords) trainInMemory(words0, nMerges)
@@ -352,10 +400,11 @@ object Bpe {
     * reuse the materialized result instead of re-training).
     */
   def trainShared(docs: DataFrame, textCol: String, nMerges: Int,
-                  maxDriverWords: Int = DefaultMaxDriverWords)
-      : (DataFrame, DataFrame) = {
+                  maxDriverWords: Int = DefaultMaxDriverWords,
+                  alphabet: Alphabet = Chars): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
-    val (rules, words) = train(docs, textCol, nMerges, maxDriverWords)
+    val (rules, words) =
+      train(docs, textCol, nMerges, maxDriverWords, alphabet)
     val rulesDf = spark.createDataFrame(
       spark.sparkContext.parallelize(rules, 1), rulesSchema)
     (rulesDf, words.localCheckpoint())
@@ -368,8 +417,9 @@ object Bpe {
     * every word has collapsed to a single symbol.
     */
   def learnMerges(docs: DataFrame, textCol: String, nMerges: Int,
-                  maxDriverWords: Int = DefaultMaxDriverWords): DataFrame =
-    trainShared(docs, textCol, nMerges, maxDriverWords)._1
+                  maxDriverWords: Int = DefaultMaxDriverWords,
+                  alphabet: Alphabet = Chars): DataFrame =
+    trainShared(docs, textCol, nMerges, maxDriverWords, alphabet)._1
 
   /** Tokenize the corpus under a freshly-trained `nMerges`-rule BPE
     * vocabulary ([[tokenCountsWith]] over [[trainShared]]'s words —
@@ -405,9 +455,7 @@ object Bpe {
                       trainedWords: DataFrame): DataFrame = {
     val vocab = trainedWords.select(col("word"),
       size(split(trim(col("s"), "<>"), "><")).cast("long").as("_nsym"))
-    docs.select(col(idCol).as("doc_id"),
-        explode(split(col(textCol), " ")).as("word"))
-      .filter(wordOk)
+    TokenServe.docWords(docs, idCol, textCol, TokenServe.wordOk)
       .join(vocab, Seq("word"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"),
@@ -471,55 +519,27 @@ object Bpe {
     syms
   }
 
-  /** Tokenize text under an ALREADY-TRAINED vocabulary by actually
-    * APPLYING the learned merges to each word — the production
-    * tokenizer serve face, vs [[tokenCountsWith]]'s lookup-with-
-    * char-fallback (which charges every out-of-vocabulary word its
-    * full character count: honest for budgeting, but an upper bound).
-    * Here an unseen word is greedily segmented into learned sub-words
-    * ([[encodeLen]] — provably identical to rank-order merge replay,
-    * so a SQL engine oracles it), and `n_oov` narrows to its real
-    * meaning: words containing a CHARACTER the training corpus never
-    * saw (the only case a merge-applying tokenizer cannot segment —
-    * where a byte-fallback tokenizer would switch to bytes).
-    *
-    * Output: `(doc_id, n_words, n_chars, n_bpe, n_oov, compression)` —
-    * same schema and emit-nothing-for-empty-docs contract as
-    * [[tokenCountsWith]]; on the training corpus itself the two agree
-    * exactly with `n_oov = 0` (BpeSpec pins this).
-    *
-    * Scale: the merge table (`nMerges` rows) and the training alphabet
-    * (charset-sized) broadcast from the driver; encoding runs ONCE per
-    * DISTINCT word of the scoring corpus (vocabulary-sized
-    * `mapPartitions` — sublinear in corpus bytes, the same economics
-    * as training), and the corpus word stream equi-joins the encoded
-    * vocabulary. Character segmentation stays engine-defined
-    * (`split(word, '')` on the executor) so driver and oracle agree on
-    * what a character is.
-    */
   /** The encoded DISTINCT-word vocabulary of `docs`' word stream:
-    * `(word, _nsym, _oov, _seg)` where `_seg` is the bracketed
+    * `(word, _nsym, _oov, _seg, _syms)` where `_seg` is the bracketed
     * segmentation (`"<lo><w>"` — the exact `s` representation the
-    * training loop and the SQL oracle use). Vocabulary-sized; shared
-    * by [[encodeTokenCountsWith]] and [[encodeSegments]].
+    * training loop and the SQL oracle use), `_syms` its symbols, and
+    * `_oov` flags a word with a base symbol outside
+    * `alphabet.symbols`. Vocabulary-sized; shared by every encode
+    * face.
     */
   private def encodedVocab(docs: DataFrame, textCol: String,
-                           rules: DataFrame,
-                           trainedWords: DataFrame): DataFrame = {
+                           rules: DataFrame, trainedWords: DataFrame,
+                           alphabet: Alphabet): DataFrame = {
     val spark = docs.sparkSession
     val ranks: Map[(String, String), Int] = rules
       .select(col("rank"), col("lhs"), col("rhs")).collect()
       .map(r => (r.getString(1), r.getString(2)) -> r.getInt(0)).toMap
-    val alphabet: Set[String] = trainedWords
-      .select(explode(expr("filter(split(word, ''), x -> x <> '')")).as("ch"))
-      .distinct().collect().map(_.getString(0)).toSet
+    val known = alphabet.symbols(trainedWords)
     val bcRanks = spark.sparkContext.broadcast(ranks)
-    val bcAlpha = spark.sparkContext.broadcast(alphabet)
+    val bcAlpha = spark.sparkContext.broadcast(known)
     import spark.implicits._
-    docs.select(explode(split(col(textCol), " ")).as("word"))
-      .filter(wordOk)
-      .distinct()
-      .withColumn("_chars", expr("filter(split(word, ''), x -> x <> '')"))
+    TokenServe.distinctWords(docs, textCol, alphabet.face.guard)
+      .withColumn("_chars", expr(alphabet.segment))
       .as[(String, Seq[String])]
       .mapPartitions { it =>
         val rk = bcRanks.value
@@ -536,27 +556,43 @@ object Bpe {
       }.toDF("word", "_nsym", "_oov", "_seg", "_syms")
   }
 
+  /** Tokenize text under an ALREADY-TRAINED vocabulary by actually
+    * APPLYING the learned merges to each word — the production
+    * tokenizer serve face, vs [[tokenCountsWith]]'s lookup-with-
+    * char-fallback (which charges every out-of-vocabulary word its
+    * full character count: honest for budgeting, but an upper bound).
+    * Here an unseen word is greedily segmented into learned sub-words
+    * ([[encodeSyms]] — provably identical to rank-order merge replay,
+    * so a SQL engine oracles it), and `n_oov` narrows to its real
+    * meaning: words containing a base symbol the alphabet cannot name
+    * (for chars, a CHARACTER the training corpus never saw — where a
+    * byte-fallback tokenizer would switch to bytes; for bytes, never).
+    *
+    * Output: `(doc_id, n_words, <lengthName>, n_bpe, n_oov,
+    * compression)` with `compression = <lengthName> / n_bpe` — chars
+    * for [[Chars]] (same schema and emit-nothing-for-empty-docs
+    * contract as [[tokenCountsWith]]; on the training corpus itself
+    * the two agree exactly with `n_oov = 0`, BpeSpec pins this), bytes
+    * for [[Bytes]] (what a byte-level tokenizer compresses).
+    *
+    * Scale: the merge table (`nMerges` rows) and the base symbol set
+    * broadcast from the driver; encoding runs ONCE per DISTINCT word
+    * of the scoring corpus, and the corpus word stream joins the
+    * encoded vocabulary ([[TokenServe.counts]]).
+    */
   def encodeTokenCountsWith(docs: DataFrame, idCol: String, textCol: String,
-                            rules: DataFrame,
-                            trainedWords: DataFrame): DataFrame = {
-    val tok = docs.select(col(idCol).as("doc_id"),
-        explode(split(col(textCol), " ")).as("word"))
-      .filter(wordOk)
-    val encoded = encodedVocab(docs, textCol, rules, trainedWords)
+                            rules: DataFrame, trainedWords: DataFrame,
+                            alphabet: Alphabet = Chars): DataFrame = {
+    val encoded = encodedVocab(docs, textCol, rules, trainedWords, alphabet)
       .select(col("word"), col("_nsym"), col("_oov"))
-    // SHUFFLE_HASH on the vocab side: the mapPartitions encode erases
-    // size stats, and Spark otherwise broadcasts the post-explode
-    // CORPUS stream (the Generate-broadcast trap — explode fan-out is
-    // invisible to size estimation). The hint builds on the
-    // vocabulary-sized side, never sorts, and holds at any vocab size.
-    tok.join(encoded.hint("shuffle_hash"), Seq("word"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_words"),
-        sum(length(col("word"))).as("n_chars"),
+    val n = alphabet.lengthName
+    TokenServe.counts(docs, idCol, textCol, alphabet.face, encoded, Seq(
+        count(lit(1)).as("n_words"),
+        sum(alphabet.length(col("word"))).as(n),
         sum(col("_nsym")).as("n_bpe"),
-        sum(col("_oov")).as("n_oov"))
+        sum(col("_oov")).as("n_oov")))
       .withColumn("compression",
-        round(col("n_chars").cast("double") / col("n_bpe"), 4))
+        round(col(n).cast("double") / col("n_bpe"), 4))
   }
 
   /** The tokenizer's ACTUAL output: the per-distinct-word segmentation
@@ -570,8 +606,9 @@ object Bpe {
     * makes it SQL-oracle-able symbol for symbol.
     */
   def encodeSegments(docs: DataFrame, textCol: String, rules: DataFrame,
-                     trainedWords: DataFrame): DataFrame =
-    encodedVocab(docs, textCol, rules, trainedWords)
+                     trainedWords: DataFrame,
+                     alphabet: Alphabet = Chars): DataFrame =
+    encodedVocab(docs, textCol, rules, trainedWords, alphabet)
       .select(col("word"), col("_nsym").as("n_sym"),
         col("_oov").as("oov"), col("_seg").as("segmented"))
 
@@ -593,8 +630,7 @@ object Bpe {
     val spark = rules.sparkSession
     import spark.implicits._
     val alphaIds = trainedWords
-      .select(explode(expr("filter(split(word, ''), x -> x <> '')"))
-        .as("piece"))
+      .select(explode(expr(CharSeg)).as("piece"))
       .distinct()
       .select(col("piece"),
         row_number().over(org.apache.spark.sql.expressions.Window
@@ -627,11 +663,11 @@ object Bpe {
     * pins the roundtrip, q214 oracles it through disk).
     */
   def exportArtifacts(rules: DataFrame, trainedWords: DataFrame,
-                      path: String): Unit = {
+                      path: String, alphabet: Alphabet = Chars): Unit = {
     rules.orderBy(col("rank"))
       .select(concat_ws(" ", col("lhs"), col("rhs")).as("value"))
       .coalesce(1).write.mode("overwrite").text(s"$path/merges")
-    pieceVocab(rules, trainedWords)
+    alphabet.vocab(rules, trainedWords)
       .write.mode("overwrite").parquet(s"$path/vocab")
   }
 
@@ -703,75 +739,40 @@ object Bpe {
 
   /** The pretraining artifact itself: each document as its flat
     * token-ID sequence under an already-trained vocabulary —
-    * `(doc_id, ids, n_oov, n_bpe)` with id 0 interleaved between
-    * words ([[pieceVocab]]'s whitespace token) and `-1` for a piece
-    * the vocabulary cannot name (a single character the training
-    * corpus never saw — the byte-fallback seam; such words are
-    * tallied per occurrence in `n_oov`). `n_bpe = size(ids)` — the
+    * `(doc_id, ids, n_oov, n_bpe)` with the alphabet's boundary id
+    * interleaved between words (id 0, [[pieceVocab]]'s whitespace
+    * token, for chars; the space byte 32 for bytes) and `-1` for a
+    * piece the vocabulary cannot name (a single character the
+    * training corpus never saw — the byte-fallback seam; such words
+    * are tallied per occurrence in `n_oov`). `n_bpe = size(ids)` — the
     * true context-window cost including whitespace tokens. Documents
     * with no clean word emit nothing (the [[tokenCountsWith]]
-    * convention).
-    *
-    * Scale: segmentation and id lookup run ONCE per DISTINCT word
-    * (vocabulary-sized; the piece→id table broadcasts); the corpus
-    * word stream equi-joins the encoded vocabulary with the build
-    * hinted onto the vocab side (the Generate-fan-out estimation trap
-    * — see [[encodeTokenCountsWith]]); per-doc assembly is one keyed
-    * aggregation with an in-row sort over the doc's own words — no
-    * windows, nothing beyond document length anywhere.
+    * convention). Assembly is [[TokenServe.encodeIds]].
     */
   def encodeIds(docs: DataFrame, idCol: String, textCol: String,
-                rules: DataFrame, trainedWords: DataFrame): DataFrame = {
-    val vocab = pieceVocab(rules, trainedWords)
-    val wordIds = encodedVocab(docs, textCol, rules, trainedWords)
-      .select(col("word"), col("_oov"),
-        posexplode(col("_syms")).as(Seq("_spos", "piece")))
-      .join(broadcast(vocab), Seq("piece"), "left")
-      .groupBy(col("word"))
-      .agg(max(col("_oov")).as("_oov"),
-        sort_array(collect_list(struct(col("_spos"),
-          coalesce(col("token_id"), lit(-1)).as("id")))).as("_ps"))
-      .select(col("word"), col("_oov"),
-        expr("transform(_ps, p -> p.id)").as("_wids"))
-    docs.select(col(idCol).as("doc_id"),
-        posexplode(split(col(textCol), " ")).as(Seq("_wpos", "word")))
-      .filter(wordOk)
-      .join(wordIds.hint("shuffle_hash"), Seq("word"))
-      .groupBy(col("doc_id"))
-      .agg(
-        collect_list(struct(col("_wpos"), col("_wids"))).as("_ws"),
-        sum(col("_oov")).as("n_oov"))
-      // one native pass replaces sort_array + flatten/transform/concat
-      // (all CodegenFallback, two allocations per word) — same bytes,
-      // see [[graft.functions.FlattenWordIds]]
-      .select(col("doc_id"),
-        graft.functions.TokenExprs.flattenWordIds(col("_ws"), 0).as("ids"),
-        col("n_oov"))
-      .withColumn("n_bpe", size(col("ids")).cast("long"))
+                rules: DataFrame, trainedWords: DataFrame,
+                alphabet: Alphabet = Chars): DataFrame = {
+    val vocab = alphabet.vocab(rules, trainedWords)
+    TokenServe.encodeIds(docs, idCol, textCol, alphabet.face,
+      encodedVocab(docs, textCol, rules, trainedWords, alphabet)
+        .select(col("word"), col("_oov"), TokenServe.pieces(col("_syms"))),
+      vocab)
   }
 
   /** Inverse of [[encodeIds]]: token-id sequences back to text —
-    * `(doc_id, text_decoded)`. Id 0 decodes to the space, an id the
-    * vocabulary does not know (e.g. the `-1` OOV marker) to U+FFFD,
-    * so `decode(encode(d)) == d`'s clean word stream exactly when the
-    * document had no OOV word (the q202 roundtrip gate proves it
-    * per-document). Same scale shape as encode: broadcast vocab, one
-    * keyed aggregation, in-row sort.
+    * `(doc_id, text_decoded)`. For chars, id 0 decodes to the space
+    * and an id the vocabulary does not know (e.g. the `-1` OOV marker)
+    * to U+FFFD, so `decode(encode(d)) == d`'s clean word stream
+    * exactly when the document had no OOV word (the q202 roundtrip
+    * gate proves it per-document); for bytes the roundtrip is
+    * byte-exact on any text (q220). Assembly is
+    * [[TokenServe.decodeIds]].
     */
   def decodeIds(encoded: DataFrame, idCol: String, idsCol: String,
-                rules: DataFrame, trainedWords: DataFrame): DataFrame = {
-    val vocab = pieceVocab(rules, trainedWords)
-    encoded.select(col(idCol).as("doc_id"),
-        posexplode(col(idsCol)).as(Seq("_pos", "token_id")))
-      .join(broadcast(vocab), Seq("token_id"), "left")
-      .groupBy(col("doc_id"))
-      .agg(collect_list(struct(col("_pos"),
-        coalesce(col("piece"), lit("�")).as("p"))).as("_ps"))
-      // native assembly — see [[graft.functions.ConcatSortedPieces]]
-      .select(col("doc_id"),
-        graft.functions.TokenExprs.concatSortedPieces(col("_ps"))
-          .as("text_decoded"))
-  }
+                rules: DataFrame, trainedWords: DataFrame,
+                alphabet: Alphabet = Chars): DataFrame =
+    TokenServe.decodeIds(encoded, idCol, idsCol,
+      alphabet.vocab(rules, trainedWords), alphabet.face)
 
   /** Shared CTE chain `w0 … w<nMerges>` (each `(word, s, n)`) with the
     * per-round pair-count / argmax / replace, in lockstep with the
@@ -1065,9 +1066,10 @@ object Bpe {
   // inside the SAME bracketed representation ("hé" → "<68><C3><A9>"),
   // which buys three things at once:
   //
-  //  - the whole merge machinery is reused VERBATIM — in-memory
-  //    trainer, distributed trainer, and the SQL oracle's replace
-  //    chain never look inside a symbol;
+  //  - the whole train/encode/decode/export surface is the char one,
+  //    called with the [[Bytes]] alphabet — in-memory trainer,
+  //    distributed trainer, encoder and the SQL oracle's replace chain
+  //    never look inside a symbol;
   //  - no sentinel guard: hex symbols cannot contain '<'/'>', so the
   //    byte path accepts the words the char path must discard (they
   //    just become bytes 3C/3E);
@@ -1079,50 +1081,6 @@ object Bpe {
   // The whitespace token needs no reserved id: space IS byte 0x20
   // (id 32 by construction), so decode(encode(d)) is byte-exact on
   // any clean text.
-
-  /** Byte-path word guard: only empty words drop (no sentinel
-    * exclusion — see the section note). Exposed like [[wordOk]] so
-    * roundtrip gates recompose the exact word stream.
-    */
-  private[graft] def byteWordOk = col("word") =!= ""
-
-  /** The bracketed byte segmentation of the `word` column. */
-  private val byteSegExpr =
-    "regexp_extract_all(hex(encode(word, 'UTF-8')), '..', 0)"
-
-  private def trainBytes(docs: DataFrame, textCol: String, nMerges: Int,
-                         maxDriverWords: Int): (Seq[Row], DataFrame) = {
-    require(nMerges >= 1, "nMerges must be positive")
-    // one corpus pass → vocabulary-sized (word, freq), bytes as hex
-    val words0 = docs
-      .select(explode(split(col(textCol), " ")).as("word"))
-      .filter(byteWordOk)
-      .groupBy(col("word")).agg(count(lit(1)).as("n"))
-      .select(col("word"), concat(lit("<"),
-        concat_ws("><", expr(byteSegExpr)), lit(">")).as("s"), col("n"))
-      .localCheckpoint()
-    if (words0.count() <= maxDriverWords) trainInMemory(words0, nMerges)
-    else trainDistributed(words0, nMerges)
-  }
-
-  /** Byte-level [[trainShared]]: same hybrid merge loop, byte
-    * segmentation, no sentinel guard. Same scale economics — one
-    * corpus pass, everything after is vocabulary-sized.
-    */
-  def trainSharedBytes(docs: DataFrame, textCol: String, nMerges: Int,
-                       maxDriverWords: Int = DefaultMaxDriverWords)
-      : (DataFrame, DataFrame) = {
-    val spark = docs.sparkSession
-    val (rules, words) = trainBytes(docs, textCol, nMerges, maxDriverWords)
-    val rulesDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(rules, 1), rulesSchema)
-    (rulesDf, words.localCheckpoint())
-  }
-
-  /** Byte-level [[learnMerges]]. */
-  def learnMergesBytes(docs: DataFrame, textCol: String, nMerges: Int,
-                       maxDriverWords: Int = DefaultMaxDriverWords): DataFrame =
-    trainSharedBytes(docs, textCol, nMerges, maxDriverWords)._1
 
   /** Byte-level token-id table `(piece, token_id)`: ids 0..255 ARE the
     * byte values — fixed 256-entry base regardless of what the
@@ -1142,130 +1100,6 @@ object Bpe {
         (col("rank") + lit(255)).cast("int").as("id")))
       .groupBy(col("piece"))
       .agg(min(col("id")).cast("int").as("token_id"))
-  }
-
-  /** Encoded DISTINCT-word vocabulary of `docs`' word stream under the
-    * byte-level rules: `(word, _nsym, _syms)`. [[encodeSyms]] applies
-    * unchanged — min-rank-first over hex symbols is the same provably-
-    * sequential replay, so the SQL oracle replays it rank by rank. No
-    * alphabet membership check: every base symbol is one of the 256
-    * bytes by construction.
-    */
-  private def encodedVocabBytes(docs: DataFrame, textCol: String,
-                                rules: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val ranks: Map[(String, String), Int] = rules
-      .select(col("rank"), col("lhs"), col("rhs")).collect()
-      .map(r => (r.getString(1), r.getString(2)) -> r.getInt(0)).toMap
-    val bcRanks = spark.sparkContext.broadcast(ranks)
-    import spark.implicits._
-    docs.select(explode(split(col(textCol), " ")).as("word"))
-      .filter(byteWordOk)
-      .distinct()
-      .withColumn("_bytes", expr(byteSegExpr))
-      .as[(String, Seq[String])]
-      .mapPartitions { it =>
-        val rk = bcRanks.value
-        it.map { case (w, bytes) =>
-          val syms = encodeSyms(bytes.toArray, rk)
-          (w, syms.length.toLong, syms.toSeq)
-        }
-      }.toDF("word", "_nsym", "_syms")
-  }
-
-  /** Byte-level [[encodeTokenCountsWith]]:
-    * `(doc_id, n_words, n_bytes, n_bpe, n_oov, compression)` — the
-    * denominator is BYTES (what a byte-level tokenizer compresses) and
-    * `n_oov` is emitted as the structural 0 the byte alphabet
-    * guarantees, kept in the schema so gates PIN the guarantee rather
-    * than assume it. Same join economics as the char face (encode once
-    * per distinct word, SHUFFLE_HASH on the vocab side — the
-    * Generate-fan-out estimation trap).
-    */
-  def encodeTokenCountsBytes(docs: DataFrame, idCol: String,
-                             textCol: String, rules: DataFrame): DataFrame = {
-    val tok = docs.select(col(idCol).as("doc_id"),
-        explode(split(col(textCol), " ")).as("word"))
-      .filter(byteWordOk)
-    val encoded = encodedVocabBytes(docs, textCol, rules)
-      .select(col("word"), col("_nsym"))
-    tok.join(encoded.hint("shuffle_hash"), Seq("word"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_words"),
-        sum(expr("octet_length(word)")).as("n_bytes"),
-        sum(col("_nsym")).as("n_bpe"))
-      .withColumn("n_oov", lit(0L))
-      .withColumn("compression",
-        round(col("n_bytes").cast("double") / col("n_bpe"), 4))
-  }
-
-  /** Byte-level [[encodeIds]]: `(doc_id, ids, n_oov, n_bpe)` with byte
-    * id 32 (space) interleaved between words. `n_oov` is computed
-    * HONESTLY from the vocab join (a null id would surface as −1 and
-    * count), so the structural-zero claim is verified per run, not
-    * asserted. Same shape: per-distinct-word encode, broadcast vocab,
-    * one keyed aggregation with in-row sorts.
-    */
-  def encodeIdsBytes(docs: DataFrame, idCol: String, textCol: String,
-                     rules: DataFrame): DataFrame = {
-    val vocab = byteVocab(rules)
-    val wordIds = encodedVocabBytes(docs, textCol, rules)
-      .select(col("word"), posexplode(col("_syms")).as(Seq("_spos", "piece")))
-      .join(broadcast(vocab), Seq("piece"), "left")
-      .groupBy(col("word"))
-      .agg(max(col("token_id").isNull.cast("long")).as("_oov"),
-        sort_array(collect_list(struct(col("_spos"),
-          coalesce(col("token_id"), lit(-1)).as("id")))).as("_ps"))
-      .select(col("word"), col("_oov"),
-        expr("transform(_ps, p -> p.id)").as("_wids"))
-    docs.select(col(idCol).as("doc_id"),
-        posexplode(split(col(textCol), " ")).as(Seq("_wpos", "word")))
-      .filter(byteWordOk)
-      .join(wordIds.hint("shuffle_hash"), Seq("word"))
-      .groupBy(col("doc_id"))
-      .agg(
-        collect_list(struct(col("_wpos"), col("_wids"))).as("_ws"),
-        sum(col("_oov")).as("n_oov"))
-      // native assembly — see [[graft.functions.FlattenWordIds]]
-      .select(col("doc_id"),
-        graft.functions.TokenExprs.flattenWordIds(col("_ws"), 32).as("ids"),
-        col("n_oov"))
-      .withColumn("n_bpe", size(col("ids")).cast("long"))
-  }
-
-  /** Inverse of [[encodeIdsBytes]]: pieces are hex strings, so a
-    * document decodes by joining its pieces in order into ONE hex
-    * string (the space token contributes "20") and converting bytes →
-    * UTF-8 once per row. An unknown id decodes to U+FFFD's bytes.
-    */
-  def decodeIdsBytes(encoded: DataFrame, idCol: String, idsCol: String,
-                     rules: DataFrame): DataFrame = {
-    val vocab = byteVocab(rules)
-    encoded.select(col(idCol).as("doc_id"),
-        posexplode(col(idsCol)).as(Seq("_pos", "token_id")))
-      .join(broadcast(vocab), Seq("token_id"), "left")
-      .groupBy(col("doc_id"))
-      .agg(collect_list(struct(col("_pos"),
-        coalesce(col("piece"), lit("EFBFBD")).as("p"))).as("_ps"))
-      // native assembly — see [[graft.functions.ConcatSortedPieces]]
-      .select(col("doc_id"),
-        decode(unhex(
-          graft.functions.TokenExprs.concatSortedPieces(col("_ps"))),
-          "UTF-8").as("text_decoded"))
-  }
-
-  /** Byte-level [[exportArtifacts]]: merges.txt keeps the exact GPT-2
-    * line shape (rank-ordered `lhs rhs`; symbols are hex strings, so
-    * still space-free), the vocab parquet is [[byteVocab]].
-    * [[importMerges]] reads it back unchanged. For a merges.txt a REAL
-    * GPT-2 loader consumes (symbols in the bytes_to_unicode alphabet,
-    * not hex), use [[exportMergesGpt2]].
-    */
-  def exportArtifactsBytes(rules: DataFrame, path: String): Unit = {
-    rules.orderBy(col("rank"))
-      .select(concat_ws(" ", col("lhs"), col("rhs")).as("value"))
-      .coalesce(1).write.mode("overwrite").text(s"$path/merges")
-    byteVocab(rules).write.mode("overwrite").parquet(s"$path/vocab")
   }
 
   /** GPT-2's `bytes_to_unicode` table (public: openai/gpt-2
@@ -1378,7 +1212,7 @@ object Bpe {
        |FROM ($union)""".stripMargin
   }
 
-  /** The DuckDB replay of [[learnMergesBytes]]. */
+  /** The DuckDB replay of [[learnMerges]] over [[Bytes]]. */
   def byteOracleSql(nMerges: Int, trainWhere: String = "",
                     textSql: String = "text"): String =
     s"WITH ${byteRoundsCte(nMerges, trainWhere, textSql)}\n" +
@@ -1396,7 +1230,7 @@ object Bpe {
          |        FROM e${r - 1}, r$r)""".stripMargin
     }.mkString(",\n")
 
-  /** The DuckDB replay of [[encodeTokenCountsBytes]]: train on the
+  /** The DuckDB replay of [[encodeTokenCountsWith]] over [[Bytes]]: train on the
     * `trainWhere` slice, byte-segment the eval stream's distinct
     * words, apply the merges sequentially, aggregate per doc. `n_oov`
     * is the structural 0 — the oracle PREDICTS it; the Spark side's
@@ -1459,7 +1293,7 @@ object Bpe {
       """SELECT rl.rank, rl.lhs, rl.rhs, rl.merged, b.token_id
         |FROM rl JOIN bvoc b ON rl.merged = b.piece""".stripMargin
 
-  /** The DuckDB replay of [[encodeIdsBytes]]' per-document economics +
+  /** The DuckDB replay of [[encodeIds]] over [[Bytes]]: per-document economics +
     * the roundtrip prediction — the byte twin of [[idsOracleSql]].
     * `ids_fp = Σ id·pos` over the flat 1-based stream; the space token
     * is id 32 here (byte 0x20), so its positions contribute

@@ -33,8 +33,9 @@ object TokenizerEval {
     * `unk_ppm = (1e6·n_unk) DIV n_words`.
     *
     * Each input frame carries per-doc `(doc_id, n_words, n_pieces,
-    * n_unk, n_bytes)` — the [[Bpe.encodeTokenCountsBytes]] /
-    * [[WordPiece.tokenCounts]] / [[Unigram.tokenCounts]] shapes
+    * n_unk, n_bytes)` — the [[Bpe.encodeTokenCountsWith]] (over
+    * [[Bpe.Bytes]]) / [[WordPiece.tokenCounts]] / [[Unigram.tokenCounts]]
+    * shapes
     * (bytes joined on where a family does not carry them).
     *
     * Scale: the inputs are the families' distributed per-doc count

@@ -80,6 +80,12 @@ object Unigram {
     */
   val Unk = "[UNK]"
 
+  /** Unigram's serve conventions: the id-1 space token between words,
+    * the segmenter's `unk` flag, plain concatenation on decode.
+    */
+  val face: TokenServe.Face = TokenServe.Face(TokenServe.wordOk, Some(1),
+    col("unk"), nTok = "n_tok", nUnk = "n_unk")
+
   /** Longest candidate piece (SentencePiece's
     * `max_sentencepiece_length` is 16 by default; 4 keeps the oracle's
     * per-position fan-in enumerable while still exercising genuinely
@@ -124,8 +130,7 @@ object Unigram {
     */
   private def words0(docs: DataFrame, textCol: String,
                      maxTrainWordLen: Int): DataFrame =
-    docs.select(explode(split(col(textCol), " ")).as("word"))
-      .filter(Bpe.wordOk)
+    TokenServe.words(docs, textCol, face.guard)
       .filter(length(col("word")) <= maxTrainWordLen)
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
 
@@ -361,9 +366,7 @@ object Unigram {
     val maxChars = maxInputCharsPerWord
     val m = maxPieceLen
     import spark.implicits._
-    docs.select(explode(split(col(textCol), " ")).as("word"))
-      .filter(Bpe.wordOk)
-      .distinct()
+    TokenServe.distinctWords(docs, textCol, face.guard)
       .as[String]
       .mapPartitions { it =>
         val lp = bc.value
@@ -409,25 +412,15 @@ object Unigram {
 
   /** Per-document Unigram economics — `(doc_id, n_words, n_pieces,
     * n_unk)`, the [[WordPiece.tokenCounts]] shape over the Viterbi
-    * segmentation (distinct-word encode + SHUFFLE_HASH-hinted stream
-    * join).
+    * segmentation ([[TokenServe.pieceCounts]]).
     */
   def tokenCounts(docs: DataFrame, idCol: String, textCol: String,
                   model: DataFrame,
                   maxInputCharsPerWord: Int = OracleMaxWordLen,
-                  maxPieceLen: Int = DefaultMaxPieceLen): DataFrame = {
-    val seg = viterbiSegments(docs, textCol, model,
-        maxInputCharsPerWord, maxPieceLen)
-      .select(col("word"), col("n_pieces"), col("unk"))
-    docs.select(col(idCol).as("doc_id"),
-        explode(split(col(textCol), " ")).as("word"))
-      .filter(Bpe.wordOk)
-      .join(seg.hint("shuffle_hash"), Seq("word"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_words"),
-        sum(col("n_pieces")).as("n_pieces"),
-        sum(col("unk").cast("long")).as("n_unk"))
-  }
+                  maxPieceLen: Int = DefaultMaxPieceLen): DataFrame =
+    TokenServe.pieceCounts(docs, idCol, textCol, face,
+      viterbiSegments(docs, textCol, model, maxInputCharsPerWord,
+        maxPieceLen))
 
   // ──────────── subword regularization (X148) ────────────
 
@@ -524,9 +517,7 @@ object Unigram {
     val m = maxPieceLen
     val k = nbest
     import spark.implicits._
-    docs.select(explode(split(col(textCol), " ")).as("word"))
-      .filter(Bpe.wordOk)
-      .distinct()
+    TokenServe.distinctWords(docs, textCol, face.guard)
       .as[String]
       .mapPartitions { it =>
         val lp = bc.value
@@ -601,9 +592,7 @@ object Unigram {
     val k = nbest
     val a0 = alpha
     import spark.implicits._
-    val cands = docs.select(explode(split(col(textCol), " ")).as("word"))
-      .filter(Bpe.wordOk)
-      .distinct()
+    val cands = TokenServe.distinctWords(docs, textCol, face.guard)
       .as[String]
       .mapPartitions { it =>
         val lp = bc.value
@@ -629,7 +618,7 @@ object Unigram {
       }.toDF("word", "_cands", "_wtot")
     docs.select(col(idCol).as("doc_id"),
         posexplode(split(col(textCol), " ")).as(Seq("_wp0", "word")))
-      .filter(Bpe.wordOk)
+      .filter(face.guard)
       .withColumn("wpos", (col("_wp0") + 1).cast("int"))
       .join(cands.hint("shuffle_hash"), Seq("word"))
       .withColumn("_u", conv(substring(md5(concat(
@@ -670,28 +659,20 @@ object Unigram {
     val vocab = pieceVocab(model)
     val seg = sampleSegments(docs, idCol, textCol, model, nbest, alpha,
       maxInputCharsPerWord, maxPieceLen, drawSalt = s":$epoch")
-    seg
+    val perOccurrence = seg
       .select(col("doc_id"), col("wpos"), col("unk"),
-        posexplode(split(col("segmented"), " ")).as(Seq("_spos", "piece")))
+        TokenServe.pieces(split(col("segmented"), " ")))
       .join(broadcast(vocab), Seq("piece"), "left")
       .groupBy(col("doc_id"), col("wpos"))
-      .agg(max(col("unk")).as("_unk"),
+      .agg(max(face.unknown).as(face.unkCol),
         collect_list(struct(col("_spos"),
           coalesce(col("token_id"), lit(-1)).as("id"))).as("_ps"))
       // native assembly (this agg is per word OCCURRENCE — corpus-
       // scale, unlike the vocab-bounded analogues) — see
       // [[graft.functions.SortedStructIds]]
-      .select(col("doc_id"), col("wpos"), col("_unk"),
+      .select(col("doc_id"), col("wpos"), col(face.unkCol),
         graft.functions.TokenExprs.sortedStructIds(col("_ps")).as("_wids"))
-      .groupBy(col("doc_id"))
-      .agg(
-        collect_list(struct(col("wpos"), col("_wids"))).as("_ws"),
-        sum(col("_unk").cast("long")).as("n_unk"))
-      // native assembly — see [[graft.functions.FlattenWordIds]]
-      .select(col("doc_id"),
-        graft.functions.TokenExprs.flattenWordIds(col("_ws"), 1).as("ids"),
-        col("n_unk"))
-      .withColumn("n_tok", size(col("ids")).cast("long"))
+    TokenServe.assemble(perOccurrence, "wpos", face)
   }
 
   // ─────────────────── id / artifact surface (X145) ───────────────────
@@ -984,38 +965,19 @@ object Unigram {
     * id-1 space token interleaved between words ([[pieceVocab]]'s
     * boundary convention, which is what makes [[decodeIds]] ∘
     * [[encodeIds]] the identity on UNK-free text) and id 0 for
-    * `[UNK]` words. Same distinct-word-encode + SHUFFLE_HASH stream
-    * join economics as the other two families.
+    * `[UNK]` words. Assembly is [[TokenServe.encodeIds]].
     */
   def encodeIds(docs: DataFrame, idCol: String, textCol: String,
                 model: DataFrame,
                 maxInputCharsPerWord: Int = OracleMaxWordLen,
                 maxPieceLen: Int = DefaultMaxPieceLen): DataFrame = {
     val vocab = pieceVocab(model)
-    val wordIds = viterbiSegments(docs, textCol, model,
-        maxInputCharsPerWord, maxPieceLen)
-      .select(col("word"), col("unk"),
-        posexplode(split(col("segmented"), " ")).as(Seq("_spos", "piece")))
-      .join(broadcast(vocab), Seq("piece"), "left")
-      .groupBy(col("word"))
-      .agg(max(col("unk")).as("_unk"),
-        sort_array(collect_list(struct(col("_spos"),
-          coalesce(col("token_id"), lit(-1)).as("id")))).as("_ps"))
-      .select(col("word"), col("_unk"),
-        expr("transform(_ps, p -> p.id)").as("_wids"))
-    docs.select(col(idCol).as("doc_id"),
-        posexplode(split(col(textCol), " ")).as(Seq("_wpos", "word")))
-      .filter(Bpe.wordOk)
-      .join(wordIds.hint("shuffle_hash"), Seq("word"))
-      .groupBy(col("doc_id"))
-      .agg(
-        collect_list(struct(col("_wpos"), col("_wids"))).as("_ws"),
-        sum(col("_unk").cast("long")).as("n_unk"))
-      // native assembly — see [[graft.functions.FlattenWordIds]]
-      .select(col("doc_id"),
-        graft.functions.TokenExprs.flattenWordIds(col("_ws"), 1).as("ids"),
-        col("n_unk"))
-      .withColumn("n_tok", size(col("ids")).cast("long"))
+    TokenServe.encodeIds(docs, idCol, textCol, face,
+      viterbiSegments(docs, textCol, model, maxInputCharsPerWord,
+          maxPieceLen)
+        .select(col("word"), col("unk"),
+          TokenServe.pieces(split(col("segmented"), " "))),
+      vocab)
   }
 
   /** Inverse of [[encodeIds]]: id 1 decodes to the space, `[UNK]`'s
@@ -1025,19 +987,8 @@ object Unigram {
     * equals `d`'s clean word stream exactly when `n_unk = 0`.
     */
   def decodeIds(encoded: DataFrame, idCol: String, idsCol: String,
-                model: DataFrame): DataFrame = {
-    val vocab = pieceVocab(model)
-    encoded.select(col(idCol).as("doc_id"),
-        posexplode(col(idsCol)).as(Seq("_pos", "token_id")))
-      .join(broadcast(vocab), Seq("token_id"), "left")
-      .groupBy(col("doc_id"))
-      .agg(collect_list(struct(col("_pos"),
-        coalesce(col("piece"), lit("�")).as("p"))).as("_ps"))
-      // native assembly — see [[graft.functions.ConcatSortedPieces]]
-      .select(col("doc_id"),
-        graft.functions.TokenExprs.concatSortedPieces(col("_ps"))
-          .as("text_decoded"))
-  }
+                model: DataFrame): DataFrame =
+    TokenServe.decodeIds(encoded, idCol, idsCol, pieceVocab(model), face)
 
   // ──────────────────── DuckDB oracle builders ────────────────────
 

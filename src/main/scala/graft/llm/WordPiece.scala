@@ -56,6 +56,14 @@ object WordPiece {
   /** BERT's unknown-word token. */
   val Unk = "[UNK]"
 
+  /** WordPiece's serve conventions: no boundary id between words (the
+    * bare-vs-`##` piece split carries word boundaries), the
+    * segmenter's `unk` flag, and the `##` decode join rule.
+    */
+  val face: TokenServe.Face = TokenServe.Face(TokenServe.wordOk, None,
+    col("unk"), nTok = "n_wp", nUnk = "n_unk", wordpiece = true,
+    finish = ltrim)
+
   private val rulesSchema = StructType(Seq(
     StructField("rank", IntegerType, nullable = false),
     StructField("lhs", StringType, nullable = false),
@@ -77,8 +85,7 @@ object WordPiece {
 
   /** One corpus pass → the position-aware `(word, s, n)` table. */
   private def words0(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(split(col(textCol), " ")).as("word"))
-      .filter(Bpe.wordOk)
+    TokenServe.words(docs, textCol, face.guard)
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
       .withColumn("_t", expr("filter(split(word, ''), x -> x <> '')"))
       .select(col("word"), expr(wpSegExpr).as("s"), col("n"))
@@ -417,9 +424,7 @@ object WordPiece {
     val maxLen = pieces.map(raw(_).length).max
     val maxChars = maxInputCharsPerWord
     import spark.implicits._
-    docs.select(explode(split(col(textCol), " ")).as("word"))
-      .filter(Bpe.wordOk)
-      .distinct()
+    TokenServe.distinctWords(docs, textCol, face.guard)
       .as[String]
       .mapPartitions { it =>
         val init = bcInit.value
@@ -588,42 +593,19 @@ object WordPiece {
     * not to the tokenizer). Documents with no clean word emit
     * nothing (the [[tokenCounts]] convention).
     *
-    * Scale: segmentation and id lookup run ONCE per DISTINCT word
-    * (vocabulary-sized, vocab broadcast); the corpus word stream
-    * equi-joins the encoded vocabulary with the build hinted onto
-    * the vocab side (the Generate-fan-out estimation trap); per-doc
-    * assembly is one keyed aggregation with an in-row sort.
+    * Assembly is [[TokenServe.encodeIds]].
     */
   def encodeIds(docs: DataFrame, idCol: String, textCol: String,
                 rules: DataFrame, trainedWords: DataFrame,
                 maxInputCharsPerWord: Int = DefaultMaxInputCharsPerWord)
       : DataFrame = {
     val vocab = pieceVocab(rules, trainedWords)
-    val wordIds = encodeSegments(docs, textCol, rules, trainedWords,
-        maxInputCharsPerWord)
-      .select(col("word"), col("unk"),
-        posexplode(split(col("segmented"), " ")).as(Seq("_spos", "piece")))
-      .join(broadcast(vocab), Seq("piece"), "left")
-      .groupBy(col("word"))
-      .agg(max(col("unk")).as("_unk"),
-        sort_array(collect_list(struct(col("_spos"),
-          coalesce(col("token_id"), lit(-1)).as("id")))).as("_ps"))
-      .select(col("word"), col("_unk"),
-        expr("transform(_ps, p -> p.id)").as("_wids"))
-    docs.select(col(idCol).as("doc_id"),
-        posexplode(split(col(textCol), " ")).as(Seq("_wpos", "word")))
-      .filter(Bpe.wordOk)
-      .join(wordIds.hint("shuffle_hash"), Seq("word"))
-      .groupBy(col("doc_id"))
-      .agg(
-        collect_list(struct(col("_wpos"), col("_wids"))).as("_ws"),
-        sum(col("_unk").cast("long")).as("n_unk"))
-      // native assembly (no boundary token in WordPiece) — see
-      // [[graft.functions.FlattenWordIds]]
-      .select(col("doc_id"),
-        graft.functions.TokenExprs.flattenWordIdsPlain(col("_ws")).as("ids"),
-        col("n_unk"))
-      .withColumn("n_wp", size(col("ids")).cast("long"))
+    TokenServe.encodeIds(docs, idCol, textCol, face,
+      encodeSegments(docs, textCol, rules, trainedWords,
+          maxInputCharsPerWord)
+        .select(col("word"), col("unk"),
+          TokenServe.pieces(split(col("segmented"), " "))),
+      vocab)
   }
 
   /** Inverse of [[encodeIds]]: id sequences back to text —
@@ -637,45 +619,25 @@ object WordPiece {
     * it as `n_unk = 0`.
     */
   def decodeIds(encoded: DataFrame, idCol: String, idsCol: String,
-                rules: DataFrame, trainedWords: DataFrame): DataFrame = {
-    val vocab = pieceVocab(rules, trainedWords)
-    encoded.select(col(idCol).as("doc_id"),
-        posexplode(col(idsCol)).as(Seq("_pos", "token_id")))
-      .join(broadcast(vocab), Seq("token_id"), "left")
-      .groupBy(col("doc_id"))
-      .agg(collect_list(struct(col("_pos"),
-        coalesce(col("piece"), lit("�")).as("p"))).as("_ps"))
-      // native assembly — see [[graft.functions.ConcatSortedPieces]]
-      .select(col("doc_id"),
-        ltrim(graft.functions.TokenExprs.concatSortedPiecesWp(col("_ps")))
-          .as("text_decoded"))
-  }
+                rules: DataFrame, trainedWords: DataFrame): DataFrame =
+    TokenServe.decodeIds(encoded, idCol, idsCol,
+      pieceVocab(rules, trainedWords), face)
 
   /** Per-document WordPiece economics — `(doc_id, n_words, n_pieces,
     * n_unk)`: an `[UNK]` word contributes 1 piece and tallies in
     * `n_unk` (the face that quantifies what a char-level closed
     * vocabulary LOSES on unicode-bearing corpora — byte-BPE's q219
     * twin is structurally 0 there). Distinct-word encode + stream
-    * join, the [[Bpe.encodeTokenCountsWith]] economics; the join is
-    * SHUFFLE_HASH-hinted on the vocabulary side (the Generate-fan-out
-    * estimation trap).
+    * join, the [[Bpe.encodeTokenCountsWith]] economics
+    * ([[TokenServe.pieceCounts]]).
     */
   def tokenCounts(docs: DataFrame, idCol: String, textCol: String,
                   rules: DataFrame, trainedWords: DataFrame,
                   maxInputCharsPerWord: Int = DefaultMaxInputCharsPerWord)
-      : DataFrame = {
-    val seg = encodeSegments(docs, textCol, rules, trainedWords,
-        maxInputCharsPerWord)
-      .select(col("word"), col("n_pieces"), col("unk"))
-    docs.select(col(idCol).as("doc_id"),
-        explode(split(col(textCol), " ")).as("word"))
-      .filter(Bpe.wordOk)
-      .join(seg.hint("shuffle_hash"), Seq("word"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_words"),
-        sum(col("n_pieces")).as("n_pieces"),
-        sum(col("unk").cast("long")).as("n_unk"))
-  }
+      : DataFrame =
+    TokenServe.pieceCounts(docs, idCol, textCol, face,
+      encodeSegments(docs, textCol, rules, trainedWords,
+        maxInputCharsPerWord))
 
   // ──────────────────── DuckDB oracle builders ────────────────────
 

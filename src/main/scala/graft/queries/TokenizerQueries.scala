@@ -1,10 +1,10 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.SparkEntry.{memoUnit, scratch}
-import graft.llm.{Bpe, Packing, TextAnalysis, WordPiece}
+import graft.llm.{Bpe, Packing, TextAnalysis, TokenServe, WordPiece}
 import graft.ml.Eval
 import graft.queries.Fixtures.t
 
@@ -95,12 +95,15 @@ object TokenizerQueries {
     * read only the rules, the words frame is the `_shared` line.
     */
   private def bpeBytes8(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    memoUnit(s, dir, "bpebytes8")(Bpe.trainSharedBytes(
+    memoUnit(s, dir, "bpebytes8")(Bpe.trainShared(
       unicodeDocs(s, dir).filter(pmod(col("doc_id"), lit(4)) === 0),
-      "text", 8))
+      "text", 8, alphabet = Bpe.Bytes))
 
   private def bpeBytesMerges(s: SparkSession, dir: String): DataFrame =
     bpeBytes8(s, dir)._1
+
+  private def bpeBytesWords(s: SparkSession, dir: String): DataFrame =
+    bpeBytes8(s, dir)._2
 
   /** 8-merge WORDPIECE training over the unicode fixture's
     * doc_id % 4 = 0 slice — the BERT-family twin of [[bpeBytes8]],
@@ -224,20 +227,19 @@ object TokenizerQueries {
 
   /** The ids artifact row: the encoder's two count columns, the
     * position-weighted id fingerprint, and whether decode(encode(d))
-    * equals the doc's `wordOk` words in order (the honest roundtrip).
+    * equals the doc's guarded words in order (the honest roundtrip).
     */
   private def idsRow(docs: DataFrame, enc: DataFrame, dec: DataFrame,
-                     wordOk: Column, nTok: String, nMiss: String): DataFrame = {
-    val expected = docs.select(col("doc_id"),
-        posexplode(split(col("text"), " ")).as(Seq("_wpos", "word")))
-      .filter(wordOk)
+                     face: TokenServe.Face): DataFrame = {
+    val expected =
+      TokenServe.positionedWords(docs, "doc_id", "text", face.guard)
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("_wpos"), col("word"))))
         .as("_ws"))
       .select(col("doc_id"),
         expr("array_join(transform(_ws, x -> x.word), ' ')").as("_exp"))
     enc.join(dec, Seq("doc_id")).join(expected, Seq("doc_id"))
-      .select(col("doc_id"), col(nTok), col(nMiss),
+      .select(col("doc_id"), col(face.nTok), col(face.nUnk),
         expr("aggregate(transform(ids, (x, i) -> CAST(x AS BIGINT) * (i + 1)), " +
           "CAST(0 AS BIGINT), (a, y) -> a + y)").as("ids_fp"),
         (col("text_decoded") === col("_exp")).cast("int")
@@ -249,7 +251,7 @@ object TokenizerQueries {
     */
   val Bpe8 = Shared("_shared:bpe8", bpeWords)
   val Bpe8Slice = Shared("_shared:bpe8slice", bpeSliceWords)
-  val BpeBytes8 = Shared("_shared:bpebytes8", (s, dir) => bpeBytes8(s, dir)._2)
+  val BpeBytes8 = Shared("_shared:bpebytes8", bpeBytesWords)
   val Wp8 = Shared("_shared:wp8", wpWords)
   val UnigramModel = Shared("_shared:unigram", unigramModel)
 
@@ -373,7 +375,7 @@ object TokenizerQueries {
       val enc = Bpe.encodeIds(docs, "doc_id", "text", rules, words)
         .localCheckpoint()
       val dec = Bpe.decodeIds(enc, "doc_id", "ids", rules, words)
-      idsRow(docs, enc, dec, Bpe.wordOk, "n_bpe", "n_oov")
+      idsRow(docs, enc, dec, Bpe.Chars.face)
     },
       shared = Seq(Bpe8Slice),
       // per-doc token-id economics + position-weighted fingerprint over
@@ -497,9 +499,10 @@ object TokenizerQueries {
     //     stack marks such words OOV — this is the gap byte-level
     //     closes; the PinSpec twin asserts the 0 directly) ---
     Query("q219_bpe_bytes_encode", (s, dir) =>
-      Bpe.encodeTokenCountsBytes(
+      Bpe.encodeTokenCountsWith(
         unicodeDocs(s, dir).filter(pmod(col("doc_id"), lit(4)) =!= 0),
-        "doc_id", "text", bpeBytesMerges(s, dir)),
+        "doc_id", "text", bpeBytesMerges(s, dir), bpeBytesWords(s, dir),
+        Bpe.Bytes),
       shared = Seq(BpeBytes8),
       // byte-encode the never-seen unicode complement; n_oov is the
       // structural 0 the byte alphabet guarantees (predicted here,
@@ -517,10 +520,11 @@ object TokenizerQueries {
     Query("q220_bpe_bytes_ids", (s, dir) => {
       val docs = unicodeDocs(s, dir).filter(pmod(col("doc_id"), lit(4)) =!= 0)
       val rules = bpeBytesMerges(s, dir)
-      val enc = Bpe.encodeIdsBytes(docs, "doc_id", "text", rules)
+      val words = bpeBytesWords(s, dir)
+      val enc = Bpe.encodeIds(docs, "doc_id", "text", rules, words, Bpe.Bytes)
         .localCheckpoint()
-      val dec = Bpe.decodeIdsBytes(enc, "doc_id", "ids", rules)
-      idsRow(docs, enc, dec, Bpe.byteWordOk, "n_bpe", "n_oov")
+      val dec = Bpe.decodeIds(enc, "doc_id", "ids", rules, words, Bpe.Bytes)
+      idsRow(docs, enc, dec, Bpe.Bytes.face)
     },
       shared = Seq(BpeBytes8),
       // per-doc byte token-id economics + position-weighted fingerprint
@@ -536,7 +540,8 @@ object TokenizerQueries {
     //     or id drift anywhere in the roundtrip flips the row red ---
     Query("q221_bpe_bytes_artifacts", (s, dir) => {
       val path = scratch("bpebart", dir)
-      Bpe.exportArtifactsBytes(bpeBytesMerges(s, dir), path)
+      Bpe.exportArtifacts(bpeBytesMerges(s, dir), bpeBytesWords(s, dir),
+        path, Bpe.Bytes)
       Bpe.importMerges(s, path)
         .join(s.read.parquet(s"$path/vocab"),
           col("merged") === col("piece"))
@@ -575,10 +580,10 @@ object TokenizerQueries {
     //     replayed end to end by swapping the oracle's text source
     //     for pretokenize(unicode fixture) ---
     Query("q226_bpe_bytes_pretok", (s, dir) =>
-      Bpe.learnMergesBytes(
+      Bpe.learnMerges(
         unicodeDocs(s, dir).select(col("doc_id"),
           TextAnalysis.preTokenize(col("text")).as("text")),
-        "text", nMerges = 8),
+        "text", nMerges = 8, alphabet = Bpe.Bytes),
       // the byte training replay with the text source swapped for the
       // pretokenized unicode fixture (q216's swap discipline, byte face)
       oracle = Some(Bpe.byteOracleSql(8,
@@ -668,7 +673,7 @@ object TokenizerQueries {
           maxInputCharsPerWord = WordPiece.OracleMaxWordLen)
         .localCheckpoint()
       val dec = WordPiece.decodeIds(enc, "doc_id", "ids", rules, words)
-      idsRow(docs, enc, dec, Bpe.wordOk, "n_wp", "n_unk")
+      idsRow(docs, enc, dec, WordPiece.face)
     },
       shared = Seq(Wp8),
       // per-doc flat id economics: the greedy segmentation chain feeds
@@ -769,7 +774,7 @@ object TokenizerQueries {
       val enc = graft.llm.Unigram.encodeIds(docs, "doc_id", "text", model)
         .localCheckpoint()
       val dec = graft.llm.Unigram.decodeIds(enc, "doc_id", "ids", model)
-      idsRow(docs, enc, dec, Bpe.wordOk, "n_tok", "n_unk")
+      idsRow(docs, enc, dec, graft.llm.Unigram.face)
     },
       shared = Seq(UnigramModel),
       // per-doc flat id economics over the Viterbi chain: id-1 space
@@ -852,7 +857,7 @@ object TokenizerQueries {
           "text", model, nbest = 4, alpha = 0.5, epoch = 1)
         .localCheckpoint()
       val dec = graft.llm.Unigram.decodeIds(enc, "doc_id", "ids", model)
-      idsRow(docs, enc, dec, Bpe.wordOk, "n_tok", "n_unk")
+      idsRow(docs, enc, dec, graft.llm.Unigram.face)
     },
       shared = Seq(UnigramModel),
       // the sampled-ids replay: the q234 id-assembly tail over the
@@ -874,13 +879,12 @@ object TokenizerQueries {
     Query("q242_tokenizer_panel", (s, dir) => {
       val eval = unicodeDocs(s, dir)
         .filter(pmod(col("doc_id"), lit(4)) =!= 0)
-      val bytes = eval.select(col("doc_id"),
-          explode(split(col("text"), " ")).as("word"))
-        .filter(Bpe.wordOk)
+      val bytes =
+        TokenServe.docWords(eval, "doc_id", "text", TokenServe.wordOk)
         .groupBy(col("doc_id"))
         .agg(sum(expr("octet_length(word)")).as("n_bytes"))
-      val bpe = Bpe.encodeTokenCountsBytes(eval, "doc_id", "text",
-          bpeBytesMerges(s, dir))
+      val bpe = Bpe.encodeTokenCountsWith(eval, "doc_id", "text",
+          bpeBytesMerges(s, dir), bpeBytesWords(s, dir), Bpe.Bytes)
         .select(col("doc_id"), col("n_words"),
           col("n_bpe").as("n_pieces"), col("n_oov").as("n_unk"),
           col("n_bytes"))

@@ -6,17 +6,18 @@ import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** OPERATOR-level plan capture for the tokenizer ids assemblies.
+/** OPERATOR-level plan capture for the tokenizer serve paths.
   *
-  * The q202/q220/q228/q234/q243 queries localCheckpoint their encode
-  * chain (the q169 double-execution lesson), so `Profile ... explain`
-  * shows only the post-checkpoint scan — the per-doc assembly
-  * projection round 14 optimized is invisible there. This tool
-  * explains the encode OPERATOR frames directly (same fixtures as
-  * TokenizerQueries: the doc_id%4=0 training slice, 8 merges), which is how
-  * the committed plans/r14 "_op_before"/"_op_after" pairs were
-  * produced (before = this tool run against the pre-change operator
-  * code via `git stash`).
+  * The ids queries (q202/q220/q228/q234/q243) localCheckpoint their
+  * encode chain (the q169 double-execution lesson), so
+  * `Profile ... explain` shows only the post-checkpoint scan. This
+  * tool explains the serve OPERATOR frames directly — the counts,
+  * `encodeIds` and `decodeIds` frames of char BPE, byte BPE,
+  * WordPiece and Unigram — over the TokenizerQueries fixtures' shape
+  * (the doc_id%4=0 training slice, 8 merges, the complement as eval
+  * corpus). Each decode frame reads a localCheckpointed encode, like
+  * the queries do. Run it on two checkouts and diff the outputs (after
+  * masking expression ids `#n`) for a before/after plan pair.
   *
   * Usage: runMain graft.tools.OpPlan <sfDir>
   */
@@ -34,17 +35,40 @@ object OpPlan {
       df.explain("formatted")
     }
 
+    def family(name: String, counts: DataFrame, ids: DataFrame,
+               decode: DataFrame => DataFrame): Unit = {
+      show(s"${name}_counts", counts)
+      show(s"${name}_encode_ids", ids)
+      show(s"${name}_decode_ids", decode(ids.localCheckpoint()))
+    }
+
     val (bpeRules, bpeWords) = Bpe.trainShared(train, "text", 8)
+    family("bpe",
+      Bpe.encodeTokenCountsWith(eval, "doc_id", "text", bpeRules, bpeWords),
+      Bpe.encodeIds(eval, "doc_id", "text", bpeRules, bpeWords),
+      Bpe.decodeIds(_, "doc_id", "ids", bpeRules, bpeWords))
+
+    val (byteRules, byteWords) =
+      Bpe.trainShared(train, "text", 8, alphabet = Bpe.Bytes)
+    family("bpe_bytes",
+      Bpe.encodeTokenCountsWith(eval, "doc_id", "text", byteRules,
+        byteWords, Bpe.Bytes),
+      Bpe.encodeIds(eval, "doc_id", "text", byteRules, byteWords,
+        Bpe.Bytes),
+      Bpe.decodeIds(_, "doc_id", "ids", byteRules, byteWords, Bpe.Bytes))
+
     val (wpRules, wpWords) = WordPiece.trainShared(train, "text", 8)
+    family("wordpiece",
+      WordPiece.tokenCounts(eval, "doc_id", "text", wpRules, wpWords),
+      WordPiece.encodeIds(eval, "doc_id", "text", wpRules, wpWords),
+      WordPiece.decodeIds(_, "doc_id", "ids", wpRules, wpWords))
+
     val uniModel = Unigram.train(train, "text", seedMulti = 64,
       keepMulti = 8, emIters = 2)
-
-    show("bpe_encode_ids", Bpe.encodeIds(eval, "doc_id", "text",
-      bpeRules, bpeWords))
-    show("wordpiece_encode_ids", WordPiece.encodeIds(eval, "doc_id",
-      "text", wpRules, wpWords))
-    show("unigram_encode_ids", Unigram.encodeIds(eval, "doc_id",
-      "text", uniModel))
+    family("unigram",
+      Unigram.tokenCounts(eval, "doc_id", "text", uniModel),
+      Unigram.encodeIds(eval, "doc_id", "text", uniModel),
+      Unigram.decodeIds(_, "doc_id", "ids", uniModel))
     spark.stop()
   }
 }

@@ -196,6 +196,9 @@ class PlanAuditSpec extends SparkSpec {
       "q148_chi2_terms", "q176_substr_spans", "q183_dsir_weights",
       "q170_chunk_dedup", "q172_decontaminate", "q175_ref_perplexity",
       "q191_bpe_encode", "q240_bm25_query",
+      // the other tokenizer counts faces run the same stream join
+      "q219_bpe_bytes_encode", "q225_wordpiece_counts",
+      "q232_unigram_counts",
       // q141_incremental_dedup is deliberately absent: its broadcast
       // build side IS a raw exploded stream, but of the incremental
       // BATCH (contractually bounded), probing the corpus-sized store

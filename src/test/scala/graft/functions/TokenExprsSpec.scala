@@ -50,10 +50,8 @@ class TokenExprsSpec extends SparkSpec {
   private def newChain(boundary: Option[Int]) =
     wordRows.groupBy(col("doc_id"))
       .agg(collect_list(struct(col("_wpos"), col("_wids"))).as("_ws"))
-      .select(col("doc_id"), (boundary match {
-        case Some(b) => TokenExprs.flattenWordIds(col("_ws"), b)
-        case None => TokenExprs.flattenWordIdsPlain(col("_ws"))
-      }).as("ids"))
+      .select(col("doc_id"),
+        TokenExprs.flattenWordIds(col("_ws"), boundary).as("ids"))
 
   for ((label, b) <- Seq(("boundary 0 (char BPE)", Some(0)),
                          ("boundary 32 (byte BPE)", Some(32)),
@@ -101,7 +99,7 @@ class TokenExprsSpec extends SparkSpec {
     val neu = pieceRows.groupBy(col("doc_id"))
       .agg(collect_list(struct(col("_pos"), col("p"))).as("_ps"))
       .select(col("doc_id"),
-        TokenExprs.concatSortedPieces(col("_ps")).as("t"))
+        TokenExprs.concatSortedPieces(col("_ps"), wordpiece = false).as("t"))
     assert(neu.as[(Long, String)].collect().toMap ==
       old.as[(Long, String)].collect().toMap)
     assert(neu.schema == old.schema)
@@ -119,7 +117,8 @@ class TokenExprsSpec extends SparkSpec {
     val neu = pieceRows.groupBy(col("doc_id"))
       .agg(collect_list(struct(col("_pos"), col("p"))).as("_ps"))
       .select(col("doc_id"),
-        ltrim(TokenExprs.concatSortedPiecesWp(col("_ps"))).as("t"))
+        ltrim(TokenExprs.concatSortedPieces(col("_ps"), wordpiece = true))
+          .as("t"))
     assert(neu.as[(Long, String)].collect().toMap ==
       old.as[(Long, String)].collect().toMap)
     assert(neu.schema == old.schema)
@@ -160,7 +159,7 @@ class TokenExprsSpec extends SparkSpec {
         col("_ws").cast("array<struct<_wpos:int,_wids:array<int>>>")
           .as("_ws"))
     val got = df.select(col("doc_id"),
-        TokenExprs.flattenWordIds(col("_ws"), 0).as("ids"))
+        TokenExprs.flattenWordIds(col("_ws"), Some(0)).as("ids"))
       .as[(Long, Option[Seq[Int]])].collect().toMap
     assert(got(1L).isEmpty)           // null in → null out
     assert(got(2L).contains(Seq.empty)) // empty in → empty out

@@ -286,25 +286,6 @@ class BpeSpec extends SparkSpec {
     assert(dec(11L) == "�low low")        // OOV char -> U+FFFD
   }
 
-  test("encodeIds agrees with encodeTokenCountsWith on symbol totals") {
-    val train = Seq((1L, "low low low"), (2L, "lower lowest")).toDF("doc_id", "text")
-    val (rules, words) = Bpe.trainShared(train, "text", nMerges = 4)
-    val eval = Seq((10L, "low lowlow slow"), (11L, "glow low zq"))
-      .toDF("doc_id", "text")
-    val ids = Bpe.encodeIds(eval, "doc_id", "text", rules, words)
-      .select("doc_id", "n_bpe", "n_oov").as[(Long, Long, Long)]
-      .collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    val cnt = Bpe.encodeTokenCountsWith(eval, "doc_id", "text", rules, words)
-      .select("doc_id", "n_words", "n_bpe", "n_oov")
-      .as[(Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    cnt.foreach { case (d, (nWords, nBpe, nOov)) =>
-      // the flat stream adds one space token between words
-      assert(ids(d)._1 == nBpe + nWords - 1, s"doc $d")
-      assert(ids(d)._2 == nOov, s"doc $d oov")
-    }
-  }
-
   test("exportArtifacts/importMerges: merges and vocab roundtrip exactly " +
        "through the GPT-2-shape files") {
     val docs = Seq(
@@ -380,7 +361,8 @@ class BpeSpec extends SparkSpec {
     val train = Seq(
       (1L, "low low lower lowest"),
       (2L, "new newer newest low")).toDF("doc_id", "text")
-    val (rules, _) = Bpe.trainSharedBytes(train, "text", nMerges = 4)
+    val (rules, words) = Bpe.trainShared(train, "text", nMerges = 4,
+      alphabet = Bpe.Bytes)
     val got = rules.select("rank", "lhs", "rhs", "merged")
       .as[(Int, String, String, String)].collect().sortBy(_._1)
     // all symbols are hex pairs over the training bytes
@@ -404,7 +386,7 @@ class BpeSpec extends SparkSpec {
       (10L, "low löw"),
       (11L, "東京🚀 naïve low"),
       (12L, "☃️❄")).toDF("doc_id", "text")
-    val enc = Bpe.encodeIdsBytes(eval, "doc_id", "text", rules)
+    val enc = Bpe.encodeIds(eval, "doc_id", "text", rules, words, Bpe.Bytes)
       .localCheckpoint()
     val rows = enc.select("doc_id", "n_oov", "ids")
       .as[(Long, Long, Seq[Int])].collect().map(r => r._1 -> r).toMap
@@ -417,14 +399,15 @@ class BpeSpec extends SparkSpec {
     assert(rows.values.forall(_._3.forall(id => id >= 0 && id < 260)))
 
     // decode(encode(d)) is byte-exact on ANY unicode input
-    val dec = Bpe.decodeIdsBytes(enc, "doc_id", "ids", rules)
+    val dec = Bpe.decodeIds(enc, "doc_id", "ids", rules, words, Bpe.Bytes)
       .as[(Long, String)].collect().toMap
     assert(dec(10L) == "low löw")
     assert(dec(11L) == "東京🚀 naïve low")
     assert(dec(12L) == "☃️❄")
 
     // token counts face agrees with the ids face on totals
-    val cnt = Bpe.encodeTokenCountsBytes(eval, "doc_id", "text", rules)
+    val cnt = Bpe.encodeTokenCountsWith(eval, "doc_id", "text", rules, words,
+        Bpe.Bytes)
       .select("doc_id", "n_words", "n_bytes", "n_bpe", "n_oov")
       .as[(Long, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> r).toMap
@@ -436,7 +419,7 @@ class BpeSpec extends SparkSpec {
 
     // artifact roundtrip: GPT-2-shape merges + 260-row vocab parquet
     val path = s"/tmp/graft_test_bpebytes_${ProcessHandle.current().pid()}"
-    Bpe.exportArtifactsBytes(rules, path)
+    Bpe.exportArtifacts(rules, words, path, Bpe.Bytes)
     val back = Bpe.importMerges(spark, path)
       .select("rank", "lhs", "rhs", "merged")
       .as[(Int, String, String, String)].collect().sortBy(_._1)
@@ -459,7 +442,7 @@ class BpeSpec extends SparkSpec {
     assert(a(0xAD) == "Ń", "soft hyphen (173) is shifted, not kept")
 
     val docs = Seq((1L, "héllo héllo hello low")).toDF("doc_id", "text")
-    val (rules, _) = Bpe.trainSharedBytes(docs, "text", nMerges = 3)
+    val rules = Bpe.learnMerges(docs, "text", nMerges = 3, alphabet = Bpe.Bytes)
     val path = s"/tmp/graft_test_bpegpt2_${ProcessHandle.current().pid()}"
     Bpe.exportMergesGpt2(rules, path)
     // the exported text IS GPT-2-alphabet rendered: é's lead byte C3

@@ -31,18 +31,20 @@ class TokenizerEvalSpec extends SparkSpec {
        "unseen characters") {
     val train = Seq((0L, "ab ab ab ab a b")).toDF("doc_id", "text")
     val eval = Seq((1L, "ab aab zé")).toDF("doc_id", "text")
-    val (bpeRules, _) = Bpe.trainSharedBytes(train, "text", 4)
+    val (bpeRules, bpeWords) = Bpe.trainShared(train, "text", 4,
+      alphabet = Bpe.Bytes)
     val (wpRules, wpWords) = WordPiece.trainShared(train, "text", 4)
     val uniModel = Unigram.train(train, "text", seedMulti = 8,
       keepMulti = 8, emIters = 1)
     val bytes = eval.select($"doc_id",
         org.apache.spark.sql.functions.explode(
           org.apache.spark.sql.functions.split($"text", " ")).as("word"))
-      .filter(Bpe.wordOk)
+      .filter(TokenServe.wordOk)
       .groupBy($"doc_id")
       .agg(org.apache.spark.sql.functions.expr(
         "CAST(SUM(octet_length(word)) AS BIGINT)").as("n_bytes"))
-    val b = Bpe.encodeTokenCountsBytes(eval, "doc_id", "text", bpeRules)
+    val b = Bpe.encodeTokenCountsWith(eval, "doc_id", "text", bpeRules,
+      bpeWords, Bpe.Bytes)
       .select($"doc_id", $"n_words", $"n_bpe".as("n_pieces"),
         $"n_oov".as("n_unk"), $"n_bytes")
     val w = WordPiece.tokenCounts(eval, "doc_id", "text", wpRules,
