@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -57,29 +57,38 @@ object Bench {
   }
 
   /** Records every completed stage of `sc` (registered on
-    * construction) and counts the generated classes Spark compiles.
+    * construction), counts the jobs it starts and the generated
+    * classes Spark compiles.
     * `clear()` before a measurement, `snapshot()` after it: listener
     * events are posted asynchronously, so the snapshot first waits for
     * the bus to drain.
     */
   private[graft] final class StageLog(sc: SparkContext) extends SparkListener {
     private val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    private val jobsStarted = new java.util.concurrent.atomic.AtomicLong()
     sc.addSparkListener(this)
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       stages.add(e.stageInfo)
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobsStarted.incrementAndGet()
     // Janino compiles, JVM-wide: each miss in Spark's codegen cache
     private def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     private var compileMark = compileCount
     private var compiled = 0L
+    private var jobsRun = 0L
     /** Classes compiled between the last `clear()` and `snapshot()`. */
     def compiles: Long = compiled
+    /** Jobs started between the last `clear()` and `snapshot()`. */
+    def jobs: Long = jobsRun
     def clear(): Unit = {
       stages.clear()
+      jobsStarted.set(0L)
       compileMark = compileCount
     }
     def snapshot(): Seq[StageInfo] = {
       Thread.sleep(500)
       compiled = compileCount - compileMark
+      jobsRun = jobsStarted.get()
       stages.asScala.toSeq
     }
 

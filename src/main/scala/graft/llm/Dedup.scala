@@ -233,34 +233,49 @@ object Dedup {
     // `precomputedSigs` (round-15, guide §2.4): the signature frame is
     // a full shingle+minhash pass over `docs` — a caller that already
     // holds `minHashSignatures(docs, idCol, textCol, n, numHashes)`
-    // for EXACTLY this doc set (the streaming curation batch computes
-    // it once and reuses it across the incremental probe, the
-    // batch-internal pass and the index append) passes it here and the
-    // pass is skipped. Contract: same doc set, same (n, numHashes) —
+    // for EXACTLY this doc set passes it here and the pass is
+    // skipped. Contract: same doc set, same (n, numHashes) —
     // a superset would leak phantom candidate ids into the banding.
     // Only worth it when the caller's materialized frame replaces ≥3
     // signature executions: at 2 references the checkpoint write+read
     // measured slower than one duplicate recompute (q45/q78 probes).
     val sig = precomputedSigs.getOrElse(
       minHashSignatures(docs, idCol, textCol, n, numHashes))
-    val cands = lshCandidates(sig, idCol, bands, numHashes / bands, maxBucket)
-    val sh = shingles(docs, idCol, textCol, n)
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("_n"))
-    // exact verify restricted to candidate pairs: fan each pair out to
-    // side-a shingles, inner-join side-b on (id_b, shingle) — the join
-    // only materializes shingles of docs that actually collided
-    val common = cands
-      .join(sh.toDF("id_a", "shingle"), Seq("id_a"))
-      .join(sh.toDF("id_b", "shingle"), Seq("id_b", "shingle"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("_common"))
-    common
-      .join(sizes.toDF("id_a", "_na"), Seq("id_a"))
-      .join(sizes.toDF("id_b", "_nb"), Seq("id_b"))
+    val sets = shingleSets(docs, idCol, textCol, n)
+    exactVerified(lshCandidates(sig, idCol, bands, numHashes / bands, maxBucket),
+      sets, sets, Seq("id_b"), threshold)
+  }
+
+  /** Each doc's distinct n-gram shingles as one array, `(id, _sh)` —
+    * the per-doc form of [[shingles]] (the same set), so a pair is
+    * verified where it meets its two sets instead of by exploding and
+    * re-joining shingle rows.
+    */
+  private def shingleSets(docs: DataFrame, idCol: String, textCol: String,
+                          n: Int): DataFrame =
+    docs.select(col(idCol), array_distinct(graft.functions.TextExprs
+      .wordNgrams(split(col(textCol), " "), n)).as("_sh"))
+
+  /** Exact n-gram Jaccard of candidate pairs, the verify stage every
+    * `*Verified` near-dup shares: `cands` holds `id_a` and the side-b
+    * key `bKey` (`id_b` plus any column that tells side-b documents
+    * apart), `setsA` is `(id, _sh)` and `setsB` is `(bKey…, _sh)`
+    * from [[shingleSets]]. Jaccard = |A ∩ B| / (|A| + |B| − |A ∩ B|)
+    * over the two sets, rounded to 6 places like the SQL oracles.
+    * Output: `id_a`, bKey…, `jaccard` ≥ `threshold`.
+    */
+  private def exactVerified(cands: DataFrame, setsA: DataFrame,
+                            setsB: DataFrame, bKey: Seq[String],
+                            threshold: Double): DataFrame = {
+    val (sa, sb) = (col("_sa"), col("_sb"))
+    val common = size(array_intersect(sa, sb))
+    cands
+      .join(setsA.toDF("id_a", "_sa"), Seq("id_a"))
+      .join(setsB.toDF(bKey :+ "_sb": _*), bKey)
       .withColumn("jaccard",
-        round(col("_common").cast("double") /
-          (col("_na") + col("_nb") - col("_common")), 6))
+        round(common.cast("double") / (size(sa) + size(sb) - common), 6))
       .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+      .select((("id_a" +: bKey) :+ "jaccard").map(col): _*)
   }
 
   /** Incremental near-dup for continuous ingestion: a NEW batch probed
@@ -294,14 +309,8 @@ object Dedup {
     // re-executing once per reference.
     val newSigs = precomputedNewSigs.getOrElse(
       minHashSignatures(newDocs, idCol, textCol, n, numHashes))
-    val newBands = bandBuckets(newSigs, idCol, bands, r)
-      .toDF("id_new", "band", "bucket")
-    val storedBands = capBuckets(
-        bandBuckets(storedSigs, idCol, bands, r),
-        idCol, Seq("band", "bucket"), maxBucket)
-      .toDF("id_stored", "band", "bucket")
-    val cands = newBands.join(storedBands, Seq("band", "bucket"))
-      .select(col("id_new"), col("id_stored")).distinct()
+    val cands = storeCandidates(newSigs, storedSigs, idCol, bands, r,
+      maxBucket)
     // codegen'd agreement count (ArrayAgreeCount) — see minHashNearDup
     val estEq = graft.functions.VectorExprs.agreeCount(col("_sa"), col("_sb"))
     cands
@@ -312,13 +321,36 @@ object Dedup {
       .select(col("id_new"), col("id_stored"), col("est_jaccard"))
   }
 
+  /** Band-collision candidates of a new batch against a stored
+    * signature index: distinct (id_new, id_stored) pairs sharing a
+    * (band, bucket). Only the stored side is capped by `maxBucket` —
+    * the batch is bounded by contract. The candidate generator of
+    * [[incrementalNearDup]] and [[incrementalNearDupVerified]].
+    */
+  private def storeCandidates(newSigs: DataFrame, storedSigs: DataFrame,
+                              idCol: String, bands: Int, r: Int,
+                              maxBucket: Option[Int]): DataFrame = {
+    val newBands = bandBuckets(newSigs, idCol, bands, r)
+      .toDF("id_new", "band", "bucket")
+    val storedBands = capBuckets(
+        bandBuckets(storedSigs, idCol, bands, r),
+        idCol, Seq("band", "bucket"), maxBucket)
+      .toDF("id_stored", "band", "bucket")
+    newBands.join(storedBands, Seq("band", "bucket"))
+      .select(col("id_new"), col("id_stored")).distinct()
+  }
+
   /** [[incrementalNearDup]] with the EXACT-Jaccard verify of
-    * [[minHashNearDupVerified]]: the index supplies candidates (band
-    * collisions at estimate-threshold 0), then text is fetched ONLY
-    * for colliding doc pairs — the production ingest shape where the
-    * corpus store serves point reads for the handful of collisions
-    * while its bulk is never re-scanned. Output has exact precision;
-    * recall is the banding probability (≥ 1−(1−t^r)^bands per pair).
+    * [[minHashNearDupVerified]]: the index supplies the band-collision
+    * candidates (no signature estimate — every collision goes to the
+    * exact verify, so the index is read once, for the banding), then
+    * text is fetched ONLY for colliding doc pairs — the production
+    * ingest shape where the corpus store serves point reads for the
+    * handful of collisions while its bulk is never re-scanned. Output
+    * (id_new, id_stored, jaccard) has exact precision; recall is the
+    * banding probability (≥ 1−(1−t^r)^bands per pair). The streaming
+    * curation batch runs this probe fused with its batch-internal pass
+    * instead: [[batchNearDupVerified]].
     */
   def incrementalNearDupVerified(newDocs: DataFrame, idCol: String,
                                  textCol: String, storedSigs: DataFrame,
@@ -328,34 +360,79 @@ object Dedup {
                                  maxBucket: Option[Int] = None,
                                  precomputedNewSigs: Option[DataFrame] = None)
       : DataFrame = {
-    val cands = incrementalNearDup(newDocs, idCol, textCol, storedSigs,
-        n, numHashes, bands, threshold = 0.0, maxBucket,
-        precomputedNewSigs)
-      .select(col("id_new"), col("id_stored"))
-    val shNew = shingles(newDocs, idCol, textCol, n)
-    // the "point reads" promise, literally: only stored docs that
-    // collided are ever shingled — without this semi-join the verify
-    // stage re-shingles the whole corpus and the index bought nothing
-    // (caught by the 10× smoke: 8.9× growth → sub-linear after)
-    val hitDocs = storedDocs.join(
-      cands.select(col("id_stored").as(idCol)).distinct(),
-      Seq(idCol), "left_semi")
-    val shOld = shingles(hitDocs, idCol, textCol, n)
-    val sizesNew = shNew.groupBy(col(idCol)).agg(count(lit(1)).as("_n"))
-    val sizesOld = shOld.groupBy(col(idCol)).agg(count(lit(1)).as("_n"))
-    val common = cands
-      .join(shNew.toDF("id_new", "shingle"), Seq("id_new"))
-      .join(shOld.toDF("id_stored", "shingle"), Seq("id_stored", "shingle"))
-      .groupBy(col("id_new"), col("id_stored"))
-      .agg(count(lit(1)).as("_common"))
-    common
-      .join(sizesNew.toDF("id_new", "_na"), Seq("id_new"))
-      .join(sizesOld.toDF("id_stored", "_nb"), Seq("id_stored"))
-      .withColumn("jaccard",
-        round(col("_common").cast("double") /
-          (col("_na") + col("_nb") - col("_common")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_new"), col("id_stored"), col("jaccard"))
+    require(numHashes % bands == 0, "numHashes must divide into bands")
+    val newSigs = precomputedNewSigs.getOrElse(
+      minHashSignatures(newDocs, idCol, textCol, n, numHashes))
+    val cands = storeCandidates(newSigs, storedSigs, idCol, bands,
+        numHashes / bands, maxBucket)
+      .toDF("id_a", "id_b")
+    exactVerified(cands, shingleSets(newDocs, idCol, textCol, n),
+        shingleSets(hitDocs(storedDocs, cands.select(col("id_b")), idCol),
+          idCol, textCol, n),
+        Seq("id_b"), threshold)
+      .toDF("id_new", "id_stored", "jaccard")
+  }
+
+  /** The stored documents whose id is in `ids` (one id column, any
+    * name, repeats allowed) — the "point reads" promise, literally:
+    * only stored docs that collided are ever shingled. Without this
+    * semi-join the verify stage re-shingles the whole corpus and the
+    * index bought nothing (caught by the 10× smoke: 8.9× growth →
+    * sub-linear after).
+    */
+  private def hitDocs(storedDocs: DataFrame, ids: DataFrame,
+                      idCol: String): DataFrame =
+    storedDocs.join(ids.toDF(idCol), Seq(idCol), "left_semi")
+
+  /** ONE near-dup pass for a batch curated against a store: the
+    * batch's band collisions with the stored signature index AND with
+    * itself, verified by exact Jaccard in one plan. `batchSigs` is
+    * `minHashSignatures(batch, idCol, textCol, n, numHashes)` (the
+    * caller computes it once and reuses it); `store` is the stored
+    * (signatures, documents) pair, absent on the first batch.
+    *
+    * Output (id_a, id_b, stored, jaccard): `id_a` is a batch doc;
+    * `stored = true` rows pair it with a stored doc `id_b`, `stored =
+    * false` rows with a batch doc `id_b > id_a`. The flag keys side b
+    * through the verify, so a stored id equal to a batch id is never
+    * read as the batch doc. Each pair is exactly what the two separate
+    * passes find — [[incrementalNearDupVerified]] against the store
+    * and [[minHashNearDupVerified]] (no `maxBucket`) over the batch —
+    * because band buckets and the verify are functions of one pair's
+    * documents; the caller applies its ordering over the pairs.
+    */
+  def batchNearDupVerified(batch: DataFrame, batchSigs: DataFrame,
+                           idCol: String, textCol: String,
+                           store: Option[(DataFrame, DataFrame)],
+                           n: Int = 3, numHashes: Int = 64, bands: Int = 32,
+                           threshold: Double = 0.5): DataFrame = {
+    require(numHashes % bands == 0, "numHashes must divide into bands")
+    def tagged(df: DataFrame, stored: Boolean): DataFrame =
+      df.withColumn("stored", lit(stored))
+    def banded(sigs: DataFrame): DataFrame =
+      bandBuckets(sigs, idCol, bands, numHashes / bands)
+    // the batch's bands are broadcast (a micro-batch is bounded by
+    // contract) and probed by its own bands and the store's: one
+    // broadcast, two streams, no shuffle before the candidate distinct
+    val batchBands = broadcast(banded(batchSigs).toDF("id_a", "band", "bucket"))
+    def probe(sigs: DataFrame): DataFrame =
+      banded(sigs).toDF("id_b", "band", "bucket").join(batchBands, Seq("band", "bucket"))
+    val internal = tagged(probe(batchSigs).filter(col("id_a") < col("id_b")), false)
+    val sets = shingleSets(batch, idCol, textCol, n)
+    val (cands, setsB) = store match {
+      case None => (internal, tagged(sets, false))
+      case Some((storedSigs, storedDocs)) =>
+        val hit = hitDocs(storedDocs,
+          broadcast(probe(storedSigs).select(col("id_b"))), idCol)
+        (internal.unionByName(tagged(probe(storedSigs), true)),
+          tagged(sets, false)
+            .unionByName(tagged(shingleSets(hit, idCol, textCol, n), true)))
+    }
+    exactVerified(
+      cands.select(col("id_a"), col("id_b"), col("stored")).distinct(),
+      broadcast(sets),
+      broadcast(setsB.select(col(idCol), col("stored"), col("_sh"))),
+      Seq("id_b", "stored"), threshold)
   }
 
   /** Benchmark-contamination rate per document: the fraction of its

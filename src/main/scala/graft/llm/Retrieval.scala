@@ -1,10 +1,12 @@
 package graft.llm
 
+import graft.functions.BoundLong
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** Hybrid retrieval — the RAG-serving data-prep face: a sparse
@@ -304,11 +306,11 @@ object Retrieval {
     // independent appends to distinct tables — concurrent (§2.6)
     graft.operators.Jobs.inParallel(spark,
       ("lex-index: postings append",
-        () => tfOf(batch, idCol, textCol).withColumn("ver", lit(ver))
+        () => tfOf(batch, idCol, textCol).withColumn("ver", BoundLong.lit(ver))
           .sortWithinPartitions(col("term"))
           .write.mode("append").parquet(s"$path/postings")),
       ("lex-index: doclen append",
-        () => dlOf(batch, idCol, textCol).withColumn("ver", lit(ver))
+        () => dlOf(batch, idCol, textCol).withColumn("ver", BoundLong.lit(ver))
           .write.mode("append").parquet(s"$path/doclen")))
 
   /** One resolved state of a persisted lexical index — what every
@@ -323,11 +325,12 @@ object Retrieval {
     *     persisted.
     *
     * `files` is the data-file listing the state was read from — the
-    * snapshot's key. Building is lazy: beyond reading the files'
-    * schema, `persist` only registers the plans, and the first search
-    * fills the cache.
+    * snapshot's key — and `schemas` the two tables' read schemas.
+    * Building is lazy: beyond reading the files' schema, `persist` only
+    * registers the plans, and the first search fills the cache.
     */
   private final class LexSnapshot(val files: Seq[Seq[String]],
+                                  val schemas: Seq[StructType],
                                   val postings: DataFrame,
                                   val dfreq: DataFrame) {
     /** (Re-)registers the persisted frames — postings first, so the
@@ -366,22 +369,28 @@ object Retrieval {
     * version and length); postings join that narrow frame
     * SHUFFLE_HASH on doc_id and keep only rows at the doc's latest
     * version — a stale version's rows (and with them any term the
-    * re-ingested text dropped) vanish here.
+    * re-ingested text dropped) vanish here. `known` are the tables'
+    * schemas when an earlier snapshot already read them; without them
+    * Spark infers each schema with a footer-reading job.
     */
-  private def resolveLex(spark: SparkSession,
-                         files: Seq[Seq[String]]): LexSnapshot = {
-    val Seq(postingFiles, doclenFiles) = files
-    val dlCur = spark.read.parquet(doclenFiles: _*)
+  private def resolveLex(spark: SparkSession, files: Seq[Seq[String]],
+                         known: Option[Seq[StructType]]): LexSnapshot = {
+    val Seq(postingTable, doclenTable) = files.zipWithIndex.map {
+      case (fs, i) =>
+        known.fold(spark.read)(ss => spark.read.schema(ss(i))).parquet(fs: _*)
+    }
+    val dlCur = doclenTable
       .groupBy(col("doc_id"))
       .agg(max(struct(col("ver"), col("dl"))).as("_s"))
       .select(col("doc_id"), col("_s.ver").as("_mv"), col("_s.dl").as("dl"))
-    val postings = spark.read.parquet(postingFiles: _*)
+    val postings = postingTable
       .join(dlCur.hint("shuffle_hash"), Seq("doc_id"))
       .filter(col("ver") === col("_mv"))
       .select(col("term"), col("doc_id"), col("tf"), col("dl"))
     val stats = dlCur.agg(count(lit(1)).as("n_docs"),
       sum(col("dl")).as("sum_dl"))
-    new LexSnapshot(files, postings,
+    new LexSnapshot(files, Seq(postingTable.schema, doclenTable.schema),
+      postings,
       postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
         .crossJoin(broadcast(stats)))
   }
@@ -395,7 +404,10 @@ object Retrieval {
     * (an overwrite replaces them all), so any change to the index
     * changes the listing, and a snapshot reads exactly the files it
     * was keyed by — an append racing the build lands in the NEXT
-    * listing, never half inside this one.
+    * listing, never half inside this one. A rebuild after pure growth
+    * (every old file still listed) reads with the old snapshot's
+    * schemas, since appends add rows, not columns; a rebuild after any
+    * file disappeared (an overwrite) infers them again.
     */
   private def lexSnapshot(spark: SparkSession, path: String): LexSnapshot = {
     val root = new Path(path)
@@ -409,7 +421,10 @@ object Retrieval {
         case Some(s) if s.files == files => s
         case stale =>
           stale.foreach(_.unpersist())
-          val s = resolveLex(spark, files)
+          val grown = stale.filter(_.files.zip(files).forall {
+            case (was, now) => was.toSet.subsetOf(now.toSet)
+          })
+          val s = resolveLex(spark, files, grown.map(_.schemas))
           lexSnapshots.put(key, s)
           s
       }

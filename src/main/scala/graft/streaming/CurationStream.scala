@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.BoundLong
 import graft.llm.{Dedup, Sampling, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
@@ -7,7 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.sql.types.{BinaryType, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** STREAMING corpus curation — the continuous-ingestion face of
@@ -24,10 +25,10 @@ import org.apache.spark.util.sketch.BloomFilter
   *    steady-state no-collision batch reads ZERO store rows and a
   *    colliding batch reads the store only for its bloom-positive
   *    residue (true dups + ≤1% false positives);
-  *  - near-dup probes the store's MinHash signature index via
-  *    [[Dedup.incrementalNearDupVerified]] (the q141 contract: the
-  *    corpus is re-read as signatures, 32–64 longs/doc; TEXT is point-
-  *    read only for band collisions);
+  *  - near-dup probes the store's MinHash signature index in the
+  *    same pass that finds the batch's internal near-dups (the q141
+  *    contract: the corpus is re-read as signatures, 32–64 longs/doc;
+  *    TEXT is point-read only for band collisions);
   *  - survivors are APPENDED to the corpus/hash/signature tables —
   *    the stored state grows only by what survives, and nothing ever
   *    rewrites the corpus-sized tables;
@@ -50,11 +51,30 @@ import org.apache.spark.util.sketch.BloomFilter
   * a batch, exact dedup keeps the MIN id per content hash; the store
   * always wins against the batch (store-vs-batch collisions drop the
   * batch doc); batch-internal near-dup drops the larger id of each
-  * verified pair AFTER store collisions are removed. A cross-batch
-  * near-dup chain is greedy-online: a doc dropped for colliding with
-  * the store never enters the index, so a later doc colliding only
-  * with IT is kept — the documented difference from the all-at-once
-  * batch pipeline.
+  * verified pair AFTER store collisions are removed. Near-dup is ONE
+  * pass ([[Dedup.batchNearDupVerified]]): the batch×store and
+  * batch×batch pairs are found and verified in one plan, and the
+  * order is applied over them — a batch pair counts only when neither
+  * doc has a verified stored partner, exactly what an internal pass
+  * over the store-deduped batch finds. A cross-batch near-dup chain
+  * is greedy-online: a doc dropped for colliding with the store never
+  * enters the index, so a later doc colliding only with IT is kept —
+  * the documented difference from the all-at-once batch pipeline.
+  *
+  * Store tables and their schemas, fixed by the batch and read with
+  * them (no schema-inference job per read; an absent table reads as
+  * `None`):
+  *  - `corpus`: the batch's own columns (read nullable, like every
+  *    parquet read);
+  *  - `hashes`: `_h string`, the md5 of each stored text;
+  *  - `sigs`: `(idCol, signature array<bigint>)`, the MinHash index;
+  *  - `probe_bloom`: `(kind, bytes, n_items, capacity, fpp)`, the
+  *    bloom sidecar ([[StoreBloom]]);
+  *  - `source_stats`: `(source, n_docs, avail_tokens)` when mixture
+  *    weights are set.
+  * A batch whose columns differ from the stored corpus's reads the
+  * store with its own columns, so `idCol` and `textCol` must keep
+  * their types across batches.
   */
 object CurationStream {
 
@@ -67,11 +87,20 @@ object CurationStream {
                           bloomCapacity: Long = 1L << 16,
                           bloomFpp: Double = 0.01)
 
-  private def readOpt(spark: SparkSession, path: String): Option[DataFrame] =
-    try {
-      val df = spark.read.parquet(path)
-      Some(df)
-    } catch { case _: org.apache.spark.sql.AnalysisException => None }
+  /** A store table read with the schema the batch fixes for it, or
+    * `None` when the table does not exist yet. An explicit schema
+    * skips Spark's footer-reading inference job, which a bare
+    * `read.parquet(dir)` starts on every call; the directory is still
+    * listed on the driver.
+    */
+  private def readOpt(spark: SparkSession, path: String,
+                      schema: StructType): Option[DataFrame] =
+    try Some(spark.read.schema(schema).parquet(path))
+    catch { case _: org.apache.spark.sql.AnalysisException => None }
+
+  private val HashesSchema = StructType.fromDDL("_h STRING")
+  private val BloomSchema = StructType.fromDDL(
+    "kind STRING, bytes BINARY, n_items BIGINT, capacity BIGINT, fpp DOUBLE")
 
   // ---------------------------------------------------------------- //
   // Bloom sidecar: bounds the per-batch store probes.                //
@@ -116,7 +145,7 @@ object CurationStream {
   private[graft] def readBlooms(spark: SparkSession, storePath: String)
       : Map[String, StoreBloom] =
     try {
-      spark.read.parquet(s"$storePath/probe_bloom")
+      spark.read.schema(BloomSchema).parquet(s"$storePath/probe_bloom")
         .collect()
         .map { r =>
           val bf = BloomFilter.readFrom(
@@ -300,7 +329,7 @@ object CurationStream {
                    profiles: Seq[(String, Seq[String])],
                    storePath: String, cfg: Config = Config()): DataFrame = {
     val spark = batch.sparkSession
-    val storedDocs = readOpt(spark, s"$storePath/corpus")
+    val storedDocs = readOpt(spark, s"$storePath/corpus", batch.schema)
     val blooms = readBlooms(spark, storePath)
 
     // replay idempotence: ids already ingested drop out up front, so a
@@ -337,43 +366,43 @@ object CurationStream {
       .withColumn("_h", md5(col(textCol)))
       .localCheckpoint()
     val s4Raw = boundedAntiJoin(s4a, col("_h"),
-        readOpt(spark, s"$storePath/hashes").map(_.select(col("_h").as("_sh"))),
+        readOpt(spark, s"$storePath/hashes", HashesSchema)
+          .map(_.select(col("_h").as("_sh"))),
         col("_sh"), blooms.get("hashes"))
     val s4 = (if (s4Raw eq s4a) s4a else s4Raw.localCheckpoint())
       .drop("_h")
 
-    // near-dup: store collisions first (signature-index probe, text
-    // point-reads only for collisions), then batch-internal pairs.
-    // Round-15 (guide §2.4 — remove redundant passes): the batch's
-    // MinHash signatures are computed ONCE on the exact-deduped batch
-    // and reused by all three consumers — the incremental store probe,
-    // the batch-internal pass (semi-joined down to the surviving ids,
-    // value-identical: a signature is a per-doc function of its text)
-    // and the index append below. Previously each consumer re-ran its
-    // own shingle+minhash pass over the batch text (3 corpus-scale
-    // passes per micro-batch), and the LAZY store-drop pipeline inside
-    // `s5a` re-executed per reference — `s5a` is checkpointed too, so
-    // the store probe runs exactly once per batch.
+    // near-dup: ONE pass over the batch's band collisions with the
+    // store's signature index and with itself, verified by exact
+    // Jaccard in one plan and materialized once (text point-reads only
+    // for stored docs that collided). The batch's MinHash signatures
+    // are computed ONCE on the exact-deduped batch and reused by the
+    // pass and by the index append below (semi-joined down to the
+    // survivors, value-identical: a signature is a per-doc function of
+    // its text).
     val batchSigs = Dedup.minHashSignatures(s4, idCol, textCol,
       cfg.n, cfg.numHashes).localCheckpoint()
     def sigsOf(df: DataFrame): DataFrame =
       batchSigs.join(df.select(col(idCol)), Seq(idCol), "left_semi")
-    val s5a = readOpt(spark, s"$storePath/sigs") match {
-      case Some(sigs) =>
-        val drops = Dedup.incrementalNearDupVerified(s4, idCol, textCol,
-            sigs, storedDocs.get, n = cfg.n, numHashes = cfg.numHashes,
-            bands = cfg.bands, threshold = cfg.jaccardThreshold,
-            precomputedNewSigs = Some(batchSigs))
-          .select(col("id_new").as(idCol)).distinct()
-        s4.join(drops, Seq(idCol), "left_anti").localCheckpoint()
-      case None => s4
-    }
-    val internalDrop = Dedup.minHashNearDupVerified(s5a, idCol, textCol,
-        n = cfg.n, numHashes = cfg.numHashes, bands = cfg.bands,
-        threshold = cfg.jaccardThreshold,
-        precomputedSigs = Some(sigsOf(s5a)))
-      .select(col("id_b").as(idCol)).distinct()
-    val s5 = s5a.join(internalDrop, Seq(idCol), "left_anti").localCheckpoint()
+    val pairs = Dedup.batchNearDupVerified(s4, batchSigs, idCol, textCol,
+      for (sigs <- readOpt(spark, s"$storePath/sigs", batchSigs.schema);
+           docs <- storedDocs) yield (sigs, docs),
+      n = cfg.n, numHashes = cfg.numHashes, bands = cfg.bands,
+      threshold = cfg.jaccardThreshold)
+    // the pinned order in one aggregation over the verified pairs,
+    // keyed by the batch doc `id_a`: a doc with a stored partner drops
+    // itself and none of its larger batch partners (the internal pass
+    // runs after the store drops); a doc without one drops each larger
+    // batch partner. A partner with its own stored partner drops
+    // through its own row, so the drops are storeDrops ∪ the larger id
+    // of each verified batch pair with neither id in storeDrops.
+    val drops = pairs.groupBy(col("id_a"))
+      .agg(max(col("stored")).as("_hit"),
+        collect_list(when(!col("stored"), col("id_b"))).as("_later"))
+      .select(explode(when(col("_hit"), array(col("id_a")))
+        .otherwise(col("_later"))).as(idCol))
+    val s5 = s4.join(broadcast(drops), Seq(idCol), "left_anti")
+      .localCheckpoint()
 
     // sidecar first, appends second (the bloom-superset invariant —
     // see [[StoreBloom]]): fold the survivors' ids and hashes into the
@@ -412,7 +441,8 @@ object CurationStream {
         storedDocs.map(_.select(col(idCol))), col(idCol), cfg, preIds),
       "hashes" -> mergedBloom(blooms.get("hashes"), batchHashes, col("_h"),
         nAppended,
-        readOpt(spark, s"$storePath/hashes"), col("_h"), cfg, preHashes)))
+        readOpt(spark, s"$storePath/hashes", HashesSchema), col("_h"), cfg,
+        preHashes)))
 
     // commit: append-only on the corpus-sized tables (the hash column
     // re-derives from the checkpointed survivors — cheaper than the
@@ -439,7 +469,8 @@ object CurationStream {
           size(split(col(textCol), " ")).cast("long").as("_tok"))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("_tok")).as("avail_tokens"))
-      val merged = readOpt(spark, s"$storePath/source_stats")
+      val merged = readOpt(spark, s"$storePath/source_stats",
+          batchStats.schema)
         .map(_.unionByName(batchStats)).getOrElse(batchStats)
         .groupBy(col("source"))
         .agg(sum(col("n_docs")).as("n_docs"),
@@ -452,15 +483,22 @@ object CurationStream {
         .write.mode("overwrite").parquet(s"$storePath/mixture_plan")
     }
 
-    // lazy funnel — ONE job at consumption instead of six eager
-    // counts (the commit above already materialized every stage frame,
-    // so the union re-reads checkpoints, not the operator chain)
-    def stage(name: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("n")).select(lit(name).as("stage"), col("n"))
-    Seq(stage("arrived", a), stage("lang", s2), stage("quality", s3),
-      stage("exact_dedup", s4), stage("near_dup", s5),
-      stage("store_total", spark.read.parquet(s"$storePath/corpus")))
+    // lazy funnel, counted at consumption by ONE aggregation over the
+    // tagged union of the six stage frames (the commit above already
+    // materialized every stage frame, so the union re-reads
+    // checkpoints, not the operator chain). One count per stage frame
+    // would plan one exchange, and so one job, per stage.
+    val stages = Seq("arrived" -> a, "lang" -> s2, "quality" -> s3,
+      "exact_dedup" -> s4, "near_dup" -> s5, "store_total" ->
+        spark.read.schema(batch.schema).parquet(s"$storePath/corpus"))
+    val counts = stages.map { case (name, _) =>
+      count(when(col("stage") === name, 1)).as(name) }
+    stages.map { case (name, df) => df.select(lit(name).as("stage")) }
       .reduce(_ unionByName _)
+      .agg(counts.head, counts.tail: _*)
+      .select(explode(array(stages.map { case (name, _) =>
+        struct(lit(name).as("stage"), col(name).as("n")) }: _*)).as("_s"))
+      .select(col("_s.stage"), col("_s.n"))
   }
 
   /** The continuous pipeline: documents stream → per-micro-batch
@@ -476,7 +514,7 @@ object CurationStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processBatch(batch, idCol, textCol, profiles, storePath, cfg)
-          .withColumn("batch_id", lit(batchId))
+          .withColumn("batch_id", BoundLong.lit(batchId))
           .write.mode("append").parquet(s"$storePath/funnel")
       }
       .start()

@@ -11,7 +11,7 @@ object Profile {
     val names = args(1).split(",").toSeq
     val explain = args.length > 2 && args(2) == "explain"
     val spark = Sessions.tool("graft-profile")
-    // stage-level metrics of the measured run: stage, task and
+    // stage-level metrics of the measured run: job, stage, task and
     // codegen compile counts, and duration + GC per stage
     val stages = new Bench.StageLog(spark.sparkContext)
     // per-operator output-row SQL metrics of the FINAL frame's executed
@@ -60,8 +60,9 @@ object Profile {
       stages.clear()
       val t = ms(Bench.timed(spark)(fn(spark, sfDir)))
       val measured = stages.snapshot()
-      println(s"PROFILE $n warm=$warm sf=$t stages=${measured.length} " +
-        s"tasks=${measured.map(_.numTasks).sum} compiles=${stages.compiles}")
+      println(s"PROFILE $n warm=$warm sf=$t jobs=${stages.jobs} " +
+        s"stages=${measured.length} tasks=${measured.map(_.numTasks).sum} " +
+        s"compiles=${stages.compiles}")
       if (sys.env.contains("SPARK_GRAFT_ROWMETRICS")) rowMetrics()
       if (sys.env.contains("SPARK_GRAFT_STAGES"))
         measured.foreach { i =>

@@ -37,9 +37,10 @@ class BenchSpec extends SparkSpec {
       assert(Bench.timed(spark)(spark.range(0, 90, 1, 3).selectExpr("id * 7919"))._2.isEmpty)
       assert(log.snapshot().exists(_.numTasks == 3))
       assert(log.compiles > 0)
+      assert(log.jobs >= 1)
       log.clear()
       assert(log.snapshot().isEmpty)
-      assert(log.compiles == 0)
+      assert(log.compiles == 0 && log.jobs == 0)
       val (_, nStages, nTasks, heavy) = log.minOf2(spark)(spark.range(0, 90, 1, 3).toDF())
       assert(nStages >= 1 && nTasks >= 3 && heavy == 0)
     } finally spark.sparkContext.removeSparkListener(log)

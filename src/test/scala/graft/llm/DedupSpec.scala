@@ -76,6 +76,30 @@ class DedupSpec extends SparkSpec {
     assert(est == full)
   }
 
+  test("batchNearDupVerified finds exactly the store probe's pairs plus " +
+       "the batch-internal pass's pairs, and only the latter without a store") {
+    // stored = docs 0,2,4..; batch = docs 1,3,5.. (1 dups 0/2, 3
+    // near-dups them, and 1/3 pair inside the batch)
+    val stored = docs.filter(col("doc_id") % 2 === 0)
+    val fresh = docs.filter(col("doc_id") % 2 === 1)
+    val storedSigs = Dedup.minHashSignatures(stored, "doc_id", "text",
+      n = 3, numHashes = 64)
+    val freshSigs = Dedup.minHashSignatures(fresh, "doc_id", "text",
+      n = 3, numHashes = 64).localCheckpoint()
+    def fused(store: Option[(org.apache.spark.sql.DataFrame,
+                             org.apache.spark.sql.DataFrame)]) =
+      Dedup.batchNearDupVerified(fresh, freshSigs, "doc_id", "text", store)
+        .as[(Long, Long, Boolean, Double)].collect().toSet
+    val vsStore = Dedup.incrementalNearDupVerified(fresh, "doc_id", "text",
+        storedSigs, stored)
+      .as[(Long, Long, Double)].collect().map { case (a, b, j) => (a, b, true, j) }
+    val internal = Dedup.minHashNearDupVerified(fresh, "doc_id", "text")
+      .as[(Long, Long, Double)].collect().map { case (a, b, j) => (a, b, false, j) }
+    assert(vsStore.nonEmpty && internal.nonEmpty)
+    assert(fused(Some((storedSigs, stored))) == (vsStore ++ internal).toSet)
+    assert(fused(None) == internal.toSet)
+  }
+
   test("precomputed signatures: the caller-supplied frame reproduces the " +
        "self-computed path row for row (verified + incremental)") {
     val stored = docs.filter(col("doc_id") % 2 === 0)

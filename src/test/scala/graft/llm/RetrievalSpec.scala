@@ -276,6 +276,31 @@ class RetrievalSpec extends SparkSpec {
     assert(got.nonEmpty && got == direct(batch, q), s"got $got")
   }
 
+  test("a second append at a new version compiles no generated class " +
+       "and stores the version as before") {
+    val path =
+      s"/tmp/graft_test_lexver_${ProcessHandle.current().pid()}"
+    def batch(i: Int) = Seq((10L * i, s"alpha w$i pad"), (10L * i + 1, s"beta w$i"))
+      .toDF("doc_id", "text")
+    Retrieval.buildLexIndex(batch(0), "doc_id", "text", path)
+    Retrieval.appendToLexIndex(spark, path, batch(1), "doc_id", "text", 7L)
+    val log = new graft.Bench.StageLog(spark.sparkContext)
+    try {
+      log.clear()
+      Retrieval.appendToLexIndex(spark, path, batch(2), "doc_id", "text", 8L)
+      log.snapshot()
+      assert(log.compiles == 0, s"${log.compiles} classes compiled")
+    } finally spark.sparkContext.removeSparkListener(log)
+    // the version column keeps its type and values
+    Seq("postings", "doclen").foreach { t =>
+      val stored = spark.read.parquet(s"$path/$t")
+      assert(stored.schema("ver").dataType == org.apache.spark.sql.types.LongType)
+      assert(stored.select("ver").distinct().as[Long].collect().toSet ==
+        Set(0L, 7L, 8L))
+    }
+    assert(Retrieval.currentLexVersion(spark, path) == 8L)
+  }
+
   test("hybrid fusion surfaces docs that neither retriever alone " +
        "ranks first (the reason RRF exists)") {
     // lexical likes d1 then d3; dense likes d2 then d3 — d3, second

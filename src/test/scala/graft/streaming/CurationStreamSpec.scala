@@ -74,6 +74,45 @@ class CurationStreamSpec extends SparkSpec {
     assert(storeIds(store) == Set(1L, 8L))
   }
 
+  test("within-batch order: a batch doc whose only near-dup partner " +
+    "dropped against the store is kept") {
+    val store = freshStore("order")
+    CurationStream.processBatch(b1.toDF(), "doc_id", "text", profiles, store)
+    // 20 near-dups stored 1 (T2 ~ T1); 21 near-dups only 20 (T2b ~ T2,
+    // not T1), so it is kept once 20 drops for the store; 30/31 are a
+    // pair with no store partner, so the larger id drops
+    val f = CurationStream.processBatch(Seq(
+        DocRow(20L, T2, "web"), DocRow(21L, T2b, "web"),
+        DocRow(30L, T5, "web"), DocRow(31L, T5.replace("cold", "warm"), "web"))
+        .toDF(), "doc_id", "text", profiles, store)
+      .as[(String, Long)].collect().toMap
+    assert(storeIds(store) == Set(1L, 21L, 30L))
+    assert(f === Map("arrived" -> 4L, "lang" -> 4L, "quality" -> 4L,
+      "exact_dedup" -> 4L, "near_dup" -> 2L, "store_total" -> 3L))
+  }
+
+  test("a steady-state batch against a small store runs a fixed number " +
+    "of jobs") {
+    // pins the job count of one curated batch (its funnel collected
+    // too): a change that adds a pass or a materialization fails here
+    val store = freshStore("jobs")
+    CurationStream.processBatch(b1.toDF(), "doc_id", "text", profiles, store)
+    CurationStream.processBatch(b2.toDF(), "doc_id", "text", profiles, store)
+    // new ids and no exact collision: 40 near-dups stored 1, 42 stored
+    // 8, and 41 only 40, so 41 survives
+    val batch = Seq(DocRow(40L, T2, "web"), DocRow(41L, T2b, "books"),
+      DocRow(42L, T5.replace("cold", "warm"), "web")).toDF()
+    val log = new graft.Bench.StageLog(spark.sparkContext)
+    try {
+      log.clear()
+      val f = CurationStream.processBatch(batch, "doc_id", "text", profiles,
+        store).as[(String, Long)].collect().toMap
+      log.snapshot()
+      assert(f("near_dup") == 1L && f("store_total") == 3L, f)
+      assert(log.jobs == 29L, s"${log.jobs} jobs")
+    } finally spark.sparkContext.removeSparkListener(log)
+  }
+
   test("replayed micro-batch is a no-op (idempotent restart)") {
     val store = freshStore("replay")
     CurationStream.processBatch(b1.toDF(), "doc_id", "text", profiles, store)
