@@ -1162,7 +1162,7 @@ object SignedProject {
   * as argmax of `dot − ½‖c‖²` over the per-centroid half-norms; ties
   * → the lowest code, a total order). The codebook
   * (`m × ≤256 × dims/m`, trained driver-side on a bounded sample —
-  * see [[graft.llm.Similarity.buildIvfPqIndex]]) rides into codegen
+  * see [[graft.llm.IvfStore.Pq]]) rides into codegen
   * as a reference object, exactly the [[ArgmaxMatrixDot]] memory
   * contract. Null/short input positions contribute 0, the
   * [[ArrayDotProduct]] semantics. One build-time pass per vector —

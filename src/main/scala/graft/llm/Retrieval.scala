@@ -240,7 +240,7 @@ object Retrieval {
 
   /** Build the persisted lexical index — the train-once/serve-many
     * face of BM25, the lexical twin of
-    * [[Similarity.buildIvfIndex]]:
+    * [[IvfStore.build]]:
     * `path/postings` holds `(term, doc_id, tf, ver)` and
     * `path/doclen` holds `(doc_id, dl, ver)`, both APPEND-ONLY —
     * [[appendToLexIndex]] ingests new or re-ingested documents as a

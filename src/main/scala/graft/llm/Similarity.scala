@@ -135,7 +135,7 @@ object Similarity {
     * aggregation rather than a window sort: ≤ k pairs per mapper·query
     * before any exchange. Cost is O(|queries|·|corpus|·dims) — bound
     * the query batch; the unbounded-corpus path is
-    * [[searchIvfIndex]] candidates + the same label anti-filter +
+    * [[IvfStore.search]] candidates + the same label anti-filter +
     * exact re-rank.
     *
     * `idCol` must be integral (the bounded top-k buffer carries ids as
@@ -656,12 +656,11 @@ object Similarity {
     * level-2 centroids (hierarchical path only, a DataFrame — never
     * collected), and the inverted lists — the corpus unit vectors
     * keyed by their (c1, c2) cell. `lists` IS the searchable index.
+    * `cellMats` holds the level-2 cells when they fit the driver budget.
     */
-  private final case class IvfIndex(l1m: Array[Array[Double]],
-                                    l2: Option[DataFrame],
-                                    lists: DataFrame, l1n: Int, l2n: Int,
-                                    seed: Long,
-                                    cellMats: Option[Array[Array[Array[Double]]]] = None)
+  private[graft] final case class IvfIndex(l1m: Array[Array[Double]],
+      l2: Option[DataFrame], lists: DataFrame, l1n: Int, l2n: Int, seed: Long,
+      cellMats: Option[Array[Array[Array[Double]]]] = None)
 
   /** Driver budget for the level-2 expression path: total elements
     * (cells · dims) of the per-cell child matrices that may be
@@ -703,13 +702,15 @@ object Similarity {
     }
   }
 
-  /** (id as `idCol`, original vec, L2-normalized `_unit`), spread and
-    * checkpointed — the shared input shape for training and probing.
-    * A frame that ALREADY carries `_unit` (built by [[prepareUnit]],
-    * e.g. a caller-memoized corpus shared across several ANN queries
-    * in one JVM) is passed through with just the id realignment — no
-    * second normalize/repartition/checkpoint.
+  /** A persisted index's level-2 cells, collected when all `l1n · l2n`
+    * fit [[maxDriverCellElems]]; `None` keeps the salted-join path.
     */
+  private[graft] def cellsWithinBudget(l2: DataFrame, l1n: Int, l2n: Int,
+                                       dims: Int): Option[Array[Array[Array[Double]]]] =
+    if (l1n.toLong * l2n * dims <= maxDriverCellElems(l2.sparkSession))
+      Some(collectCells(l2, l1n))
+    else None
+
   /** Rows-per-task floor for the ANN family's CPU-dense small-byte
     * frames. Round-15 (§5, VERDICT item 3): the whole 32c≫8c wall
     * inversion on q237/q168/q167 (5.7 s vs 2.2 s at the r14 driver)
@@ -728,7 +729,7 @@ object Similarity {
     * the ~10–400 ms per-task overhead band).
     */
   private val vecTaskRows = 1024L
-  private def vecPar(spark: SparkSession, n: Long): Int =
+  private[graft] def vecPar(spark: SparkSession, n: Long): Int =
     math.min(spark.sparkContext.defaultParallelism.toLong,
       math.max(1L, (n + vecTaskRows - 1) / vecTaskRows)).toInt
   /** Spread a checkpointed frame to the rows-derived width when its
@@ -743,8 +744,15 @@ object Similarity {
     else ck.repartition(target).localCheckpoint()
   }
 
-  private def normalizedVecs(df: DataFrame, id: String, idCol: String,
-                             vecCol: String): DataFrame =
+  /** (id as `idCol`, original vec, L2-normalized `_unit`), spread and
+    * checkpointed — the shared input shape for training and probing.
+    * A frame that ALREADY carries `_unit` (built by [[prepareUnit]],
+    * e.g. a caller-memoized corpus shared across several ANN queries
+    * in one JVM) is passed through with just the id realignment — no
+    * second normalize/repartition/checkpoint.
+    */
+  private[graft] def normalizedVecs(df: DataFrame, id: String, idCol: String,
+                                    vecCol: String): DataFrame =
     if (df.columns.contains("_unit"))
       df.select(col(id).as(idCol), col(vecCol), col("_unit"))
     else {
@@ -764,7 +772,7 @@ object Similarity {
     }
 
   /** Pre-normalize an embedding frame ONCE for use across several ANN
-    * calls ([[embedIvfTopK]]/[[embedIvfSearch]]/[[buildIvfIndex]]/
+    * calls ([[embedIvfTopK]]/[[embedIvfSearch]]/[[IvfStore.build]]/
     * [[embedLshTopK]]): returns the spread + checkpointed
     * (id, vec, `_unit`) shape that every entry point detects and
     * reuses instead of re-reading and re-normalizing the corpus. Same
@@ -795,9 +803,9 @@ object Similarity {
     * build the inverted lists. See [[embedIvfTopK]] for the design
     * rationale; this is the half a persisted index stores.
     */
-  private def trainIvfIndex(unit: DataFrame, idCol: String,
-                            nCentroids: Int, maxIter: Int,
-                            seed: Long): IvfIndex = {
+  private[graft] def trainIvfIndex(unit: DataFrame, idCol: String,
+                                   nCentroids: Int, maxIter: Int,
+                                   seed: Long): IvfIndex = {
     val par = unit.sparkSession.sparkContext.defaultParallelism
     // Auto cell count (default): candidate volume per query is
     // corpus·nProbe/nCentroids, so FIXED cells make the total verify
@@ -940,14 +948,6 @@ object Similarity {
         .select(col("_c1"), (col("rank") - 1).as("_c2"), col(idCol))
         .join(corpus.select(col(idCol), col("_unit")), Seq(idCol))
         .select(col("_c1"), col("_c2"), col("_unit").as("_c2v"))
-      def l2Assign(cs: DataFrame): DataFrame =
-        salted(corpus, idCol, par, l1n, seed)
-          .join(replicated(cs, par, l1n), Seq("_c1", "_salt"))
-          .select(col(idCol), col("_c1"), col("_c2"),
-            doubleDot(col("_unit"), col("_c2v")).as("_dot"))
-          .groupBy(col(idCol), col("_c1"))
-          .agg(max_by(col("_c2"),
-            struct(col("_dot"), (-col("_c2")).as("_t"))).as("_c2"))
       // level-2 assignment: a narrow expression over the driver-held
       // per-cell child matrices when they fit the budget (argmax ties
       // → smaller c2, identical to the join's max_by struct), the
@@ -960,7 +960,7 @@ object Similarity {
           corpus.withColumn("_c2",
             graft.functions.VectorExprs.groupedArgmaxDot(
               col("_unit"), col("_c1"), collectCells(cs, l1n)))
-        else corpus.join(l2Assign(cs), Seq(idCol, "_c1"))
+        else joinAssignL2(corpus, cs, idCol, par, l1n, seed)
       for (_ <- 1 to maxIter) {
         // same bounded-buffer mean as level 1 (one dims-double buffer
         // per (c1, c2) cell, map-side partial, cells rows shuffled) —
@@ -993,11 +993,49 @@ object Similarity {
         case Some(cm) => corpus.withColumn("_c2",
           graft.functions.VectorExprs.groupedArgmaxDot(
             col("_unit"), col("_c1"), cm))
-        case None => corpus.join(l2Assign(l2), Seq(idCol, "_c1"))
+        case None => joinAssignL2(corpus, l2, idCol, par, l1n, seed)
       }).select(col(idCol).as("id_b"), col("_unit").as("_ub"),
           col("_c1"), col("_c2").cast("int").as("_c2"))
       IvfIndex(l1m, Some(l2), lists, l1n, l2n, seed, finalCells)
     }
+  }
+
+  /** Level-2 assignment past the driver budget, by salted equi-join on
+    * `_c1`: each `(idCol, _unit, _c1)` row of `vecs` gains its argmax
+    * `_c2` in `cells` (ties → smaller `_c2`, as the expression path).
+    */
+  private def joinAssignL2(vecs: DataFrame, cells: DataFrame, idCol: String,
+                           par: Int, l1n: Int, seed: Long): DataFrame =
+    vecs.join(
+      salted(vecs, idCol, par, l1n, seed)
+        .join(replicated(cells, par, l1n), Seq("_c1", "_salt"))
+        .select(col(idCol), col("_c1"), col("_c2"),
+          doubleDot(col("_unit"), col("_c2v")).as("_dot"))
+        .groupBy(col(idCol), col("_c1"))
+        .agg(max_by(col("_c2"),
+          struct(col("_dot"), (-col("_c2")).as("_t"))).as("_c2")),
+      Seq(idCol, "_c1"))
+
+  /** New unit vectors `(idCol, _unit)` as list rows `(id_b, _ub, _c1,
+    * _c2)` of a trained index: the lists build's argmax assignment
+    * under its frozen centroids, so each lands where a rebuild with
+    * frozen centroids would put it.
+    */
+  private[graft] def assignCells(idx: IvfIndex, unit: DataFrame,
+                                 idCol: String): DataFrame = {
+    val withC1 = unit.select(col(idCol), col("_unit"),
+      graft.functions.VectorExprs.argmaxDot(col("_unit"), idx.l1m).as("_c1"))
+    val assigned = (idx.l2, idx.cellMats) match {
+      case (None, _) => withC1.withColumn("_c2", lit(0))
+      case (_, Some(cells)) => withC1.withColumn("_c2",
+        graft.functions.VectorExprs.groupedArgmaxDot(
+          col("_unit"), col("_c1"), cells))
+      case (Some(l2), None) =>
+        joinAssignL2(withC1.localCheckpoint(), l2, idCol,
+          unit.sparkSession.sparkContext.defaultParallelism, idx.l1n, idx.seed)
+    }
+    assigned.select(col(idCol).as("id_b"), col("_unit").as("_ub"),
+      col("_c1"), col("_c2").cast("int").as("_c2"))
   }
 
   /** Probe a trained index with a normalized query frame → one row per
@@ -1012,8 +1050,8 @@ object Similarity {
     * miss this fixed. Per-query quantizer cost is
     * O(√cells · (1 + nProbe)) dots, ≤ nProbe + pL1 probed cells.
     */
-  private def probeIvfIndex(idx: IvfIndex, qunit: DataFrame, idCol: String,
-                            nProbe: Int): DataFrame = {
+  private[graft] def probeIvfIndex(idx: IvfIndex, qunit: DataFrame,
+                                   idCol: String, nProbe: Int): DataFrame = {
     val par = qunit.sparkSession.sparkContext.defaultParallelism
     idx.l2 match {
       case None =>
@@ -1028,14 +1066,7 @@ object Similarity {
           .withColumn("_c2", lit(0))
       case Some(l2) =>
         val pL1 = math.min(idx.l1n, math.max(2, nProbe))
-        val dims = idx.l1m.headOption.map(_.length).getOrElse(0)
-        val cellsOpt = idx.cellMats.orElse {
-          if (idx.l1n.toLong * idx.l2n * dims <=
-              maxDriverCellElems(qunit.sparkSession))
-            Some(collectCells(l2, idx.l1n))
-          else None
-        }
-        if (cellsOpt.isDefined) {
+        if (idx.cellMats.isDefined) {
           // expression path: the WHOLE hierarchical probe (level-1
           // beam, level-2 scoring, global top-nProbe ∪ per-cell
           // argmax, dedup) as one narrow codegen'd map per query —
@@ -1044,7 +1075,7 @@ object Similarity {
           return qunit.select(col(idCol).as("id_a"),
               col("_unit").as("_ua"),
               explode(graft.functions.VectorExprs.hierProbeCells(
-                col("_unit"), idx.l1m, cellsOpt.get, pL1, nProbe))
+                col("_unit"), idx.l1m, idx.cellMats.get, pL1, nProbe))
                 .as("_cell"))
             .select(col("id_a"), col("_ua"),
               col("_cell._c1").as("_c1"), col("_cell._c2").as("_c2"))
@@ -1090,6 +1121,17 @@ object Similarity {
     }
   }
 
+  /** What the verify reads of a list row: the member struct the fused
+    * cell scan takes ([[graft.functions.CellTopKScan]]; `int8` names
+    * its member layout) and the pair-join path's score against `_ua`.
+    * A persisted index's codec brings its own ([[IvfStore.Int8]]).
+    */
+  private[graft] final case class ListScan(member: Column, score: Column,
+                                           int8: Boolean)
+  private[graft] def FloatScan: ListScan =
+    ListScan(struct(col("id_b").cast("long").as("id"), col("_ub")),
+      round(doubleDot(col("_ua"), col("_ub")), 4), int8 = false)
+
   /** Exact-cosine verify + per-query top-k over the probed cells.
     * Verify runs on the ALREADY-normalized double vectors: cosine is
     * one codegen'd dot per pair — no norms and no per-pair
@@ -1120,18 +1162,13 @@ object Similarity {
     * balanced to O(1)× the mean; a corpus degenerate enough to
     * collapse cells breaks IVF recall before it breaks block size).
     */
-  private def rankIvfPairs(probes: DataFrame, lists: DataFrame, k: Int,
-                           excludeSelf: Boolean,
-                           quantized: Boolean = false): DataFrame = {
+  private[graft] def rankIvfPairs(probes: DataFrame, lists: DataFrame,
+                                  k: Int, excludeSelf: Boolean,
+                                  scan: ListScan = FloatScan): DataFrame = {
     val fused = probes.sparkSession.conf
       .getOption("graft.ivf.fusedVerify").forall(_.toBoolean)
     val cos =
       if (fused) {
-        val mem =
-          if (quantized)
-            struct(col("id_b").cast("long").as("id"), col("_qb"),
-              col("_sb").cast("double").as("_sb"))
-          else struct(col("id_b").cast("long").as("id"), col("_ub"))
         // SHUFFLE_HASH, not sort-merge: the probe side is |queries|·
         // nProbe rows each carrying the dims-double query vector —
         // sorting it is the expensive half of an SMJ (the sf10 profile
@@ -1142,28 +1179,20 @@ object Similarity {
         // BYTES but cells-sized in ROWS; per shuffle partition the
         // build map holds cells/partitions entries).
         val blocks = lists.groupBy(col("_c1"), col("_c2"))
-          .agg(collect_list(mem).as("_mem")).hint("shuffle_hash")
+          .agg(collect_list(scan.member).as("_mem")).hint("shuffle_hash")
         probes.join(blocks, Seq("_c1", "_c2"))
           .select(col("id_a"),
             explode(graft.functions.VectorExprs.cellTopKScan(
               col("_ua"), col("_mem"),
               if (excludeSelf) col("id_a") else lit(0L),
-              k, excludeSelf, quantized)).as("_p"))
+              k, excludeSelf, scan.int8)).as("_p"))
           .select(col("id_a"), col("_p.id").as("id_b"),
             col("_p.score").as("cos"))
       } else {
         val paired = probes.join(lists, Seq("_c1", "_c2"))
-        // quantized lists: rescore in double from the stored int8
-        // vector — one codegen'd mixed-precision dot per pair, scale
-        // applied once
-        val score =
-          if (quantized)
-            round(graft.functions.VectorExprs.dotInt8(col("_ua"), col("_qb")) *
-              col("_sb") / 127.0, 4)
-          else round(doubleDot(col("_ua"), col("_ub")), 4)
         (if (excludeSelf) paired.filter(col("id_a") =!= col("id_b"))
          else paired)
-          .withColumn("cos", score)
+          .withColumn("cos", scan.score)
           .select(col("id_a"), col("id_b"), col("cos"))
       }
     // bounded per-query top-k ([[graft.operators.TopKAgg]], same
@@ -1189,478 +1218,6 @@ object Similarity {
     val idx = trainIvfIndex(unit, idCol, nCentroids, maxIter, seed)
     rankIvfPairs(probeIvfIndex(idx, qunit, idCol, nProbe), idx.lists, k,
       excludeSelf = queriesOpt.isEmpty)
-  }
-
-  /** Train an IVF index on a corpus and PERSIST it: level-1 centroids,
-    * level-2 centroids (hierarchical path) and the inverted lists
-    * (corpus unit vectors keyed by cell) as parquet, plus a one-line
-    * meta JSON. The index is the train-once/serve-many half of ANN:
-    * query batches hit [[searchIvfIndex]] without ever re-scanning or
-    * re-clustering the corpus. The lists are corpus-sized by nature
-    * (they ARE the corpus, cell-keyed) — at 100 TB they live where the
-    * corpus lives, and `quantized = true` (the default) stores them
-    * INT8 (per-vector symmetric scale, the [[quantizeInt8]] codec): a
-    * 4× cut in index bytes and serve-scan bandwidth on exactly the
-    * corpus-sized half of the index. Serve-time scoring reconstructs
-    * the dot in double (`dot(query, q8) · scale / 127`, one codegen'd
-    * mixed-precision expression per candidate — no dequantized array
-    * is ever materialized), bounding per-pair cosine error by
-    * `Σ|q_i|·(scale/254) ≤ √dims/254` of unit-vector mass, far inside
-    * ANN ranking noise (SimilaritySpec pins the bound and the recall
-    * gates pin EQUAL). The layout is recorded in meta.json —
-    * [[searchIvfIndex]] detects it, so old float indexes keep
-    * serving.
-    */
-  def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                    path: String, nCentroids: Int = -1, maxIter: Int = 1,
-                    seed: Long = 42L, quantized: Boolean = true): Unit = {
-    val unit = normalizedVecs(corpus, idCol, idCol, vecCol)
-    val idx = trainIvfIndex(unit, idCol, nCentroids, maxIter, seed)
-    val sess = corpus.sparkSession
-    import sess.implicits._
-    // the centroid tables are DRIVER-BOUNDED by contract (the l1
-    // matrix is literally a collected array; l2 is ≤ cells rows) —
-    // write each as ONE file (round-15, §6): a driver-local Seq toDF
-    // inherits defaultParallelism, so these KB-scale tables became
-    // `par` sliver files each, and every serve-time read paid a
-    // par-task footer-read stage
-    idx.l1m.toSeq.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }.toDF("_c1", "_c1v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/l1")
-    idx.l2.foreach(_.coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/l2"))
-    // lists are RANGE-LAID-OUT by cell: each file covers a contiguous
-    // (_c1, _c2) range, so a serve-time `_c1 IN (probed cells)` filter
-    // prunes files and row groups via parquet min/max stats instead of
-    // scanning the corpus-sized index (the 100 TB serve contract).
-    // Sort-based layout, not partitionBy: one directory per cell means
-    // √cells tiny files at any local scale (566 dirs → a packed
-    // single-task scan at the 10× smoke) and millions of directories
-    // at corpus scale; range+sort gives the same pruning with
-    // bounded-count, well-sized files.
-    val listsRanged = idx.lists
-      // rows-derived file count (round-15, §6): par range-files of a
-      // small corpus are slivers; the clamp restores par width at scale
-      .repartitionByRange(vecPar(corpus.sparkSession, unit.count()),
-        col("_c1"), col("_c2"))
-      .sortWithinPartitions("_c1", "_c2")
-    // int8 storage codec (build-once): one codegen'd pass per vector
-    // ([[graft.functions.Int8Quantize]]); per-vector symmetric scale,
-    // zero vectors keep scale 0 and quantize to zeros. The projection
-    // sits AFTER the range exchange, so (a) the range partitioner's
-    // sampling pass reads the float lists without executing the codec
-    // (before round 10 it ran the codec twice: once to sample bounds,
-    // once to write), and (b) the codec work is spread across all
-    // ranged write tasks. A projection does not reorder rows, so the
-    // sorted-within-partitions layout — and the parquet min/max
-    // pruning it buys — is unchanged.
-    val listsOut =
-      if (!quantized) listsRanged
-      else {
-        val q = graft.functions.VectorExprs.int8Quantize(col("_ub"))
-        listsRanged.select(col("id_b"), col("_c1"), col("_c2"),
-          q.getField("scale").as("_sb"),
-          q.getField("qvec").as("_qb"))
-      }
-    listsOut.write.mode("overwrite").parquet(s"$path/lists")
-    val meta = s"""{"l1n":${idx.l1n},"l2n":${idx.l2n},"seed":${idx.seed},""" +
-      s""""quantized":$quantized}"""
-    // meta goes through the Hadoop FileSystem resolved from the path —
-    // java.nio would silently write local (or throw) for hdfs://s3a://
-    // paths, the natural home of a corpus-sized index
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta.json")
-    val fs = metaPath.getFileSystem(
-      corpus.sparkSession.sessionState.newHadoopConf())
-    val out = fs.create(metaPath, true)
-    try out.write(meta.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Search a PERSISTED IVF index (see [[buildIvfIndex]]) with new
-    * query vectors: (id_a = query id, id_b = corpus id, cos, rank).
-    */
-  /** Parse a persisted index's meta.json → (l1n, l2n, seed,
-    * quantized). The seed is written as a Long verbatim — parse it as
-    * one (an Int-range parse rejected any index built with a wide
-    * seed); an absent layout flag means a pre-quantization float
-    * index, which keeps serving. Meta goes through the Hadoop
-    * FileSystem resolved from the path (hdfs://s3a:// are the natural
-    * homes of a corpus-sized index).
-    */
-  private def ivfMetaString(spark: SparkSession, path: String): String = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta.json")
-    val fs = metaPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(metaPath)
-    try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-    finally in.close()
-  }
-
-  private def isPqLayout(meta: String): Boolean =
-    """"layout":"ivfpq"""".r.findFirstIn(meta).isDefined
-
-  private def readIvfMeta(spark: SparkSession,
-                          path: String): (Int, Int, Long, Boolean) = {
-    val meta = ivfMetaString(spark, path)
-    def longOf(key: String): Long =
-      s""""$key":(-?\\d+)""".r.findFirstMatchIn(meta).get.group(1).toLong
-    (longOf("l1n").toInt, longOf("l2n").toInt, longOf("seed"),
-      """"quantized":true""".r.findFirstIn(meta).isDefined)
-  }
-
-  def searchIvfIndex(spark: SparkSession, path: String, queries: DataFrame,
-                     queryIdCol: String, vecCol: String, k: Int,
-                     nProbe: Int = 4): DataFrame = {
-    val (l1n, l2n, seed, quantized) = readIvfMeta(spark, path)
-    val l2 = if (l2n > 1) Some(spark.read.parquet(s"$path/l2")) else None
-    // the level-1 matrix is driver/broadcast-bounded by design — read
-    // it back into the same in-expression shape training used
-    val l1m = spark.read.parquet(s"$path/l1").orderBy(col("_c1"))
-      .collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("_c1v")).toArray)
-    val idx = IvfIndex(l1m, l2,
-      spark.read.parquet(s"$path/lists"), l1n, l2n, seed)
-    val qunit = normalizedVecs(queries, queryIdCol, queryIdCol, vecCol)
-    // probes are |queries|·≤(nProbe+pL1) slim rows — checkpoint them
-    // so the probed-cell set (≤ l1n distinct values, driver-bounded by
-    // the same contract as the centroid matrix) can be collected and
-    // PUSHED DOWN onto the lists scan: with the range/sorted layout
-    // the IN filter prunes files and row groups via parquet stats, so
-    // a small query batch reads only the cells it probes instead of
-    // the corpus-sized index. Results are identical — an unprobed
-    // cell's lists cannot join anyway.
-    // spread by query id before the checkpoint: AQE coalesces the
-    // probe-dedup shuffle to ONE partition (slim rows), and since the
-    // verify join broadcasts the pruned lists, everything downstream
-    // would run narrow in that single task (6.4 s at the 10× smoke).
-    // Hash(id_a) is also what the rank window wants.
-    val probes = probeIvfIndex(idx, qunit, queryIdCol, nProbe)
-      .repartition(
-        vecPar(spark, qunit.count() * math.max(1, nProbe)), col("id_a"))
-      .localCheckpoint()
-    val probedCells = probes.select(col("_c1")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    rankIvfPairs(probes,
-      idx.lists.filter(col("_c1").isin(probedCells.map(Integer.valueOf): _*)),
-      k, excludeSelf = false, quantized = quantized)
-  }
-
-  /** Append NEW vectors to a persisted IVF index WITHOUT retraining —
-    * the incremental-ingest face of the train-once/serve-many index
-    * (an embedding corpus grows daily; the quantizer is rebuilt
-    * rarely): each new vector is assigned to its cell under the
-    * EXISTING centroids (the same argmax expressions the lists build
-    * used — an appended vector lands exactly where a rebuild with
-    * frozen centroids would put it) and written as ordinary list rows
-    * in the stored layout and codec. Centroids, meta, and existing
-    * list files are untouched; [[searchIvfIndex]] serves the union
-    * immediately.
-    *
-    * Each append batch is range-laid and sorted on (_c1, _c2) like
-    * the base build, so parquet min/max stats keep pruning per FILE —
-    * the serve-time `_c1 IN (probed)` filter skips non-probed files
-    * of every batch. The documented trade (standard IVF practice):
-    * centroids do not learn the appended distribution — rebuild when
-    * drift degrades recall (measure with [[graft.ml.Eval.psiBins]] on
-    * the assignment histogram).
-    *
-    * Scale: one narrow assignment pass over the batch (level-2 via
-    * the driver-held cell matrices under the same budget contract as
-    * the probe path, the salted equi-join beyond it) + one ranged
-    * write; nothing reads the existing corpus-sized lists.
-    */
-  def appendToIvfIndex(spark: SparkSession, path: String,
-                       newVectors: DataFrame, idCol: String,
-                       vecCol: String): Unit = {
-    val (l1n, l2n, seed, quantized) = readIvfMeta(spark, path)
-    // an IVF-PQ index's rows additionally carry the PQ codes column —
-    // an append that omitted it would leave `_pq` NULL for the whole
-    // batch and the ADC scan would silently score every appended
-    // vector 0 (recall loss with no error); encode under the STORED
-    // codebooks, the frozen-centroids discipline applied to the
-    // second quantizer too
-    val pqCb =
-      if (isPqLayout(ivfMetaString(spark, path)))
-        Some(readCodebook(spark, path))
-      else None
-    val l1m = spark.read.parquet(s"$path/l1").orderBy(col("_c1"))
-      .collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("_c1v")).toArray)
-    val par = spark.sparkContext.defaultParallelism
-    val unit = normalizedVecs(newVectors, idCol, idCol, vecCol)
-    val withC1 = unit.select(col(idCol), col("_unit"),
-      graft.functions.VectorExprs.argmaxDot(col("_unit"), l1m).as("_c1"))
-    val dims = l1m.headOption.map(_.length).getOrElse(0)
-    val assigned =
-      if (l2n <= 1) withC1.withColumn("_c2", lit(0))
-      else {
-        val l2 = spark.read.parquet(s"$path/l2")
-        if (l1n.toLong * l2n * dims <= maxDriverCellElems(spark))
-          withC1.withColumn("_c2",
-            graft.functions.VectorExprs.groupedArgmaxDot(
-              col("_unit"), col("_c1"), collectCells(l2, l1n)))
-        else {
-          // beyond the driver budget: the training loop's salted
-          // equi-join assignment (ties → smaller _c2, identical)
-          val batch = withC1.localCheckpoint()
-          batch.join(
-            salted(batch, idCol, par, l1n, seed)
-              .join(replicated(l2, par, l1n), Seq("_c1", "_salt"))
-              .select(col(idCol), col("_c1"), col("_c2"),
-                doubleDot(col("_unit"), col("_c2v")).as("_dot"))
-              .groupBy(col(idCol), col("_c1"))
-              .agg(max_by(col("_c2"),
-                struct(col("_dot"), (-col("_c2")).as("_t"))).as("_c2")),
-            Seq(idCol, "_c1"))
-        }
-      }
-    val listsRanged = assigned
-      .select(col(idCol).as("id_b"), col("_unit").as("_ub"),
-        col("_c1"), col("_c2").cast("int").as("_c2"))
-      // rows-derived file count — same rationale as [[buildIvfIndex]]
-      .repartitionByRange(vecPar(spark, unit.count()),
-        col("_c1"), col("_c2"))
-      .sortWithinPartitions("_c1", "_c2")
-    val listsOut =
-      if (!quantized) listsRanged
-      else {
-        val q = graft.functions.VectorExprs.int8Quantize(col("_ub"))
-        val cols = Seq(col("id_b"), col("_c1"), col("_c2"),
-          q.getField("scale").as("_sb"),
-          q.getField("qvec").as("_qb")) ++
-          pqCb.map(cb =>
-            graft.functions.VectorExprs.pqEncode(col("_ub"), cb).as("_pq"))
-        listsRanged.select(cols: _*)
-      }
-    listsOut.write.mode("append").parquet(s"$path/lists")
-  }
-
-  // ──────────── IVF-PQ: product-quantized lists (X147) ────────────
-
-  /** PQ codebook training sample cap — the same contract-bounded
-    * collect class as the 256-vector σ samples: `cap · dims` doubles
-    * on the driver (8192 · 64 = 4 MiB at the testdata shape),
-    * deterministic via the seeded-hash order, and a SAMPLE is the
-    * published practice (faiss trains PQ on ≤ ~100k points regardless
-    * of corpus size — codebooks are a distribution summary, not a
-    * corpus structure).
-    */
-  private val PqSampleCap = 8192
-  private val PqKmeansIters = 6
-  private val PqCodes = 256
-
-  /** Deterministic driver-side Lloyd k-means (the PQ subspace
-    * trainer): init = the first `k` DISTINCT points in sample order,
-    * assignment ties → the lowest centroid index, an empty cluster
-    * keeps its previous centroid. Bounded by
-    * `iters · |pts| · k · subDims` driver flops — ~100M at the
-    * defaults, well under a second.
-    */
-  private def kmeansLloyd(pts: Array[Array[Double]], k: Int,
-                          iters: Int): Array[Array[Double]] = {
-    val seen = scala.collection.mutable.LinkedHashSet.empty[Seq[Double]]
-    var i = 0
-    while (i < pts.length && seen.size < k) { seen += pts(i).toSeq; i += 1 }
-    var cents = seen.iterator.map(_.toArray).toArray
-    val sub = pts.headOption.map(_.length).getOrElse(0)
-    var it = 0
-    while (it < iters) {
-      val sums = Array.fill(cents.length, sub)(0.0)
-      val cnts = new Array[Long](cents.length)
-      pts.foreach { p =>
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < cents.length) {
-          var d = 0.0; var x = 0
-          while (x < sub) { val t = p(x) - cents(c)(x); d += t * t; x += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        var x = 0
-        while (x < sub) { sums(best)(x) += p(x); x += 1 }
-        cnts(best) += 1
-      }
-      cents = Array.tabulate(cents.length) { c =>
-        if (cnts(c) == 0) cents(c)
-        else Array.tabulate(sub)(x => sums(c)(x) / cnts(c))
-      }
-      it += 1
-    }
-    cents
-  }
-
-  /** Train the `m` per-subspace PQ codebooks (each ≤ [[PqCodes]]
-    * centroids over `dims/m` coordinates) on a bounded deterministic
-    * corpus sample.
-    */
-  private def trainPqCodebooks(unit: DataFrame, idCol: String, m: Int,
-                               seed: Long): Array[Array[Array[Double]]] = {
-    val sample = unit
-      .orderBy(xxhash64(col(idCol), lit(seed)))
-      .limit(PqSampleCap)
-      .select(col("_unit")).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty, "trainPqCodebooks: empty corpus")
-    val dims = sample(0).length
-    require(m >= 1 && dims % m == 0,
-      s"trainPqCodebooks: m=$m must divide dims=$dims")
-    val sub = dims / m
-    // subspaces are INDEPENDENT (disjoint coordinate slices, each
-    // trained deterministically from the same sample) — train them
-    // concurrently (round-15, §2.6 applied to driver CPU: the
-    // sequential loop was ~1 s of single-threaded Lloyd flops while
-    // the executor pool idled). Output order is positional, so the
-    // result is bit-identical to the sequential loop.
-    val out = new Array[Array[Array[Double]]](m)
-    java.util.stream.IntStream.range(0, m).parallel().forEach { j =>
-      val pts = sample.map(v =>
-        java.util.Arrays.copyOfRange(v, j * sub, (j + 1) * sub))
-      out(j) = kmeansLloyd(pts, PqCodes, PqKmeansIters)
-    }
-    out
-  }
-
-  private def readCodebook(spark: SparkSession,
-                           path: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read.parquet(s"$path/codebook")
-      .select(col("_j"), col("_c"), col("_cv")).collect()
-      .map(r => (r.getInt(0), r.getInt(1),
-        r.getSeq[Double](r.fieldIndex("_cv")).toArray))
-    val m = rows.iterator.map(_._1).max + 1
-    Array.tabulate(m) { j =>
-      rows.filter(_._1 == j).sortBy(_._2).map(_._3)
-    }
-  }
-
-  /** Build a PERSISTED IVF index whose lists additionally carry
-    * product-quantization codes — the 100 TB memory face BEYOND int8
-    * (L26/X147): the serve-time candidate scan reads `m` one-byte
-    * codes per vector (16 bytes at the default `m = dims/4`) instead
-    * of the `dims`-byte int8 vector — an 8–16× further cut in
-    * scan bytes on exactly the corpus-sized half of the index, the
-    * standard next step for vector serving at this scale (Jégou et
-    * al. 2011, faiss `IVFPQ`+refine).
-    *
-    * Layout: ONE lists table carrying BOTH codecs per row —
-    * `(id_b, _c1, _c2, _sb, _qb, _pq)` range-laid on (_c1, _c2)
-    * exactly like [[buildIvfIndex]]. Parquet is columnar, so the ADC
-    * scan that selects only `_pq` never reads the int8 bytes; the
-    * top-R RESCORE re-reads `_sb/_qb` for the probed cells only
-    * (same file/row-group pruning) — no separate refine table to keep
-    * consistent. Codebooks (m × ≤256 × dims/m doubles, broadcast-
-    * bounded) persist beside the centroids; `meta.json` records
-    * `layout: ivfpq` and `m`.
-    */
-  def buildIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                      path: String, m: Int = -1, nCentroids: Int = -1,
-                      maxIter: Int = 1, seed: Long = 42L): Unit = {
-    val unit = normalizedVecs(corpus, idCol, idCol, vecCol)
-    val idx = trainIvfIndex(unit, idCol, nCentroids, maxIter, seed)
-    val dims = idx.l1m.headOption.map(_.length).getOrElse(0)
-    val mEff = if (m > 0) m else math.max(1, dims / 4)
-    val cb = trainPqCodebooks(unit, idCol, mEff, seed)
-    val sess = corpus.sparkSession
-    import sess.implicits._
-    // single-file driver-bounded tables — same rationale as
-    // [[buildIvfIndex]] (round-15, §6)
-    idx.l1m.toSeq.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }.toDF("_c1", "_c1v")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/l1")
-    idx.l2.foreach(_.coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/l2"))
-    cb.zipWithIndex.flatMap { case (cs, j) =>
-      cs.zipWithIndex.map { case (v, c) => (j, c, v.toSeq) } }.toSeq
-      .toDF("_j", "_c", "_cv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-    // same range layout + post-exchange codec placement rationale as
-    // [[buildIvfIndex]]; the PQ encode is one more codegen'd
-    // projection in the ranged write tasks
-    val listsRanged = idx.lists
-      // rows-derived file count — same rationale as [[buildIvfIndex]]
-      .repartitionByRange(vecPar(sess, unit.count()),
-        col("_c1"), col("_c2"))
-      .sortWithinPartitions("_c1", "_c2")
-    val q = graft.functions.VectorExprs.int8Quantize(col("_ub"))
-    listsRanged.select(col("id_b"), col("_c1"), col("_c2"),
-        q.getField("scale").as("_sb"),
-        q.getField("qvec").as("_qb"),
-        graft.functions.VectorExprs.pqEncode(col("_ub"), cb).as("_pq"))
-      .write.mode("overwrite").parquet(s"$path/lists")
-    val meta = s"""{"l1n":${idx.l1n},"l2n":${idx.l2n},""" +
-      s""""seed":${idx.seed},"quantized":true,"layout":"ivfpq","m":$mEff}"""
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta.json")
-    val fs = metaPath.getFileSystem(sess.sessionState.newHadoopConf())
-    val out = fs.create(metaPath, true)
-    try out.write(meta.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Search a persisted IVF-PQ index ([[buildIvfPqIndex]]):
-    * asymmetric-distance candidate ranking over the PQ codes, then an
-    * exact int8 RESCORE of the top `rescoreR` per query — the
-    * standard two-stage PQ serve (ADC is lossy; the rescore restores
-    * exact ranking as long as the true top-k survives the top-R cut,
-    * which the planted-recall gate pins EQUAL).
-    *
-    * Stage economics at scale:
-    *  1. probe cells exactly like [[searchIvfIndex]] (probed-cell IN
-    *     pushdown prunes list files/row groups);
-    *  2. ADC: one [[graft.functions.PqLut]] per probe row (the
-    *     dims-length work, |queries|·nProbe times), then `m` lookups
-    *     per candidate ([[graft.functions.PqAdcDot]]) over a scan
-    *     that reads ONLY the codes column — the int8 bytes stay on
-    *     disk (columnar pruning);
-    *  3. bounded top-R per query ([[graft.operators.TopKAgg]] —
-    *     map-side collapse before the exchange);
-    *  4. rescore: the |queries|·R surviving candidates equi-join the
-    *     pruned lists' int8 columns (slim build side,
-    *     SHUFFLE_HASH-hinted) and rescore with the exact
-    *     mixed-precision dot [[searchIvfIndex]] serves — identical
-    *     scores, so downstream consumers see the same `cos` face.
-    *
-    * Output: (id_a, id_b, cos, rank) — the [[searchIvfIndex]] shape.
-    */
-  def searchIvfPqIndex(spark: SparkSession, path: String,
-                       queries: DataFrame, queryIdCol: String,
-                       vecCol: String, k: Int, nProbe: Int = 4,
-                       rescoreR: Int = -1): DataFrame = {
-    val (l1n, l2n, seed, _) = readIvfMeta(spark, path)
-    val cb = readCodebook(spark, path)
-    val l2 = if (l2n > 1) Some(spark.read.parquet(s"$path/l2")) else None
-    val l1m = spark.read.parquet(s"$path/l1").orderBy(col("_c1"))
-      .collect()
-      .map(r => r.getSeq[Double](r.fieldIndex("_c1v")).toArray)
-    val lists = spark.read.parquet(s"$path/lists")
-    val idx = IvfIndex(l1m, l2, lists, l1n, l2n, seed)
-    val qunit = normalizedVecs(queries, queryIdCol, queryIdCol, vecCol)
-    val probes = probeIvfIndex(idx, qunit, queryIdCol, nProbe)
-      .repartition(
-        vecPar(spark, qunit.count() * math.max(1, nProbe)), col("id_a"))
-      .localCheckpoint()
-    val probedCells = probes.select(col("_c1")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val pruned = lists.filter(
-      col("_c1").isin(probedCells.map(Integer.valueOf): _*))
-    val r = if (rescoreR > 0) rescoreR else math.max(32, 8 * k)
-    val adc = probes
-      .withColumn("_lut",
-        graft.functions.VectorExprs.pqLut(col("_ua"), cb))
-      .join(pruned.select(col("id_b"), col("_c1"), col("_c2"), col("_pq"))
-        .hint("shuffle_hash"), Seq("_c1", "_c2"))
-      .select(col("id_a"), col("id_b"),
-        graft.functions.VectorExprs.pqAdcDot(col("_lut"), col("_pq"))
-          .as("_adc"))
-    val cand = graft.operators.TopKAgg.perGroup(adc, "id_a", "_adc",
-        "id_b", r)
-      .select(col("id_a"), col("id_b"))
-    val candQ = cand.join(
-      qunit.select(col(queryIdCol).as("id_a"), col("_unit").as("_ua")),
-      Seq("id_a"))
-    val rescored = pruned.select(col("id_b"), col("_sb"), col("_qb"))
-      .join(candQ.hint("shuffle_hash"), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(graft.functions.VectorExprs.dotInt8(col("_ua"), col("_qb")) *
-          col("_sb") / 127.0, 4).as("cos"))
-    graft.operators.TopKAgg.perGroup(rescored, "id_a", "cos", "id_b", k)
-      .select(col("id_a"), col("id_b"), col("cos"), col("rank"))
   }
 
   /** Per-row double dot product — the native codegen'd

@@ -4,7 +4,7 @@ package queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.SparkEntry.{memoUnit, scratch}
-import graft.llm.Similarity
+import graft.llm.{IvfStore, Similarity}
 import graft.sources.Tables
 import graft.queries.Fixtures.{t, PlantOffset}
 
@@ -120,10 +120,10 @@ object VectorQueries {
     Query("q213_ann_append", (s, dir) => {
       val emb = unitEmb(s, dir)
       val path = scratch("ivfappend", dir)
-      Similarity.buildIvfIndex(emb, "vec_id", "embedding", path)
-      Similarity.appendToIvfIndex(s, path, unitPerturbed(s, dir),
+      IvfStore.build(emb, "vec_id", "embedding", path)
+      IvfStore.append(s, path, unitPerturbed(s, dir),
         "vec_id", "embedding")
-      val hits = Similarity.searchIvfIndex(s, path, emb,
+      val hits = IvfStore.search(s, path, emb,
           "vec_id", "embedding", k = 3)
         .filter(col("id_b") === col("id_a") + PlantOffset)
       emb.agg(count(lit(1)).as("n_queries"))
@@ -339,8 +339,8 @@ object VectorQueries {
     Query("q168_ann_index", (s, dir) => {
       val emb = unitEmb(s, dir)
       val path = scratch("ivfidx", dir)
-      Similarity.buildIvfIndex(emb, "vec_id", "embedding", path)
-      val hits = Similarity.searchIvfIndex(s, path, unitPerturbed(s, dir),
+      IvfStore.build(emb, "vec_id", "embedding", path)
+      val hits = IvfStore.search(s, path, unitPerturbed(s, dir),
           "vec_id", "embedding", k = 3)
         .filter(col("id_b") === col("id_a") - PlantOffset)
       emb.agg(count(lit(1)).as("n_queries"))
@@ -359,8 +359,8 @@ object VectorQueries {
     Query("q237_pq_recall", (s, dir) => {
       val emb = unitEmb(s, dir)
       val path = scratch("ivfpq", dir)
-      Similarity.buildIvfPqIndex(emb, "vec_id", "embedding", path)
-      val hits = Similarity.searchIvfPqIndex(s, path, unitPerturbed(s, dir),
+      IvfStore.build(emb, "vec_id", "embedding", path, IvfStore.Pq())
+      val hits = IvfStore.search(s, path, unitPerturbed(s, dir),
           "vec_id", "embedding", k = 3)
         .filter(col("id_b") === col("id_a") - PlantOffset)
       emb.agg(count(lit(1)).as("n_queries"))

@@ -168,9 +168,9 @@ class SimilaritySpec extends SparkSpec {
     // float layout: the persisted path must be BIT-identical to the
     // in-session search (quantized=false isolates the parquet
     // round-trip from the int8 codec, covered by the next test)
-    Similarity.buildIvfIndex(corpus, "vec_id", "embedding", path,
-      nCentroids = 8, quantized = false)
-    val loaded = Similarity.searchIvfIndex(spark, path, queries,
+    IvfStore.build(corpus, "vec_id", "embedding", path,
+      IvfStore.Float, nCentroids = 8)
+    val loaded = IvfStore.search(spark, path, queries,
         "qid", "embedding", k = 3, nProbe = 3)
       .select("id_a", "id_b", "cos").as[(Long, Long, Double)].collect().toSet
     val direct = Similarity.embedIvfSearch(corpus, queries,
@@ -201,13 +201,13 @@ class SimilaritySpec extends SparkSpec {
     val pid = ProcessHandle.current().pid()
     val pathQ = s"/tmp/graft_ivf_idx_q_$pid"
     val pathF = s"/tmp/graft_ivf_idx_f_$pid"
-    Similarity.buildIvfIndex(corpus, "vec_id", "embedding", pathQ)  // default: int8
-    Similarity.buildIvfIndex(corpus, "vec_id", "embedding", pathF,
-      quantized = false)
-    val q = Similarity.searchIvfIndex(spark, pathQ, queries,
+    IvfStore.build(corpus, "vec_id", "embedding", pathQ)  // default: int8
+    IvfStore.build(corpus, "vec_id", "embedding", pathF,
+      IvfStore.Float)
+    val q = IvfStore.search(spark, pathQ, queries,
         "qid", "embedding", k = 3, nProbe = 3)
       .select("id_a", "id_b", "cos").as[(Long, Long, Double)].collect()
-    val f = Similarity.searchIvfIndex(spark, pathF, queries,
+    val f = IvfStore.search(spark, pathF, queries,
         "qid", "embedding", k = 3, nProbe = 3)
       .select("id_a", "id_b", "cos").as[(Long, Long, Double)].collect()
     // per-pair rescoring error bound: |Δcos| ≤ Σ|u_i|·(scale/254)
@@ -253,16 +253,16 @@ class SimilaritySpec extends SparkSpec {
     val pid = ProcessHandle.current().pid()
     val pathP = s"/tmp/graft_ivfpq_idx_$pid"
     val pathQ = s"/tmp/graft_ivfpq_ref_$pid"
-    Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding", pathP, m = 4)
-    Similarity.buildIvfIndex(corpus, "vec_id", "embedding", pathQ)
+    IvfStore.build(corpus, "vec_id", "embedding", pathP, IvfStore.Pq(4))
+    IvfStore.build(corpus, "vec_id", "embedding", pathQ)
     // the scan-path payload really is m one-byte codes
     val codes = spark.read.parquet(s"$pathP/lists")
       .select("_pq").as[Seq[Byte]].head()
     assert(codes.length == 4, s"expected 4 PQ codes, got ${codes.length}")
-    val p = Similarity.searchIvfPqIndex(spark, pathP, queries,
+    val p = IvfStore.search(spark, pathP, queries,
         "qid", "embedding", k = 3, nProbe = 3)
       .select("id_a", "id_b", "cos").as[(Long, Long, Double)].collect()
-    val q = Similarity.searchIvfIndex(spark, pathQ, queries,
+    val q = IvfStore.search(spark, pathQ, queries,
         "qid", "embedding", k = 3, nProbe = 3)
       .select("id_a", "id_b", "cos").as[(Long, Long, Double)].collect()
     // the rescore IS the int8 scorer — common pairs score IDENTICALLY
@@ -282,8 +282,8 @@ class SimilaritySpec extends SparkSpec {
     }
     // a subspace width that does not divide dims is a loud error
     val e = intercept[IllegalArgumentException] {
-      Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding",
-        s"/tmp/graft_ivfpq_bad_$pid", m = 5)
+      IvfStore.build(corpus, "vec_id", "embedding",
+        s"/tmp/graft_ivfpq_bad_$pid", IvfStore.Pq(5))
     }
     assert(e.getMessage.contains("must divide"), e.getMessage)
   }
@@ -366,9 +366,9 @@ class SimilaritySpec extends SparkSpec {
 
     // int8 layout through the persisted index (quantized = default)
     val path = s"/tmp/graft_ivf_fused_${ProcessHandle.current().pid()}"
-    Similarity.buildIvfIndex(corpus, "vec_id", "embedding", path,
+    IvfStore.build(corpus, "vec_id", "embedding", path,
       nCentroids = 8)
-    def search() = collect(Similarity.searchIvfIndex(spark, path, queries,
+    def search() = collect(IvfStore.search(spark, path, queries,
       "qid", "embedding", k = 3, nProbe = 3))
     val fQ = withFused(true)(search())
     val jQ = withFused(false)(search())
@@ -485,10 +485,10 @@ class SimilaritySpec extends SparkSpec {
     val base = emb.filter(col("vec_id") < 80)
     val extra = emb.filter(col("vec_id") >= 80 && col("vec_id") < 100)
     val path = s"/tmp/graft_test_ivfappend_${ProcessHandle.current().pid()}"
-    Similarity.buildIvfIndex(base, "vec_id", "embedding", path)
+    IvfStore.build(base, "vec_id", "embedding", path)
     val nBase = spark.read.parquet(s"$path/lists").count()
     assert(nBase == 80L)
-    Similarity.appendToIvfIndex(spark, path, extra, "vec_id", "embedding")
+    IvfStore.append(spark, path, extra, "vec_id", "embedding")
     val lists = spark.read.parquet(s"$path/lists")
     assert(lists.count() == 100L, "append adds exactly the batch rows")
     assert(lists.filter(col("id_b") < 80).count() == nBase,
@@ -496,7 +496,7 @@ class SimilaritySpec extends SparkSpec {
     // an appended vector queried verbatim must return ITSELF at rank 1
     // — served from the appended files with no rebuild; cos is 1.0 up
     // to the stored int8 codec's reconstruction bound
-    val self = Similarity.searchIvfIndex(spark, path,
+    val self = IvfStore.search(spark, path,
         extra, "vec_id", "embedding", k = 1)
       .select("id_a", "id_b", "cos", "rank")
       .as[(Long, Long, Double, Int)].collect()
@@ -514,19 +514,132 @@ class SimilaritySpec extends SparkSpec {
     val base = emb.filter(col("vec_id") < 80)
     val extra = emb.filter(col("vec_id") >= 80 && col("vec_id") < 100)
     val path = s"/tmp/graft_test_pqappend_${ProcessHandle.current().pid()}"
-    Similarity.buildIvfPqIndex(base, "vec_id", "embedding", path)
-    Similarity.appendToIvfIndex(spark, path, extra, "vec_id", "embedding")
+    IvfStore.build(base, "vec_id", "embedding", path, IvfStore.Pq())
+    IvfStore.append(spark, path, extra, "vec_id", "embedding")
     val lists = spark.read.parquet(s"$path/lists")
     assert(lists.count() == 100L)
     assert(lists.filter(col("_pq").isNull).count() == 0,
       "every appended row carries PQ codes")
-    val self = Similarity.searchIvfPqIndex(spark, path,
+    val self = IvfStore.search(spark, path,
         extra, "vec_id", "embedding", k = 1)
       .select("id_a", "id_b", "cos", "rank")
       .as[(Long, Long, Double, Int)].collect()
     assert(self.length == 20 && self.forall(r => r._1 == r._2 &&
       math.abs(r._3 - 1.0) <= 0.01 && r._4 == 1),
       s"PQ self-search of the appended batch: ${self.take(3).mkString(",")}")
+  }
+
+  /** The sf0.001 embeddings and a perturbed copy of every 7th vector
+    * (disjoint ids) as queries — the shape of the persisted-index specs.
+    */
+  private def embAndQueries() = {
+    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+      .select("vec_id", "embedding")
+    val qs = emb.filter(col("vec_id") % 7 === 0).select(
+      (col("vec_id") + 1000000L).as("qid"),
+      expr("transform(embedding, (x, j) -> CAST(x * (1.0D + 0.01D * " +
+        "CAST(j % 5 - 2 AS DOUBLE)) AS FLOAT))").as("embedding"))
+    (emb, qs)
+  }
+
+  /** Write `text` to a local file, dropping the checksum file the
+    * Hadoop local FileSystem keeps beside what it wrote.
+    */
+  private def writeText(file: String, text: String): Unit = {
+    val p = java.nio.file.Paths.get(file)
+    java.nio.file.Files.createDirectories(p.getParent)
+    java.nio.file.Files.deleteIfExists(
+      p.resolveSibling(s".${p.getFileName}.crc"))
+    java.nio.file.Files.writeString(p, text)
+  }
+
+  test("IvfStore meta: a missing key fails naming it and the file; a meta " +
+       "with no quantized key opens as the Float codec") {
+    val pid = ProcessHandle.current().pid()
+    val bad = s"/tmp/graft_ivf_nol1n_$pid"
+    writeText(s"$bad/meta.json", """{"l2n":1,"seed":42,"quantized":true}""")
+    val e = intercept[IllegalArgumentException](IvfStore.open(spark, bad))
+    assert(e.getMessage.contains("\"l1n\"") &&
+      e.getMessage.contains(s"$bad/meta.json"), e.getMessage)
+
+    // a pre-quantization index: its meta predates the `quantized` key
+    val (emb, qs) = embAndQueries()
+    val path = s"/tmp/graft_ivf_prequant_$pid"
+    IvfStore.build(emb, "vec_id", "embedding", path, IvfStore.Float)
+    def search() = IvfStore.search(spark, path, qs, "qid", "embedding", k = 3)
+      .select("id_a", "id_b", "cos", "rank")
+      .as[(Long, Long, Double, Int)].collect().toSet
+    val before = search()
+    val meta = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$path/meta.json"))
+    writeText(s"$path/meta.json", meta.replace(""","quantized":false""", ""))
+    assert(IvfStore.open(spark, path).layout.codec == IvfStore.Float)
+    assert(search() == before && before.nonEmpty)
+  }
+
+  test("IvfStore pins its on-disk format: meta.json's text, and each " +
+       "table's schema equals the one its codec reads it with") {
+    val (emb, _) = embAndQueries()
+    val pid = ProcessHandle.current().pid()
+    // (codec, nCentroids, meta.json, tables written): 600 cells make
+    // the Float index hierarchical, so `l2` is pinned too
+    val cases = Seq(
+      (IvfStore.Float, 600,
+        """{"l1n":25,"l2n":24,"seed":42,"quantized":false}""",
+        Set("l1", "l2", "lists")),
+      (IvfStore.Int8, -1,
+        """{"l1n":90,"l2n":1,"seed":42,"quantized":true}""",
+        Set("l1", "lists")),
+      (IvfStore.Pq(), -1,
+        """{"l1n":90,"l2n":1,"seed":42,"quantized":true,"layout":"ivfpq","m":16}""",
+        Set("l1", "lists", "codebook")))
+    cases.foreach { case (codec, cells, metaText, tables) =>
+      val path = s"/tmp/graft_ivf_format_${codec}_$pid"
+      IvfStore.build(emb, "vec_id", "embedding", path, codec, nCentroids = cells)
+      assert(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"$path/meta.json")) == metaText)
+      val schemas = IvfStore.schemas(IvfStore.open(spark, path).layout)
+      val written = schemas.keySet.filter(t =>
+        new java.io.File(s"$path/$t").exists())
+      assert(written == tables, s"$codec")
+      written.foreach { t =>
+        assert(spark.read.parquet(s"$path/$t").schema == schemas(t),
+          s"$codec $t: ${spark.read.parquet(s"$path/$t").schema.simpleString}")
+      }
+    }
+    // an int id column is stored as int and read widened to the
+    // schema's bigint: the persisted float search still equals the
+    // in-session one
+    val (_, qs) = embAndQueries()
+    val intIds = emb.select(col("vec_id").cast("int").as("vec_id"),
+      col("embedding"))
+    val path = s"/tmp/graft_ivf_int_ids_$pid"
+    IvfStore.build(intIds, "vec_id", "embedding", path, IvfStore.Float)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b", "cos", "rank")
+        .as[(Long, Long, Double, Int)].collect().toSet
+    val loaded = rows(IvfStore.search(spark, path, qs, "qid", "embedding", k = 3))
+    assert(loaded == rows(Similarity.embedIvfSearch(intIds, qs, "vec_id",
+      "qid", "embedding", k = 3)) && loaded.nonEmpty)
+  }
+
+  test("a second search of a flat int8 index runs a fixed number of jobs") {
+    // pins the job count of a repeated search and the collect of its
+    // result: 18 while `l1` and `lists` were read with schema inference
+    // (a job each) and `l1` was sorted on the cluster before its
+    // collect, 14 since. A change that adds a pass or a
+    // materialization fails here.
+    val (emb, qs) = embAndQueries()
+    val path = s"/tmp/graft_ivf_jobs_${ProcessHandle.current().pid()}"
+    IvfStore.build(emb, "vec_id", "embedding", path)
+    IvfStore.search(spark, path, qs, "qid", "embedding", k = 3).collect()
+    val log = new graft.Bench.StageLog(spark.sparkContext)
+    try {
+      log.clear()
+      IvfStore.search(spark, path, qs, "qid", "embedding", k = 3).collect()
+      log.snapshot()
+      assert(log.jobs == 14L, s"${log.jobs} jobs")
+    } finally spark.sparkContext.removeSparkListener(log)
   }
 
   test("randomProject equals the driver-side exact reference (md5 signs, " +
