@@ -32,7 +32,8 @@ import org.apache.spark.sql.types._
   * loop EXACTLY — same overlapping-adjacency pair counts, same
   * frequency weighting, same (count desc, pair-string asc in UTF-8
   * byte order) tie-break — so the DuckDB lockstep oracle replays
-  * either path verbatim (pinned by the BpeSpec parity gate).
+  * either path verbatim (pinned by the BpeSpec parity gate). Both
+  * loops are [[MergeTrain]]'s, shared with [[WordPiece]].
   *
   * When the vocabulary exceeds `maxDriverWords`, training falls back
   * to the distributed loop: each round is (a) one vocabulary-sized
@@ -122,13 +123,6 @@ object Bpe {
     _ => (0 until 256).map(b => f"$b%02X").toSet,
     (rules, _) => byteVocab(rules))
 
-  private val rulesSchema = StructType(Seq(
-    StructField("rank", IntegerType, nullable = false),
-    StructField("lhs", StringType, nullable = false),
-    StructField("rhs", StringType, nullable = false),
-    StructField("merged", StringType, nullable = false),
-    StructField("n", LongType, nullable = false)))
-
   /** Default driver-side vocabulary cap for the in-memory merge loop
     * (~2M words ≈ a few hundred MB of symbol arrays — comfortably
     * inside any production driver; above it the distributed loop
@@ -136,279 +130,18 @@ object Bpe {
     */
   val DefaultMaxDriverWords: Int = 2000000
 
-  /** Run the training loop: one corpus pass to the word-frequency
-    * table, then `nMerges` rounds — in-memory when the vocabulary
-    * fits `maxDriverWords`, distributed otherwise. Returns the
-    * winning rules and the final `(word, s, n)` table with every
-    * merge applied.
-    */
-  private def train(docs: DataFrame, textCol: String, nMerges: Int,
-                    maxDriverWords: Int,
-                    alphabet: Alphabet): (Seq[Row], DataFrame) = {
-    require(nMerges >= 1, "nMerges must be positive")
-    // one corpus pass → vocabulary-sized (word, freq), as "<w><o><r><d>"
-    val words0 = TokenServe.words(docs, textCol, alphabet.face.guard)
-      .groupBy(col("word")).agg(count(lit(1)).as("n"))
-      .select(col("word"), concat(lit("<"),
-        concat_ws("><", expr(alphabet.segment)), lit(">")).as("s"),
-        col("n"))
-      .localCheckpoint()
-
-    if (words0.count() <= maxDriverWords) trainInMemory(words0, nMerges)
-    else trainDistributed(words0, nMerges)
-  }
-
-  /** Distributed merge loop: one pair-count aggregation + LIMIT-1
-    * argmax + codegen'd replace per round. The fallback for word
-    * tables beyond driver memory — correct at any vocabulary size,
-    * but pays one Spark job per merge.
-    */
-  private def trainDistributed(words0: DataFrame,
-                               nMerges: Int): (Seq[Row], DataFrame) = {
-    var words = words0
-    val rules = Seq.newBuilder[Row]
-    var r = 1
-    var exhausted = false
-    while (r <= nMerges && !exhausted) {
-      // sequence(1, 0) DESCENDS in Spark — words reduced to a single
-      // symbol must short-circuit to an empty pair list
-      val top = words
-        .withColumn("_t", split(trim(col("s"), "<>"), "><"))
-        .select(col("n"), explode(when(size(col("_t")) >= 2, expr(
-          "transform(sequence(1, size(_t) - 1), " +
-            "i -> concat(element_at(_t, i), ' ', element_at(_t, i + 1)))"))
-          .otherwise(array())).as("pr"))
-        .groupBy(col("pr")).agg(sum(col("n")).as("cnt"))
-        .orderBy(col("cnt").desc, col("pr")).limit(1)
-        .collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val pr = top(0).getString(0)
-        val cnt = top(0).getLong(1)
-        val Array(l, rt) = pr.split(' ')
-        rules += Row(r, l, rt, l + rt, cnt)
-        words = words.withColumn("s",
-          replace(col("s"), lit(s"<$l><$rt>"), lit(s"<$l$rt>")))
-        // re-materialize periodically: round r otherwise re-evaluates
-        // all r-1 stacked replaces from the base checkpoint (O(n²)
-        // vocab passes) and the nested-replace expression tree would
-        // grow unboundedly at production merge counts (~32k)
-        if (r % 16 == 0 && r < nMerges) words = words.localCheckpoint()
-        r += 1
-      }
-    }
-    (rules.result(), words)
-  }
-
-  /** UTF-8 byte-order comparison — Spark orders strings by the binary
-    * UTF-8 encoding (UTF8String.compareTo), which differs from Java's
-    * UTF-16 `String.compareTo` for supplementary characters; the
-    * in-memory argmax tie-break must match the distributed
-    * `orderBy(pr)` exactly.
-    */
-  private[llm] def compareUtf8(a: Array[Byte], b: Array[Byte]): Int = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
-  }
-
-  /** Heap entry: pair count at push time + the pair string's UTF-8
-    * bytes for the tie-break. Entries are never updated — a stale
-    * entry (count changed since push) is detected and discarded at
-    * pop time by comparing against the live count (lazy
-    * invalidation).
-    */
-  private final class PairEntry(val cnt: Long, val key: Array[Byte],
-                                val pair: Long)
-
-  /** Classic in-memory BPE merge loop over a collected word table —
-    * the production trainer path. Symbols are interned to ints; each
-    * round pops the live (count desc, pair asc) max off a lazy-
-    * invalidation heap, then updates ONLY the words containing the
-    * winning pair: their old adjacencies are decremented, the greedy
-    * left-to-right merge applied, new adjacencies incremented, and
-    * every changed pair re-pushed at its new count. The occurrence
-    * index (pair → word ids) may hold stale entries — each is
-    * verified against the word's current symbols before processing —
-    * and only ever GAINS entries for pairs involving the freshly
-    * merged symbol, which is sound because a merge can only create
-    * adjacencies involving that symbol.
-    *
-    * Semantics are pinned to [[trainDistributed]]: overlapping
-    * adjacency counts (a word `aaa` holds two `(a,a)` pairs),
-    * frequency weighting, greedy non-overlapping replace, ties on
-    * the UTF-8 byte order of `"lhs rhs"`.
-    */
-  private def trainInMemory(words0: DataFrame,
-                            nMerges: Int): (Seq[Row], DataFrame) = {
-    import scala.collection.mutable
-    val spark = words0.sparkSession
-    val collected = words0.select(col("word"), col("s"), col("n")).collect()
-    val nW = collected.length
-
-    val symIds = mutable.HashMap.empty[String, Int]
-    val syms = mutable.ArrayBuffer.empty[String]
-    def intern(t: String): Int =
-      symIds.getOrElseUpdate(t, { syms += t; syms.length - 1 })
-
-    // parse Spark's own bracketed form rather than re-splitting the
-    // word in the driver: character segmentation stays defined by ONE
-    // engine (split(word, '') on the executor), so both paths and the
-    // oracle agree on what a "character" is
-    val wordSyms = new Array[Array[Int]](nW)
-    val freqs = new Array[Long](nW)
-    var w = 0
-    while (w < nW) {
-      val s = collected(w).getString(1)
-      wordSyms(w) =
-        if (s.length <= 2) Array.emptyIntArray
-        else s.substring(1, s.length - 1).split("><", -1).map(intern)
-      freqs(w) = collected(w).getLong(2)
-      w += 1
-    }
-
-    def pk(l: Int, r: Int): Long = (l.toLong << 32) | (r.toLong & 0xffffffffL)
-    def keyOf(p: Long): Array[Byte] = {
-      val l = syms((p >>> 32).toInt)
-      val r = syms((p & 0xffffffffL).toInt)
-      (l + " " + r).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    }
-    val counts = mutable.HashMap.empty[Long, Long]
-    val occs = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Int]]
-    def addOcc(p: Long, w: Int): Unit =
-      occs.getOrElseUpdate(p, mutable.ArrayBuffer.empty[Int]) += w
-
-    w = 0
-    while (w < nW) {
-      val a = wordSyms(w); val f = freqs(w)
-      val seen = mutable.HashSet.empty[Long]
-      var i = 0
-      while (i < a.length - 1) {
-        val p = pk(a(i), a(i + 1))
-        counts(p) = counts.getOrElse(p, 0L) + f
-        if (seen.add(p)) addOcc(p, w)
-        i += 1
-      }
-      w += 1
-    }
-
-    val cmp = new java.util.Comparator[PairEntry] {
-      override def compare(x: PairEntry, y: PairEntry): Int = {
-        if (x.cnt != y.cnt) java.lang.Long.compare(y.cnt, x.cnt)
-        else compareUtf8(x.key, y.key)
-      }
-    }
-    val heap = new java.util.PriorityQueue[PairEntry](
-      math.max(16, counts.size), cmp)
-    counts.foreach { case (p, c) => heap.add(new PairEntry(c, keyOf(p), p)) }
-
-    val rules = Seq.newBuilder[Row]
-    var rank = 1
-    var done = false
-    while (rank <= nMerges && !done) {
-      var winner: PairEntry = null
-      while (winner == null && !heap.isEmpty) {
-        val e = heap.poll()
-        if (e.cnt > 0 && counts.getOrElse(e.pair, 0L) == e.cnt) winner = e
-      }
-      if (winner == null) done = true
-      else {
-        val p = winner.pair
-        val li = (p >>> 32).toInt; val ri = (p & 0xffffffffL).toInt
-        val ls = syms(li); val rs = syms(ri)
-        val mi = intern(ls + rs)
-        rules += Row(rank, ls, rs, ls + rs, winner.cnt)
-        val changed = mutable.HashSet.empty[Long]
-        val list = occs.remove(p).getOrElse(mutable.ArrayBuffer.empty[Int])
-        val processed = mutable.HashSet.empty[Int]
-        list.foreach { w =>
-          if (processed.add(w)) {
-            val a = wordSyms(w)
-            var hit = false
-            var i = 0
-            while (!hit && i < a.length - 1) {
-              if (a(i) == li && a(i + 1) == ri) hit = true
-              i += 1
-            }
-            if (hit) {
-              val f = freqs(w)
-              i = 0
-              while (i < a.length - 1) {
-                val q = pk(a(i), a(i + 1))
-                val nc = counts(q) - f
-                if (nc == 0L) counts.remove(q) else counts(q) = nc
-                changed += q
-                i += 1
-              }
-              // greedy left-to-right non-overlapping merge (the
-              // replace("<l><r>", "<lr>") semantics)
-              val b = mutable.ArrayBuilder.make[Int]
-              i = 0
-              while (i < a.length) {
-                if (i < a.length - 1 && a(i) == li && a(i + 1) == ri) {
-                  b += mi; i += 2
-                } else { b += a(i); i += 1 }
-              }
-              val na = b.result()
-              wordSyms(w) = na
-              val seen = mutable.HashSet.empty[Long]
-              i = 0
-              while (i < na.length - 1) {
-                val q = pk(na(i), na(i + 1))
-                counts(q) = counts.getOrElse(q, 0L) + f
-                changed += q
-                if ((na(i) == mi || na(i + 1) == mi) && seen.add(q))
-                  addOcc(q, w)
-                i += 1
-              }
-            }
-          }
-        }
-        changed -= p
-        changed.foreach { q =>
-          val c = counts.getOrElse(q, 0L)
-          if (c > 0) heap.add(new PairEntry(c, keyOf(q), q))
-        }
-        rank += 1
-      }
-    }
-
-    val outRows: Seq[Row] = (0 until nW).map { w =>
-      val sb = new java.lang.StringBuilder
-      wordSyms(w).foreach(id => sb.append('<').append(syms(id)).append('>'))
-      Row(collected(w).getString(0), sb.toString, freqs(w))
-    }
-    val wordsSchema = StructType(Seq(
-      StructField("word", StringType, nullable = false),
-      StructField("s", StringType, nullable = false),
-      StructField("n", LongType, nullable = false)))
-    val slices = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, nW / 20000 + 1))
-    val wordsDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(outRows, slices), wordsSchema)
-    (rules.result(), wordsDf)
-  }
-
   /** Train once, share twice: the merge-rule table AND the fully-
     * merged `(word, s, n)` vocabulary as DataFrames (the words frame
     * localCheckpointed so both consumers — and a memoizing caller —
-    * reuse the materialized result instead of re-training).
+    * reuse the materialized result instead of re-training). The
+    * pair score is the count; [[MergeTrain]] runs the loops.
     */
   def trainShared(docs: DataFrame, textCol: String, nMerges: Int,
                   maxDriverWords: Int = DefaultMaxDriverWords,
-                  alphabet: Alphabet = Chars): (DataFrame, DataFrame) = {
-    val spark = docs.sparkSession
-    val (rules, words) =
-      train(docs, textCol, nMerges, maxDriverWords, alphabet)
-    val rulesDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(rules, 1), rulesSchema)
-    (rulesDf, words.localCheckpoint())
-  }
+                  alphabet: Alphabet = Chars): (DataFrame, DataFrame) =
+    MergeTrain.trainShared(docs, textCol, alphabet.face.guard, nMerges,
+      maxDriverWords,
+      MergeTrain.Family(alphabet.segment, MergeTrain.Count, _ + _))
 
   /** Learn the first `nMerges` BPE merges over the corpus's
     * space-tokenized words. Output: `(rank, lhs, rhs, merged, n)` —
@@ -689,33 +422,16 @@ object Bpe {
     */
   def importMerges(spark: SparkSession, path: String,
                    skipVersionHeader: Boolean = false): DataFrame = {
-    // rank = line order is only sound when the directory holds ONE
-    // data file (one file ⇒ one split ⇒ zipWithIndex is the line
-    // number); a multi-part directory from another producer would
-    // silently interleave partitions into wrong ranks — fail instead
-    val mergesDir = new org.apache.hadoop.fs.Path(s"$path/merges")
-    val fs = mergesDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataFiles = fs.listStatus(mergesDir)
-      .map(_.getPath.getName)
-      .filter(n => !n.startsWith("_") && !n.startsWith("."))
-    require(dataFiles.length == 1,
-      s"importMerges expects exactly one data file under $mergesDir " +
-        s"(the single-file export contract); found ${dataFiles.length}: " +
-        dataFiles.sorted.mkString(", "))
-    // one data file ⇒ textFile yields one partition ⇒ a sequential
-    // in-iterator walk sees physical line order: blank lines (a
-    // hand-edited file's trailing newline) are tolerated without
-    // costing a rank, the malformed-rule error names the PHYSICAL
-    // line number (not the post-filter index, which diverges from
-    // what the user sees exactly in the hand-edited case), and the
-    // optional #version header skip is line-1-only by construction
-    val rows = spark.sparkContext.textFile(s"$path/merges", 1)
-      .coalesce(1) // a >128MB file would split; keep the walk sequential
+    // one data file ⇒ a sequential walk in physical line order: blank
+    // lines (a hand-edited file's trailing newline) are tolerated
+    // without costing a rank, the malformed-rule error names the
+    // PHYSICAL line number (not the post-filter index, which diverges
+    // from what the user sees exactly in the hand-edited case), and
+    // the optional #version header skip is line-1-only by construction
+    val rows = TokenServe.artifactLines(spark, s"$path/merges", "importMerges")
       .mapPartitions { it =>
-        var physical = 0 // 1-based physical line number
-        var rank = 0     // dense over actual rules
-        it.flatMap { line =>
-          physical += 1
+        var rank = 0 // dense over actual rules
+        it.flatMap { case (physical, line) =>
           if (line.isEmpty) Iterator.empty
           else if (skipVersionHeader && physical == 1 &&
                    line.startsWith("#version:")) Iterator.empty

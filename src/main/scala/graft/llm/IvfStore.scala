@@ -374,7 +374,7 @@ object IvfStore {
     import spark.implicits._
     val unit = Similarity.normalizedVecs(corpus, idCol, idCol, vecCol)
     val idx = Similarity.trainIvfIndex(unit, idCol, nCentroids, maxIter, seed)
-    val layout = codec.fit(unit, idCol,
+    val layout = codec.fit(unit.df, idCol,
       idx.l1m.headOption.map(_.length).getOrElse(0), seed)
     idx.l1m.toSeq.zipWithIndex
       .map { case (v, i) => (i, v.toSeq) }.toDF("_c1", "_c1v")
@@ -382,7 +382,7 @@ object IvfStore {
     idx.l2.foreach(_.coalesce(1)
       .write.mode("overwrite").parquet(s"$path/l2"))
     layout.save(spark, path)
-    writeLists(layout, idx.lists, unit.count(), path, "overwrite")
+    writeLists(layout, idx.lists, unit.n, path, "overwrite")
     writeMeta(spark, path, IvfMeta(idx.l1n, idx.l2n, idx.seed, layout.codec))
   }
 
@@ -398,8 +398,8 @@ object IvfStore {
              idCol: String, vecCol: String): Unit = {
     val ix = open(spark, path)
     val unit = Similarity.normalizedVecs(newVectors, idCol, idCol, vecCol)
-    writeLists(ix.layout, Similarity.assignCells(ix.index, unit, idCol),
-      unit.count(), path, "append")
+    writeLists(ix.layout, Similarity.assignCells(ix.index, unit.df, idCol),
+      unit.n, path, "append")
   }
 
   /** Search the index at `path` with new query vectors: `(id_a = query
@@ -419,14 +419,15 @@ object IvfStore {
              nProbe: Int = 4): DataFrame = {
     val ix = open(spark, path)
     val qunit = Similarity.normalizedVecs(queries, queryIdCol, queryIdCol, vecCol)
-    val probes = Similarity.probeIvfIndex(ix.index, qunit, queryIdCol, nProbe)
-      .repartition(Similarity.vecPar(spark,
-        qunit.count() * math.max(1, nProbe)), col("id_a"))
+    val probes = Similarity.probeIvfIndex(ix.index, qunit.df, queryIdCol,
+        nProbe)
+      .repartition(Similarity.vecPar(spark, qunit.n * math.max(1, nProbe)),
+        col("id_a"))
       .localCheckpoint()
     val probedCells = probes.select(col("_c1")).distinct()
       .collect().map(_.getInt(0)).sorted
     ix.layout.rank(probes,
-      qunit.select(col(queryIdCol).as("id_a"), col("_unit").as("_ua")),
+      qunit.df.select(col(queryIdCol).as("id_a"), col("_unit").as("_ua")),
       ix.index.lists.filter(
         col("_c1").isin(probedCells.map(Integer.valueOf): _*)), k)
   }

@@ -601,11 +601,11 @@ object Similarity {
   def semDedupPairs(embeddings: DataFrame, idCol: String, vecCol: String,
                     minCos: Double, nCentroids: Int = -1, nProbe: Int = 2,
                     maxIter: Int = 1, seed: Long = 42L): DataFrame = {
-    val unit = normalizedVecs(embeddings, idCol, idCol, vecCol)
-    val idx = trainIvfIndex(unit, idCol, nCentroids, maxIter, seed)
-    // rows-derived spread width (round-15) — the corpus count is a
-    // cheap block scan of the [[normalizedVecs]] checkpoint
-    val par = vecPar(embeddings.sparkSession, unit.count())
+    val vecs = normalizedVecs(embeddings, idCol, idCol, vecCol)
+    val unit = vecs.df
+    val idx = trainIvfIndex(vecs, idCol, nCentroids, maxIter, seed)
+    // rows-derived spread width (round-15)
+    val par = vecPar(embeddings.sparkSession, vecs.n)
     val probes = probeIvfIndex(idx, unit, idCol, nProbe)
     // verify: fused block scan by default (same shape and rationale
     // as `rankIvfPairs` — one expression call per (probe, cell)
@@ -752,9 +752,10 @@ object Similarity {
     * second normalize/repartition/checkpoint.
     */
   private[graft] def normalizedVecs(df: DataFrame, id: String, idCol: String,
-                                    vecCol: String): DataFrame =
+                                    vecCol: String): UnitVecs =
     if (df.columns.contains("_unit"))
-      df.select(col(id).as(idCol), col(vecCol), col("_unit"))
+      new UnitVecs(df.select(col(id).as(idCol), col(vecCol), col("_unit")),
+        None)
     else {
       // ONE codegen'd pass ([[graft.functions.UnitNormalize]]): the
       // previous hoisted-norm + transform-lambda shape was unstable —
@@ -768,8 +769,18 @@ object Similarity {
       val ck = df.select(col(id).as(idCol), col(vecCol),
           graft.functions.VectorExprs.unitNormalize(col(vecCol)).as("_unit"))
         .localCheckpoint()
-      spreadTo(ck, ck.count())
+      val n = ck.count()
+      new UnitVecs(spreadTo(ck, n), Some(n))
     }
+
+  /** A [[normalizedVecs]] frame and its row count, counted at most once:
+    * the normalize pass already counts its checkpoint, so only a
+    * [[prepareUnit]] frame is counted here, and only if asked.
+    */
+  private[graft] final class UnitVecs(val df: DataFrame,
+                                      counted: Option[Long]) {
+    lazy val n: Long = counted.getOrElse(df.count())
+  }
 
   /** Pre-normalize an embedding frame ONCE for use across several ANN
     * calls ([[embedIvfTopK]]/[[embedIvfSearch]]/[[IvfStore.build]]/
@@ -779,7 +790,7 @@ object Similarity {
     * results either way — this is purely input-prep sharing.
     */
   def prepareUnit(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    normalizedVecs(df.select(col(idCol), col(vecCol)), idCol, idCol, vecCol)
+    normalizedVecs(df.select(col(idCol), col(vecCol)), idCol, idCol, vecCol).df
 
   // salted-key helpers for the low-cardinality _c1 joins: _c1 has only
   // √cells distinct values, so the big (per-vector) side is salted and
@@ -803,9 +814,10 @@ object Similarity {
     * build the inverted lists. See [[embedIvfTopK]] for the design
     * rationale; this is the half a persisted index stores.
     */
-  private[graft] def trainIvfIndex(unit: DataFrame, idCol: String,
+  private[graft] def trainIvfIndex(vecs: UnitVecs, idCol: String,
                                    nCentroids: Int, maxIter: Int,
                                    seed: Long): IvfIndex = {
+    val unit = vecs.df
     val par = unit.sparkSession.sparkContext.defaultParallelism
     // Auto cell count (default): candidate volume per query is
     // corpus·nProbe/nCentroids, so FIXED cells make the total verify
@@ -825,7 +837,7 @@ object Similarity {
     val nCells =
       if (nCentroids > 0) nCentroids
       else {
-        val n = unit.count().toDouble
+        val n = vecs.n.toDouble
         math.max(16, math.max(math.ceil(4.0 * math.sqrt(n)).toInt,
           math.min(math.ceil(n / 32.0).toInt, 131072)))
       }
@@ -1213,8 +1225,8 @@ object Similarity {
     val unit = normalizedVecs(embeddings, idCol, idCol, vecCol)
     // the probe side: the corpus itself (self top-k) or a separate
     // query frame (serving search)
-    val qunit = queriesOpt.map(normalizedVecs(_, queryIdCol, idCol, vecCol))
-      .getOrElse(unit)
+    val qunit = queriesOpt.map(normalizedVecs(_, queryIdCol, idCol, vecCol).df)
+      .getOrElse(unit.df)
     val idx = trainIvfIndex(unit, idCol, nCentroids, maxIter, seed)
     rankIvfPairs(probeIvfIndex(idx, qunit, idCol, nProbe), idx.lists, k,
       excludeSelf = queriesOpt.isEmpty)

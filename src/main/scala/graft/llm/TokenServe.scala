@@ -1,6 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TokenExprs
 
@@ -176,4 +177,27 @@ object TokenServe {
       .select(col("doc_id"),
         face.finish(TokenExprs.concatSortedPieces(col("_ps"), face.wordpiece))
           .as("text_decoded"))
+
+  /** The lines of a single-file tokenizer artifact under `dir` (a
+    * merges or vocab file, whose line order is its rank or id order)
+    * as `(line, text)`, `line` the 1-based physical line number. Line
+    * order is only sound when `dir` holds ONE data file (one file ⇒ one
+    * split ⇒ a sequential read); `_`/`.` markers do not count, and any
+    * other count fails, naming `who`. One partition, in file order.
+    */
+  def artifactLines(spark: SparkSession, dir: String,
+                    who: String): RDD[(Int, String)] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dataFiles = fs.listStatus(path)
+      .map(_.getPath.getName)
+      .filter(n => !n.startsWith("_") && !n.startsWith("."))
+    require(dataFiles.length == 1,
+      s"$who expects exactly one data file under $path " +
+        s"(the single-file export contract); found ${dataFiles.length}: " +
+        dataFiles.sorted.mkString(", "))
+    spark.sparkContext.textFile(dir, 1)
+      .coalesce(1) // a >128MB file would split; keep the walk sequential
+      .mapPartitions(_.zipWithIndex.map { case (l, i) => (i + 1, l) })
+  }
 }

@@ -309,7 +309,8 @@ object Unigram {
     val (chars, multi) = lastCounts.partition(x =>
       x._1.codePointCount(0, x._1.length) == 1)
     val keptMulti = multi.sortWith { case ((p1, u1), (p2, u2)) =>
-      if (u1 != u2) u1 > u2 else Bpe.compareUtf8(utf8(p1), utf8(p2)) < 0
+      if (u1 != u2) u1 > u2
+      else MergeTrain.compareUtf8(utf8(p1), utf8(p2)) < 0
     }.take(keepMulti)
     val kept = chars ++ keptMulti
     val qOf = normalize(kept)
@@ -395,7 +396,7 @@ object Unigram {
                     val better =
                       nc < cost(i) || (nc == cost(i) && (nn < np(i) ||
                         (nn == np(i) &&
-                          Bpe.compareUtf8(utf8(ns), utf8(seq(i))) < 0)))
+                          MergeTrain.compareUtf8(utf8(ns), utf8(seq(i))) < 0)))
                     if (better) { cost(i) = nc; np(i) = nn; seq(i) = ns }
                   }
                 }
@@ -469,7 +470,7 @@ object Unigram {
     val lt = (x: (Long, Int, String), y: (Long, Int, String)) =>
       x._1 < y._1 || (x._1 == y._1 && (x._2 < y._2 ||
         (x._2 == y._2 &&
-          Bpe.compareUtf8(utf8(x._3), utf8(y._3)) < 0)))
+          MergeTrain.compareUtf8(utf8(x._3), utf8(y._3)) < 0)))
     val a = cps(w)
     val L = a.length
     if (L > maxChars)
@@ -717,7 +718,8 @@ object Unigram {
       .map(r => (r.getString(0), r.getLong(1)))
     val ranked = rows.sortWith { case ((p1, q1), (p2, q2)) =>
       if (q1 != q2) q1 > q2
-      else Bpe.compareUtf8(p1.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      else MergeTrain.compareUtf8(
+        p1.getBytes(java.nio.charset.StandardCharsets.UTF_8),
         p2.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
     }.zipWithIndex.map { case ((p, _), i) => (p, i + 2) }
     val withSpecials = Seq((Unk, 0), (" ", 1)) ++ ranked
@@ -755,37 +757,23 @@ object Unigram {
     * loud-blank-line contract (ids are positional).
     */
   def importVocabTsv(spark: SparkSession, path: String): DataFrame = {
-    val vocabDir = new org.apache.hadoop.fs.Path(s"$path/unigram.vocab")
-    val fs = vocabDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataFiles = fs.listStatus(vocabDir)
-      .map(_.getPath.getName)
-      .filter(n => !n.startsWith("_") && !n.startsWith("."))
-    require(dataFiles.length == 1,
-      s"importVocabTsv expects exactly one data file under $vocabDir " +
-        s"(the single-file export contract); found ${dataFiles.length}: " +
-        dataFiles.sorted.mkString(", "))
-    val rows = spark.sparkContext.textFile(s"$path/unigram.vocab", 1)
-      .coalesce(1)
-      .mapPartitions { it =>
-        var line = 0 // 0-based = the token id
-        it.map { l =>
-          if (l.isEmpty) throw new IllegalArgumentException(
-            s"importVocabTsv: blank line ${line + 1} — ids are " +
-              "positional, a dropped line would shift every id after it")
-          val tab = l.lastIndexOf('\t')
-          if (tab < 0) throw new IllegalArgumentException(
-            s"importVocabTsv: malformed line ${line + 1} " +
-              s"(no piece<TAB>q): '$l'")
-          val q = try l.substring(tab + 1).toLong catch {
-            case _: NumberFormatException =>
-              throw new IllegalArgumentException(
-                s"importVocabTsv: non-integer q at line ${line + 1}: " +
-                  s"'${l.substring(tab + 1)}'")
-          }
-          val r = org.apache.spark.sql.Row(l.substring(0, tab), line, q)
-          line += 1
-          r
+    val rows = TokenServe.artifactLines(spark, s"$path/unigram.vocab",
+        "importVocabTsv")
+      .map { case (line, l) =>
+        if (l.isEmpty) throw new IllegalArgumentException(
+          s"importVocabTsv: blank line $line — ids are " +
+            "positional, a dropped line would shift every id after it")
+        val tab = l.lastIndexOf('\t')
+        if (tab < 0) throw new IllegalArgumentException(
+          s"importVocabTsv: malformed line $line " +
+            s"(no piece<TAB>q): '$l'")
+        val q = try l.substring(tab + 1).toLong catch {
+          case _: NumberFormatException =>
+            throw new IllegalArgumentException(
+              s"importVocabTsv: non-integer q at line $line: " +
+                s"'${l.substring(tab + 1)}'")
         }
+        org.apache.spark.sql.Row(l.substring(0, tab), line - 1, q)
       }
     spark.createDataFrame(rows, StructType(Seq(
       StructField("piece", StringType, nullable = false),
@@ -891,22 +879,13 @@ object Unigram {
     * row is rejected, never silently re-quantized).
     */
   def importVocabSp(spark: SparkSession, path: String): DataFrame = {
-    val vocabDir = new org.apache.hadoop.fs.Path(s"$path/unigram.sp.vocab")
-    val fs = vocabDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataFiles = fs.listStatus(vocabDir)
-      .map(_.getPath.getName)
-      .filter(n => !n.startsWith("_") && !n.startsWith("."))
-    require(dataFiles.length == 1,
-      s"importVocabSp expects exactly one data file under $vocabDir " +
-        s"(the single-file export contract); found ${dataFiles.length}: " +
-        dataFiles.sorted.mkString(", "))
-    val rows = spark.sparkContext.textFile(s"$path/unigram.sp.vocab", 1)
-      .coalesce(1)
+    val rows = TokenServe.artifactLines(spark, s"$path/unigram.sp.vocab",
+        "importVocabSp")
       .mapPartitions { it =>
         // one data file ⇒ one partition ⇒ the iterator IS line order;
         // a vocabulary is bounded, so materializing it here is the
         // same contract-bounded footprint as the export
-        val lines = it.toArray
+        val lines = it.map(_._2).toArray
         def parse(i: Int): (String, String) = {
           val l = lines(i)
           if (l.isEmpty) throw new IllegalArgumentException(

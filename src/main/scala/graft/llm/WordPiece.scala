@@ -43,11 +43,12 @@ import org.apache.spark.sql.types._
   * the engine remains self-consistent — only oracle bit-parity needs
   * the bound, and oracles run at test scale.)
   *
-  * Scale design — identical economics to [[Bpe]]: ONE corpus pass to
-  * the word-frequency table; each merge round is (a) one
-  * vocabulary-sized pair aggregation, (b) one vocabulary-sized symbol
-  * aggregation (the score's denominators), (c) a LIMIT-1 argmax, (d) a
-  * narrow codegen'd replace. Serving encodes each DISTINCT word once
+  * Scale design — identical economics to [[Bpe]], through the same
+  * [[MergeTrain]]: ONE corpus pass to the word-frequency table; each
+  * distributed merge round is (a) one vocabulary-sized pair
+  * aggregation, (b) one vocabulary-sized symbol aggregation (the
+  * score's denominators), (c) a LIMIT-1 argmax, (d) a narrow codegen'd
+  * replace. Serving encodes each DISTINCT word once
   * (vocabulary-sized `mapPartitions`, pieces broadcast) and the corpus
   * word stream equi-joins the result.
   */
@@ -64,309 +65,30 @@ object WordPiece {
     col("unk"), nTok = "n_wp", nUnk = "n_unk", wordpiece = true,
     finish = ltrim)
 
-  private val rulesSchema = StructType(Seq(
-    StructField("rank", IntegerType, nullable = false),
-    StructField("lhs", StringType, nullable = false),
-    StructField("rhs", StringType, nullable = false),
-    StructField("merged", StringType, nullable = false),
-    StructField("n", LongType, nullable = false)))
-
-  /** Position-aware bracketed segmentation of the `word` column:
-    * first char bare, continuations `##`-prefixed.
-    */
-  private val wpSegExpr =
-    "concat('<', element_at(_t, 1), '>', " +
-      "IF(size(_t) > 1, concat('<##', " +
-      "array_join(slice(_t, 2, size(_t) - 1), '><##'), '>'), ''))"
-
   /** The raw text of a (possibly `##`-prefixed) piece. */
   private def raw(piece: String): String =
     if (piece.startsWith("##")) piece.substring(2) else piece
 
-  /** One corpus pass → the position-aware `(word, s, n)` table. */
-  private def words0(docs: DataFrame, textCol: String): DataFrame =
-    TokenServe.words(docs, textCol, face.guard)
-      .groupBy(col("word")).agg(count(lit(1)).as("n"))
-      .withColumn("_t", expr("filter(split(word, ''), x -> x <> '')"))
-      .select(col("word"), expr(wpSegExpr).as("s"), col("n"))
-      .localCheckpoint()
-
-  /** Distributed WordPiece merge loop: per round one pair-count
-    * aggregation, one symbol-count aggregation, a LIMIT-1 score
-    * argmax, a codegen'd replace — every frame vocabulary-sized.
+  /** The merge family: position-aware base symbols (first char bare,
+    * continuations `##`-prefixed — the [[pieceSet]] alphabet), the
+    * likelihood score, and `##` inheritance from the left piece.
     */
-  private def trainDistributed(words0: DataFrame,
-                               nMerges: Int): (Seq[Row], DataFrame) = {
-    var words = words0
-    val rules = Seq.newBuilder[Row]
-    var r = 1
-    var exhausted = false
-    while (r <= nMerges && !exhausted) {
-      val syms = words
-        .withColumn("_t", split(trim(col("s"), "<>"), "><"))
-        .select(col("n"), explode(col("_t")).as("sym"))
-        .groupBy(col("sym")).agg(sum(col("n")).as("sc"))
-      val pairs = words
-        .withColumn("_t", split(trim(col("s"), "<>"), "><"))
-        .select(col("n"), explode(when(size(col("_t")) >= 2, expr(
-          "transform(sequence(1, size(_t) - 1), " +
-            "i -> concat(element_at(_t, i), ' ', element_at(_t, i + 1)))"))
-          .otherwise(array())).as("pr"))
-        .groupBy(col("pr")).agg(sum(col("n")).as("cnt"))
-        .withColumn("_l", split(col("pr"), " ").getItem(0))
-        .withColumn("_r", split(col("pr"), " ").getItem(1))
-      val top = pairs
-        .join(syms.toDF("_l", "_nl"), Seq("_l"))
-        .join(syms.toDF("_r", "_nr"), Seq("_r"))
-        .withColumn("score", col("cnt").cast("double") /
-          (col("_nl").cast("double") * col("_nr").cast("double")))
-        .orderBy(col("score").desc, col("pr")).limit(1)
-        .select(col("pr"), col("cnt")).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val pr = top(0).getString(0)
-        val cnt = top(0).getLong(1)
-        val Array(l, rt) = pr.split(' ')
-        val merged = l + raw(rt)
-        rules += Row(r, l, rt, merged, cnt)
-        words = words.withColumn("s",
-          replace(col("s"), lit(s"<$l><$rt>"), lit(s"<$merged>")))
-        if (r % 16 == 0 && r < nMerges) words = words.localCheckpoint()
-        r += 1
-      }
-    }
-    (rules.result(), words)
-  }
-
-  /** Heap entry for the in-memory loop: the score AND the exact
-    * integer state it was computed from — an entry is live iff the
-    * pair count and BOTH endpoint symbol counts still match (lazy
-    * invalidation; unlike BPE, a WordPiece score can also RISE when a
-    * denominator symbol is consumed, so affected pairs are re-pushed
-    * eagerly whenever an endpoint's count changes — see the merge
-    * loop).
-    */
-  private final class WpEntry(val score: Double, val cnt: Long,
-                              val nl: Long, val nr: Long,
-                              val key: Array[Byte], val pair: Long)
-
-  /** In-memory WordPiece merge loop — the production trainer path,
-    * mirroring [[Bpe]]'s hybrid: the vocabulary-sized word table is
-    * collected once and the `nMerges` rounds run as exact incremental
-    * updates (pair counts, symbol counts, per-endpoint pair index, a
-    * lazy-invalidation max-heap on the likelihood score) — ~32k merges
-    * without 32k Spark jobs. Reproduces [[trainDistributed]] EXACTLY:
-    * same overlapping-adjacency pair counts, same weighted symbol
-    * counts, the same `cnt.toDouble / (nl.toDouble * nr.toDouble)`
-    * IEEE expression, ties on the UTF-8 byte order of `"lhs rhs"`
-    * (WordPieceSpec pins the path parity).
-    */
-  private def trainInMemory(words0df: DataFrame,
-                            nMerges: Int): (Seq[Row], DataFrame) = {
-    import scala.collection.mutable
-    val spark = words0df.sparkSession
-    val collected = words0df.select(col("word"), col("s"), col("n")).collect()
-    val nW = collected.length
-
-    val symIds = mutable.HashMap.empty[String, Int]
-    val syms = mutable.ArrayBuffer.empty[String]
-    def intern(t: String): Int =
-      symIds.getOrElseUpdate(t, { syms += t; syms.length - 1 })
-    def rawOf(id: Int): String = raw(syms(id))
-
-    val wordSyms = new Array[Array[Int]](nW)
-    val freqs = new Array[Long](nW)
-    var w = 0
-    while (w < nW) {
-      val s = collected(w).getString(1)
-      wordSyms(w) =
-        if (s.length <= 2) Array.emptyIntArray
-        else s.substring(1, s.length - 1).split("><", -1).map(intern)
-      freqs(w) = collected(w).getLong(2)
-      w += 1
-    }
-
-    def pk(l: Int, r: Int): Long = (l.toLong << 32) | (r.toLong & 0xffffffffL)
-    def keyOf(p: Long): Array[Byte] = {
-      val l = syms((p >>> 32).toInt)
-      val r = syms((p & 0xffffffffL).toInt)
-      (l + " " + r).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    }
-    val counts = mutable.HashMap.empty[Long, Long]
-    val symCounts = mutable.HashMap.empty[Int, Long]
-    val occs = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Int]]
-    // every pair (live or dead) that ever contained the symbol — the
-    // rescore index for denominator changes; dead entries are skipped
-    // at re-push time by the live-count check
-    val byEndpoint = mutable.HashMap.empty[Int, mutable.HashSet[Long]]
-    def addOcc(p: Long, w: Int): Unit =
-      occs.getOrElseUpdate(p, mutable.ArrayBuffer.empty[Int]) += w
-    def indexPair(p: Long): Unit = {
-      byEndpoint.getOrElseUpdate((p >>> 32).toInt,
-        mutable.HashSet.empty[Long]) += p
-      byEndpoint.getOrElseUpdate((p & 0xffffffffL).toInt,
-        mutable.HashSet.empty[Long]) += p
-    }
-
-    w = 0
-    while (w < nW) {
-      val a = wordSyms(w); val f = freqs(w)
-      val seen = mutable.HashSet.empty[Long]
-      var i = 0
-      while (i < a.length) {
-        symCounts(a(i)) = symCounts.getOrElse(a(i), 0L) + f
-        if (i < a.length - 1) {
-          val p = pk(a(i), a(i + 1))
-          counts(p) = counts.getOrElse(p, 0L) + f
-          if (seen.add(p)) { addOcc(p, w); indexPair(p) }
-        }
-        i += 1
-      }
-      w += 1
-    }
-
-    def scoreOf(p: Long): (Double, Long, Long, Long) = {
-      val c = counts.getOrElse(p, 0L)
-      val nl = symCounts.getOrElse((p >>> 32).toInt, 0L)
-      val nr = symCounts.getOrElse((p & 0xffffffffL).toInt, 0L)
-      (c.toDouble / (nl.toDouble * nr.toDouble), c, nl, nr)
-    }
-    val cmp = new java.util.Comparator[WpEntry] {
-      override def compare(x: WpEntry, y: WpEntry): Int = {
-        val d = java.lang.Double.compare(y.score, x.score)
-        if (d != 0) d else Bpe.compareUtf8(x.key, y.key)
-      }
-    }
-    val heap = new java.util.PriorityQueue[WpEntry](
-      math.max(16, counts.size), cmp)
-    def push(p: Long): Unit = {
-      val (s, c, nl, nr) = scoreOf(p)
-      if (c > 0) heap.add(new WpEntry(s, c, nl, nr, keyOf(p), p))
-    }
-    counts.keysIterator.foreach(push)
-
-    val rules = Seq.newBuilder[Row]
-    var rank = 1
-    var done = false
-    while (rank <= nMerges && !done) {
-      var winner: WpEntry = null
-      while (winner == null && !heap.isEmpty) {
-        val e = heap.poll()
-        val live = counts.getOrElse(e.pair, 0L) == e.cnt && e.cnt > 0 &&
-          symCounts.getOrElse((e.pair >>> 32).toInt, 0L) == e.nl &&
-          symCounts.getOrElse((e.pair & 0xffffffffL).toInt, 0L) == e.nr
-        if (live) winner = e
-      }
-      if (winner == null) done = true
-      else {
-        val p = winner.pair
-        val li = (p >>> 32).toInt; val ri = (p & 0xffffffffL).toInt
-        val ls = syms(li)
-        val mergedStr = ls + rawOf(ri)
-        val mi = intern(mergedStr)
-        rules += Row(rank, ls, syms(ri), mergedStr, winner.cnt)
-        val changedPairs = mutable.HashSet.empty[Long]
-        val list = occs.remove(p).getOrElse(mutable.ArrayBuffer.empty[Int])
-        val processed = mutable.HashSet.empty[Int]
-        list.foreach { w =>
-          if (processed.add(w)) {
-            val a = wordSyms(w)
-            var hit = false
-            var i = 0
-            while (!hit && i < a.length - 1) {
-              if (a(i) == li && a(i + 1) == ri) hit = true
-              i += 1
-            }
-            if (hit) {
-              val f = freqs(w)
-              i = 0
-              while (i < a.length) {
-                val sc = symCounts(a(i)) - f
-                if (sc == 0L) symCounts.remove(a(i)) else symCounts(a(i)) = sc
-                if (i < a.length - 1) {
-                  val q = pk(a(i), a(i + 1))
-                  val nc = counts(q) - f
-                  if (nc == 0L) counts.remove(q) else counts(q) = nc
-                  changedPairs += q
-                }
-                i += 1
-              }
-              val b = mutable.ArrayBuilder.make[Int]
-              i = 0
-              while (i < a.length) {
-                if (i < a.length - 1 && a(i) == li && a(i + 1) == ri) {
-                  b += mi; i += 2
-                } else { b += a(i); i += 1 }
-              }
-              val na = b.result()
-              wordSyms(w) = na
-              val seen = mutable.HashSet.empty[Long]
-              i = 0
-              while (i < na.length) {
-                symCounts(na(i)) = symCounts.getOrElse(na(i), 0L) + f
-                if (i < na.length - 1) {
-                  val q = pk(na(i), na(i + 1))
-                  counts(q) = counts.getOrElse(q, 0L) + f
-                  changedPairs += q
-                  if ((na(i) == mi || na(i + 1) == mi) && seen.add(q)) {
-                    addOcc(q, w); indexPair(q)
-                  }
-                }
-                i += 1
-              }
-            }
-          }
-        }
-        // re-push everything whose SCORE may have moved: pairs with a
-        // changed count, plus every pair touching a symbol whose count
-        // changed (l, r were consumed; m was created) — a WordPiece
-        // score RISES when its denominator shrinks, so stale-lower
-        // heap entries must be superseded eagerly
-        changedPairs -= p
-        val affected = mutable.HashSet.empty[Long]
-        affected ++= changedPairs
-        Seq(li, ri, mi).foreach { s =>
-          byEndpoint.get(s).foreach(affected ++= _) }
-        affected.foreach { q => if (counts.getOrElse(q, 0L) > 0) push(q) }
-        rank += 1
-      }
-    }
-
-    val outRows: Seq[Row] = (0 until nW).map { w =>
-      val sb = new java.lang.StringBuilder
-      wordSyms(w).foreach(id => sb.append('<').append(syms(id)).append('>'))
-      Row(collected(w).getString(0), sb.toString, freqs(w))
-    }
-    val wordsSchema = StructType(Seq(
-      StructField("word", StringType, nullable = false),
-      StructField("s", StringType, nullable = false),
-      StructField("n", LongType, nullable = false)))
-    val slices = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, nW / 20000 + 1))
-    val wordsDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(outRows, slices), wordsSchema)
-    (rules.result(), wordsDf)
-  }
+  private val merges = MergeTrain.Family(
+    "transform(filter(split(word, ''), x -> x <> ''), " +
+      "(c, i) -> IF(i = 0, c, concat('##', c)))",
+    MergeTrain.Likelihood, (l, r) => l + raw(r))
 
   /** Train `nMerges` WordPiece merges; returns the rule table and the
     * fully-merged word table (both reusable, [[Bpe.trainShared]]
-    * shape). Hybrid like the BPE trainer: in-memory when the
-    * vocabulary fits `maxDriverWords`, the distributed per-round loop
-    * otherwise.
+    * shape). Hybrid like the BPE trainer ([[MergeTrain]]): in-memory
+    * when the vocabulary fits `maxDriverWords`, the distributed
+    * per-round loop otherwise.
     */
   def trainShared(docs: DataFrame, textCol: String, nMerges: Int,
                   maxDriverWords: Int = Bpe.DefaultMaxDriverWords)
-      : (DataFrame, DataFrame) = {
-    require(nMerges >= 1, "nMerges must be positive")
-    val spark = docs.sparkSession
-    val w0 = words0(docs, textCol)
-    val (rules, words) =
-      if (w0.count() <= maxDriverWords) trainInMemory(w0, nMerges)
-      else trainDistributed(w0, nMerges)
-    val rulesDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(rules, 1), rulesSchema)
-    (rulesDf, words.localCheckpoint())
-  }
+      : (DataFrame, DataFrame) =
+    MergeTrain.trainShared(docs, textCol, face.guard, nMerges,
+      maxDriverWords, merges)
 
   def learnMerges(docs: DataFrame, textCol: String, nMerges: Int): DataFrame =
     trainShared(docs, textCol, nMerges)._1
@@ -554,27 +276,13 @@ object WordPiece {
     * it — the exact failure the loud message exists to prevent.
     */
   def importVocabTxt(spark: SparkSession, path: String): DataFrame = {
-    val vocabDir = new org.apache.hadoop.fs.Path(s"$path/vocab.txt")
-    val fs = vocabDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataFiles = fs.listStatus(vocabDir)
-      .map(_.getPath.getName)
-      .filter(n => !n.startsWith("_") && !n.startsWith("."))
-    require(dataFiles.length == 1,
-      s"importVocabTxt expects exactly one data file under $vocabDir " +
-        s"(the single-file export contract); found ${dataFiles.length}: " +
-        dataFiles.sorted.mkString(", "))
-    val rows = spark.sparkContext.textFile(s"$path/vocab.txt", 1)
-      .coalesce(1)
-      .mapPartitions { it =>
-        var line = 0 // 0-based = the token id
-        it.map { piece =>
-          if (piece.isEmpty) throw new IllegalArgumentException(
-            s"importVocabTxt: blank line ${line + 1} — ids are " +
-              "positional, a dropped line would shift every id after it")
-          val r = Row(piece, line)
-          line += 1
-          r
-        }
+    val rows = TokenServe.artifactLines(spark, s"$path/vocab.txt",
+        "importVocabTxt")
+      .map { case (line, piece) =>
+        if (piece.isEmpty) throw new IllegalArgumentException(
+          s"importVocabTxt: blank line $line — ids are " +
+            "positional, a dropped line would shift every id after it")
+        Row(piece, line - 1) // line 1 is id 0
       }
     spark.createDataFrame(rows, StructType(Seq(
       StructField("piece", StringType, nullable = false),

@@ -104,8 +104,11 @@ object Graph {
   private final case class PrState(e: DataFrame, nodes: DataFrame,
                                    base: Double, damping: Double,
                                    nNodes: Long) {
-    /** One synchronous PageRank round over `ranks(node, r)`. */
-    def step(ranks: DataFrame): DataFrame = {
+    /** Each edge's share of its source's rank, keyed by the edge's
+      * destination: `(node, c)` over `ranks(node, r)`, with `c` in
+      * exact pico units (sum it, then [[picoToDouble]]).
+      */
+    def inbound(ranks: DataFrame): DataFrame = {
       // node-sized rank side: BROADCAST when the exact node count
       // fits (no per-round edge exchange — see [[broadcastNodeLimit]]),
       // else SHUFFLE_HASH (build the hash on ranks, stream the edge
@@ -117,15 +120,17 @@ object Graph {
       val joined =
         if (nNodes <= broadcastNodeLimit) e.join(broadcast(rankSide), "src")
         else e.join(rankSide.hint("shuffle_hash"), "src")
-      val contrib = joined
-        .select(col("dst").as("node"),
-          // scalar double ops in a fixed order, then rounded: the
-          // only nondeterministic step (the SUM) runs as an exact
-          // pico-unit long (see [[picoOf]] — same bits as the
-          // DECIMAL(38,12) sum, half the shuffle bytes, primitive
-          // codegen arithmetic)
-          picoOf(col("r") * col("w") / col("wout")).as("c"))
-      val next = contrib.groupBy(col("node"))
+      joined.select(col("dst").as("node"),
+        // scalar double ops in a fixed order, then rounded: the only
+        // nondeterministic step (the SUM) runs as an exact pico-unit
+        // long (see [[picoOf]] — same bits as the DECIMAL(38,12) sum,
+        // half the shuffle bytes, primitive codegen arithmetic)
+        picoOf(col("r") * col("w") / col("wout")).as("c"))
+    }
+
+    /** One synchronous PageRank round over `ranks(node, r)`. */
+    def step(ranks: DataFrame): DataFrame = {
+      val next = inbound(ranks).groupBy(col("node"))
         .agg(round(lit(base) +
           lit(damping) * picoToDouble(sum(col("c"))), 12).as("r"))
       nodes.join(next, Seq("node"), "left")
@@ -241,17 +246,7 @@ object Graph {
       .localCheckpoint()
     var ranks = tele.select(col("node"), col("t").as("r"))
     for (i <- 1 to iters) {
-      // same round shape as PrState.step: wout rides the edge row
-      // (one join), rank side broadcast when the exact node count
-      // fits, else shuffle-hash streamed over the cached edges
-      val rankSide = ranks.withColumnRenamed("node", "src")
-      val joined =
-        if (st.nNodes <= broadcastNodeLimit)
-          st.e.join(broadcast(rankSide), "src")
-        else st.e.join(rankSide.hint("shuffle_hash"), "src")
-      val m = joined
-        .select(col("dst").as("node"),
-          picoOf(col("r") * col("w") / col("wout")).as("c"))
+      val m = st.inbound(ranks)
         .groupBy(col("node"))
         .agg(picoToDouble(sum(col("c"))).as("_m"))
       ranks = tele.join(m, Seq("node"), "left")

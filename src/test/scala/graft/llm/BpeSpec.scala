@@ -138,19 +138,33 @@ class BpeSpec extends SparkSpec {
     // sf0.001 documents: real corpus with ties, runs, and shared
     // prefixes — the parity gate for the production in-memory path
     val docs = graft.sources.Tables.load(spark, "/root/testdata/sf0.001", "documents")
+    Seq(Bpe.Chars, Bpe.Bytes).foreach { alphabet =>
+      val mr = loopsAgree(docs, 12, alphabet)
+      assert(mr.size == 12)
+      // winner counts are non-increasing: a merge's new pairs are
+      // bounded by the winning count, so a violation means the heap
+      // served stale
+      assert(mr.map(_._5) == mr.map(_._5).sorted.reverse)
+    }
+  }
+
+  /** The rules and merged words of both trainer loops, which must
+    * agree rule for rule and row for row.
+    */
+  private def loopsAgree(docs: org.apache.spark.sql.DataFrame, nMerges: Int,
+                         alphabet: Bpe.Alphabet)
+      : Seq[(Int, String, String, String, Long)] = {
     // maxDriverWords = 0 forces the distributed fallback
-    val dist = Bpe.trainShared(docs, "text", nMerges = 12, maxDriverWords = 0)
-    val mem = Bpe.trainShared(docs, "text", nMerges = 12)
+    val dist = Bpe.trainShared(docs, "text", nMerges, maxDriverWords = 0,
+      alphabet = alphabet)
+    val mem = Bpe.trainShared(docs, "text", nMerges, alphabet = alphabet)
     val dr = dist._1.as[(Int, String, String, String, Long)].collect().sortBy(_._1)
     val mr = mem._1.as[(Int, String, String, String, Long)].collect().sortBy(_._1)
     assert(mr.toSeq === dr.toSeq)
-    // the fully-merged word tables agree row-for-row
     val dw = dist._2.as[(String, String, Long)].collect().sortBy(_._1)
     val mw = mem._2.as[(String, String, Long)].collect().sortBy(_._1)
     assert(mw.toSeq === dw.toSeq)
-    // winner counts are non-increasing: a merge's new pairs are bounded
-    // by the winning count, so a violation means the heap served stale
-    assert(mr.map(_._5).toSeq == mr.map(_._5).toSeq.sorted.reverse)
+    mr.toSeq
   }
 
   test("in-memory trainer handles merge-path symbol collisions (a+bc vs ab+c)") {
@@ -165,6 +179,18 @@ class BpeSpec extends SparkSpec {
     val mem = Bpe.learnMerges(docs, "text", nMerges = 8)
       .as[(Int, String, String, String, Long)].collect().sortBy(_._1)
     assert(mem.toSeq === dist.toSeq)
+  }
+
+  test("a count score keeps a pair whose count held while its " +
+       "endpoint's symbol count fell") {
+    // ab×3 ac×2: (a,b) wins at 3, using up three of a's five
+    // occurrences; (a,c) still counts 2 and wins next. A heap entry
+    // that also checked a's symbol count would be stale after round 1,
+    // and a count score re-pushes only pairs whose own count moved, so
+    // (a,c) would never merge
+    val docs = Seq((1L, "ab ab ab ac ac")).toDF("doc_id", "text")
+    assert(loopsAgree(docs, 4, Bpe.Chars) ===
+      Seq((1, "a", "b", "ab", 3L), (2, "a", "c", "ac", 2L)))
   }
 
   test("encodeTokenCountsWith segments UNSEEN words via learned merges; " +

@@ -397,6 +397,38 @@ class UnigramSpec extends SparkSpec {
       "does not render from any integer probability")
   }
 
+  test("both vocab importers read exactly one data file and skip " +
+       "marker files") {
+    val base = s"/tmp/graft_test_univocabfiles_${ProcessHandle.current().pid()}"
+    def write(tag: String, file: String, files: Map[String, String]): String = {
+      val d = new java.io.File(s"$base/$tag/$file"); d.mkdirs()
+      files.foreach { case (name, content) =>
+        java.nio.file.Files.write(new java.io.File(d, name).toPath,
+          content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
+      s"$base/$tag"
+    }
+    val sp = "<unk>\t0\n▁a\t" + Unigram.spScore(500000000L) + "\na\t" +
+      Unigram.spScore(500000000L) + "\n"
+    val importers =
+      Seq[(String, String, String => org.apache.spark.sql.DataFrame)](
+        ("unigram.vocab", "[UNK]\t0\na\t7\n",
+          p => Unigram.importVocabTsv(spark, p)),
+        ("unigram.sp.vocab", sp, p => Unigram.importVocabSp(spark, p)))
+    importers.foreach { case (file, content, read) =>
+      // two data files: positional ids are unsound → refuse
+      val multi = write(s"multi_$file", file,
+        Map("part-0" -> content, "part-1" -> content))
+      val e = intercept[IllegalArgumentException](read(multi))
+      assert(e.getMessage.contains("exactly one data file"), e.getMessage)
+      // _SUCCESS/dot markers do not count as data files
+      val markers = write(s"markers_$file", file,
+        Map("part-0" -> content, "_SUCCESS" -> "", ".crc" -> "x"))
+      val n = read(markers).count()
+      assert(n == (if (file == "unigram.vocab") 2L else 1L), s"$file: $n rows")
+    }
+  }
+
   test("training is a pure function of the corpus: identical runs, " +
        "identical models (integer cross-word aggregation)") {
     val docs = graft.sources.Tables

@@ -202,6 +202,23 @@ class WordPieceSpec extends SparkSpec {
     assert(fw == sw, "merged word tables diverge")
   }
 
+  test("a merge that uses up an endpoint symbol re-scores every pair " +
+       "touching it, in both trainer loops") {
+    // ab×3 ac×2 → a:5 ##b:3 ##c:2, and (a,##b) = 3/15 ties (a,##c) =
+    // 2/10; "a ##b" sorts first and wins. That uses up three of a's
+    // five occurrences: (a,##c) still counts 2 but its score rises to
+    // 2/(2·2), so it wins next. The in-memory loop must re-push it, as
+    // its count never changed
+    val docs = Seq((1L, "ab ab ab ac ac")).toDF("doc_id", "text")
+    def rules(maxDriverWords: Int) =
+      WordPiece.trainShared(docs, "text", nMerges = 4, maxDriverWords)._1
+        .select("rank", "lhs", "rhs", "merged", "n")
+        .as[(Int, String, String, String, Long)].collect().sortBy(_._1).toSeq
+    val want = Seq((1, "a", "##b", "ab", 3L), (2, "a", "##c", "ac", 2L))
+    assert(rules(maxDriverWords = 0) == want)
+    assert(rules(Bpe.DefaultMaxDriverWords) == want)
+  }
+
   test("pieceVocab: duplicate merge paths renumber DENSELY, so the " +
        "positional vocab.txt roundtrip survives min-id dedup") {
     // hand-built rules with two ranks producing the same merged piece
